@@ -118,9 +118,10 @@ def run_headline(spark) -> dict[str, float]:
     q["_pip_pages_rows"] = cnt
     q["_pip_pages_per_sec"] = N_PAGES / sec
 
-    # 2. fused single-Arrow-pass strategy on the same input (comparison)
-    q["pip_pages_communes_fused"] = best_of(
-        lambda: pip_join(pts, idx, include_properties=False, strategy="fused").count()
+    # 2. the all-JVM fallback strategy on the same input (comparison with
+    # the fused default)
+    q["pip_pages_communes_jvm"] = best_of(
+        lambda: pip_join(pts, idx, include_properties=False, strategy="jvm").count()
     )
 
     # 3. fine-grained island layer (the reference fixture, levels 10-16)
@@ -285,7 +286,7 @@ def _scaling_run(cores: int) -> float:
             src_pages.synth_pages(spark, N_SCALING, 64)
         ).repartition(64).write.mode("overwrite").parquet(SCALING_PQ)
     pts = spark.read.parquet(SCALING_PQ)
-    job = pip_join(pts, idx, include_properties=False)
+    job = pip_join(pts, idx, include_properties=False, strategy="jvm")
     job.count()  # warm: JIT, python workers, broadcasts
     runs = [timed(job.count)[0] for _ in range(3)]
     spark.stop()

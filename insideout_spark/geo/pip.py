@@ -14,12 +14,21 @@ index.go:57-81). Semantics:
   testing, matching reference tools.go:145-148.
 
 Everything is vectorized over numpy arrays: `points_in_ring` broadcasts
-N points against M edges in one shot.
+N points against one ring's M edges; `points_in_rings` tests N points
+each against its own ring of a flat `ring_store`, in one pass over all
+(point, edge) pairs. Both work in blocks that keep every temporary under
+RAY_CAST_MAX_ELEMS elements.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+# element budget of one block of (point, edge) pairs in the ray cast:
+# each float64 temporary of a block stays under 512 KiB, whatever the
+# ring size. Cache-sized: points_in_rings ran ~2.5x faster with 2^16
+# than with 2^21 blocks (40k points over 3k rings, 4-core VM)
+RAY_CAST_MAX_ELEMS = 1 << 16
 
 
 def normalize_ring(ring):
@@ -37,39 +46,109 @@ def points_in_ring(lng, lat, ring):
     lng, lat: (N,) arrays in degrees. ring: (M,2) [lng,lat] pairs
     (closing vertex optional). Returns (N,) bool — True iff strictly
     inside. Points exactly on an edge/vertex return False.
+
+    The points are tested in chunks of at most RAY_CAST_MAX_ELEMS // M
+    (at least one), so memory stays bounded on many-vertex rings.
     """
     ring = normalize_ring(ring)
     lng = np.asarray(lng, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     if len(ring) < 3:
         return np.zeros(lng.shape, dtype=bool)
+    step = max(1, RAY_CAST_MAX_ELEMS // len(ring))
+    if len(lng) <= step:
+        return _points_in_ring_block(lng, lat, ring)
+    return np.concatenate(
+        [
+            _points_in_ring_block(lng[i : i + step], lat[i : i + step], ring)
+            for i in range(0, len(lng), step)
+        ]
+    )
+
+
+def _points_in_ring_block(lng, lat, ring):
+    """points_in_ring on one block: every point against every edge."""
     x1 = ring[:, 0]  # (M,)
     y1 = ring[:, 1]
     x2 = np.roll(x1, -1)
     y2 = np.roll(y1, -1)
+    crosses, on_edge = _edge_terms(lng[:, None], lat[:, None], x1, y1, x2, y2)
+    return (np.sum(crosses, axis=1) % 2 == 1) & ~np.any(on_edge, axis=1)
 
-    px = lng[:, None]  # (N,1)
-    py = lat[:, None]
 
+def _edge_terms(px, py, x1, y1, x2, y2):
+    """Per (point, edge) pair, numpy-broadcast: (the horizontal ray from
+    the point crosses the edge, the point lies on the edge)."""
     # --- exact on-boundary detection (open boundary => not contained) ---
     # collinear (cross == 0) and within the segment's bbox
-    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)  # (N,M)
+    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
     within = (
         (px >= np.minimum(x1, x2))
         & (px <= np.maximum(x1, x2))
         & (py >= np.minimum(y1, y2))
         & (py <= np.maximum(y1, y2))
     )
-    on_boundary = np.any((cross == 0.0) & within, axis=1)
+    on_edge = (cross == 0.0) & within
 
-    # --- even-odd crossing count (half-open rule handles vertices) ---
+    # --- even-odd crossing (half-open rule handles vertices) ---
     cond = (y1 <= py) != (y2 <= py)  # edge straddles the horizontal ray
     # x coordinate of edge/ray intersection, only meaningful where cond
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-    crossings = np.sum(cond & (px < xint), axis=1)
-    inside = (crossings % 2 == 1) & ~on_boundary
-    return inside
+    return cond & (px < xint), on_edge
+
+
+def ring_store(rings):
+    """Flat vertex store of many rings for `points_in_rings`: (x, y,
+    start), ring r's vertices (closing duplicate dropped) at
+    [start[r], start[r+1]). A None ring, or one of fewer than 3
+    vertices, stores no vertex and contains nothing."""
+    none = np.empty((0, 2))
+    parts = []
+    for r in rings:
+        r = none if r is None else normalize_ring(r)
+        parts.append(r if len(r) >= 3 else none)
+    start = np.zeros(len(parts) + 1, dtype=np.int64)
+    np.cumsum([len(p) for p in parts], out=start[1:])
+    v = np.concatenate(parts) if parts else none
+    return np.ascontiguousarray(v[:, 0]), np.ascontiguousarray(v[:, 1]), start
+
+
+def points_in_rings(lng, lat, ring_of, store):
+    """Open-boundary even-odd containment of N points, point k in ring
+    ring_of[k] of a `ring_store`. The verdicts of `points_in_ring`, in
+    one vectorized pass over all (point, edge) pairs instead of one call
+    per ring. Points are cut into blocks whose edge total stays under
+    RAY_CAST_MAX_ELEMS (a point whose ring alone exceeds it gets a block
+    of its own)."""
+    x, y, start = store
+    lng = np.asarray(lng, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    ring_of = np.asarray(ring_of, dtype=np.int64)
+    s = start[ring_of]
+    n = start[ring_of + 1] - s
+    out = np.zeros(len(lng), dtype=bool)
+    cum = np.cumsum(n)
+    i = 0
+    while i < len(lng):
+        base = cum[i - 1] if i else 0
+        j = max(i + 1, int(np.searchsorted(cum, base + RAY_CAST_MAX_ELEMS, side="right")))
+        out[i:j] = _points_in_rings_block(lng[i:j], lat[i:j], s[i:j], n[i:j], x, y)
+        i = j
+    return out
+
+
+def _points_in_rings_block(lng, lat, s, n, x, y):
+    """points_in_rings on one block: point k against the n[k] edges of
+    the ring whose vertices start at s[k]."""
+    k = np.repeat(np.arange(len(n)), n)  # the point of each pair
+    e = np.arange(len(k)) - np.repeat(np.cumsum(n) - n, n)  # edge in ring
+    i1 = s[k] + e
+    i2 = np.where(e + 1 == n[k], s[k], i1 + 1)  # the last edge closes
+    crosses, on_edge = _edge_terms(lng[k], lat[k], x[i1], y[i1], x[i2], y[i2])
+    crossings = np.bincount(k, weights=crosses, minlength=len(n))
+    on_boundary = np.bincount(k, weights=on_edge, minlength=len(n)) > 0
+    return (crossings % 2 == 1) & ~on_boundary
 
 
 def ring_contains_point(ring, lng, lat):

@@ -87,35 +87,50 @@ class IndexBundle:
     features: DataFrame
     cell_index: DataFrame
     manifest: dict = field(default_factory=dict)
-    _rings_bc: object = None
+    _stab_bc: object = None
+    _edges_df: DataFrame | None = None
+    _props_df: DataFrame | None = None
 
-    def rings_broadcast(self):
-        """Broadcast {(fid, pos): ring ndarray}, hydrated once per index
-        — the reference's startup index hydration / feature cache
-        (server/server.go:73-108, 118-156). Cached so repeated queries
-        don't re-collect geometry."""
-        if self._rings_bc is None:
-            import numpy as np
+    def _rings(self) -> dict:
+        """{(fid, pos): (M, 2) vertex ndarray} hydrated through Arrow —
+        the reference's startup feature cache (server/server.go:73-108,
+        118-156). One columnar transfer, then vectorized slicing: no
+        per-vertex Row objects."""
+        import numpy as np
+        import pyarrow.compute as pc
 
-            from ..geo import pip as geo_pip
+        t = self.features.select("feature_id", "loop_pos", "ring").toArrow()
+        ring = t.column("ring").combine_chunks()
+        verts = ring.flatten()  # one [lng, lat(, alt)] list per vertex
+        xy = np.column_stack(
+            [
+                pc.list_element(verts, 0).to_numpy(zero_copy_only=False),
+                pc.list_element(verts, 1).to_numpy(zero_copy_only=False),
+            ]
+        )
+        lens = pc.list_value_length(ring).to_numpy(zero_copy_only=False)
+        parts = np.split(xy, np.cumsum(lens)[:-1]) if len(lens) else []
+        fid = t.column("feature_id").to_numpy()
+        pos = t.column("loop_pos").to_numpy()
+        return {(int(f), int(p)): r for f, p, r in zip(fid, pos, parts)}
 
-            spark = self.features.sparkSession
-            rows = self.features.select("feature_id", "loop_pos", "ring").collect()
-            rings = {
-                (r["feature_id"], r["loop_pos"]): geo_pip.normalize_ring(
-                    np.asarray(r["ring"], dtype=np.float64)
-                )
-                for r in rows
-            }
-            self._rings_bc = spark.sparkContext.broadcast(rings)
-        return self._rings_bc
+    def props(self) -> DataFrame:
+        """The per-loop payload every stab result joins (feature_id,
+        loop_pos, properties, properties_json, admin_level) — no rings.
+        Cached once per index so a query broadcasts it from memory
+        instead of re-scanning and re-shuffling the features."""
+        if self._props_df is None:
+            self._props_df = self.features.select(
+                "feature_id", "loop_pos", "properties", "properties_json", "admin_level"
+            ).cache()
+        return self._props_df
 
     def edges(self) -> DataFrame:
         """Ring edges as a DataFrame (feature_id, loop_pos, x1, y1, x2,
         y2) — the geometry operand of the JVM ray-cast (plans/pip_join
         strategy 'jvm'). Built distributed once per index; the closing
         vertex is dropped like reference tools.go:145-148."""
-        if getattr(self, "_edges_df", None) is None:
+        if self._edges_df is None:
 
             def explode_edges(batches):
                 import numpy as np
@@ -152,42 +167,54 @@ class IndexBundle:
         return self._edges_df
 
     def release(self) -> None:
-        """Free everything this index pinned: cached cell/edge
-        DataFrames and hydrated broadcasts. Call when a session moves
-        on to another index (long benches, notebooks) — leftover caches
-        otherwise build executor memory pressure."""
+        """Free everything this index pinned: cached cell/edge/props
+        DataFrames and the hydrated stab broadcast. Call when a session
+        moves on to another index (long benches, notebooks) — leftover
+        caches otherwise build executor memory pressure."""
         self.cell_index.unpersist()
-        if getattr(self, "_edges_df", None) is not None:
-            self._edges_df.unpersist()
-            self._edges_df = None
-        for attr in ("_rings_bc", "_stab_bc"):
-            bc = getattr(self, attr, None)
-            if bc is not None:
-                bc.unpersist()
+        for attr in ("_edges_df", "_props_df"):
+            df = getattr(self, attr)
+            if df is not None:
+                df.unpersist()
                 setattr(self, attr, None)
+        if self._stab_bc is not None:
+            self._stab_bc.unpersist()
+            self._stab_bc = None
 
     def stab_broadcast(self):
         """Broadcast the stab-ready index: cell ids sorted for binary
         search (the bbolt B+tree / insidetree analog — reference
         storage/bbolt/storage.go:246-269 range scan, index/treeindex
-        trie) as parallel numpy arrays, plus the ring store. Hydrated
-        once per index."""
-        if getattr(self, "_stab_bc", None) is None:
+        trie) as parallel numpy arrays, plus the flat ring store
+        (geo.pip.ring_store). Hydrated once per index through Arrow
+        (column arrays, not Row objects).
+
+        Each posting carries a dense loop ordinal instead of its
+        (feature_id, loop_pos): the ordinal indexes the per-loop
+        feature_id / loop_pos arrays and the ring store, so the fused
+        stab packs (point, loop) into one int64 whatever the ids' range."""
+        if self._stab_bc is None:
             import numpy as np
 
-            rows = self.cell_index.collect()
-            cells = np.array([r["cell_id"] for r in rows], dtype=np.int64)
-            isint = np.array([r["is_interior"] for r in rows], dtype=bool)
-            fid = np.array([r["feature_id"] for r in rows], dtype=np.int32)
-            pos = np.array([r["loop_pos"] for r in rows], dtype=np.int32)
+            from ..geo import pip as geo_pip
+
+            t = self.cell_index.select(
+                "cell_id", "is_interior", "feature_id", "loop_pos"
+            ).toArrow()
+            cells, isint, fid, pos = (c.to_numpy() for c in t.columns)
+            loops, loop = np.unique(
+                np.column_stack([fid, pos]), axis=0, return_inverse=True
+            )
+            rings = self._rings()
             # sort in UNSIGNED cell-id order (the searchsorted key space)
             o = np.argsort(cells.view(np.uint64), kind="stable")
             payload = (
                 cells[o],
                 isint[o],
-                fid[o],
-                pos[o],
-                self.rings_broadcast().value,
+                loop[o].astype(np.int32),
+                loops[:, 0].astype(np.int32),
+                loops[:, 1].astype(np.int32),
+                geo_pip.ring_store([rings.get((int(f), int(p))) for f, p in loops]),
                 int(self.manifest["min_cover_level"]),
                 int(self.manifest["max_cover_level"]),
             )
@@ -475,7 +502,10 @@ def build_index(
 ) -> IndexBundle:
     """End-to-end build from parsed loop rows (python list) OR a features
     DataFrame (e.g. from sources.polygons.load_geojsonl_df — the
-    planet-scale path that never materializes geometry on the driver).
+    planet-scale path that never materializes geometry on the driver;
+    query such a layer with pip_join(broadcast_edges=False) or a
+    non-broadcast strategy, since the default fused stab broadcasts
+    every ring from the driver).
     The cell index is computed once and cached — it is the broadcast
     side of every stab join. Cover params default to
     `geo.cover.auto_cover_params` (sized from the polygon extents, like

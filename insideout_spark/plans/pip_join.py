@@ -4,8 +4,26 @@ Reference lifecycle (server/server.go:159-310): point -> leaf cell ->
 ancestor lookup in the 'I' (interior) and 'O' (exterior) cell postings
 -> sure hits skip geometry, candidates run exact Loop.ContainsPoint.
 
-Spark-first re-expression (SURVEY.md §3.1/§4), default "jvm" strategy —
-the entire flagship stays inside whole-stage codegen:
+Default strategy "fused" — the reference's one lookup per point, batched
+(SURVEY.md §3.1/§4):
+
+    points --ONE Arrow pass per batch (point columns only)-->
+           leaf cells (numpy S2) -> per-level searchsorted stab of the
+           broadcast sorted cell index -> dedup (A2) + interior
+           precedence (J5) -> ray cast of the boundary residue only
+           (P3, one numpy pass over a flat ring store)-->
+           --broadcast join of the cached per-loop properties-->
+
+Measured on a 4-core VM, local[4], 400-polygon layer (min of 3): fused
+plans in 0.07-0.2 s (~200 py4j calls) and runs 2 Spark jobs in 3 stages
+per op; the "jvm" arm below needs 0.6-1.5 s of driver-side planning
+(~3,700 py4j calls, mostly the S2 key CASE tree) and 5 jobs in 9 stages.
+20k pages: 0.99 s fused vs 2.38 s jvm; 200k pages: 1.11 vs 2.39 s. The
+fused arm costs one Arrow crossing per batch, point columns only.
+
+The fused arm broadcasts every ring to the Python workers. When the
+caller forbids broadcasting geometry (broadcast_edges=False), the
+default falls back to "jvm":
 
     points --(face,i,j) projection + ancestor fij keys (Catalyst)-->
            --explode + broadcast hash join vs cell_index-->
@@ -14,21 +32,16 @@ the entire flagship stays inside whole-stage codegen:
              + even-odd crossing count + on-edge detection (P3)-->
            --broadcast join features (properties)-->
 
-No python on the hot path at all: the Arrow JVM<->Python transport was
-measured to be a globally-serialized bottleneck on this class of
-machine, so even the exact ray cast runs as Catalyst arithmetic over an
-edge join, folded into the same map-combinable aggregation that does
-the dedup. One shuffle total, of ~output-sized partial aggregates.
-
-Alternative physical strategies (the reference's db/tree/shape knob
+"jvm" keeps the whole stab in whole-stage codegen (the exact ray cast is
+Catalyst arithmetic over an edge join, folded into one map-combinable
+aggregation) and is the shared edge-join tail of the two strategies for
+layers too large to broadcast (the reference's db/tree/shape knob
 analog, server/server.go:73-108):
 
-* "fused": the whole stab in ONE Arrow pass with a broadcast
-  searchsorted cell index + numpy ray cast — stateless, so it is the
-  streaming path; also the fastest single-pass form at low parallelism.
 * "salted": shuffled hash join on the stab key with explicit xS salt
-  replication for polygon layers too large to broadcast (hot-cell skew
-  handling per the north rule, on top of AQE skew-join splitting).
+  replication (hot-cell skew handling per the north rule, on top of AQE
+  skew-join splitting).
+* "bucketed": co-located join against a `save_index_bucketed` table.
 """
 
 from __future__ import annotations
@@ -50,18 +63,23 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
     binary search in the broadcast sorted cell array (the reference's
     B+tree range scan / trie stab, storage/bbolt/storage.go:246-306,
     batched) -> dedup + max(is_interior) via packed-int64 reduceat ->
-    exact ray-cast residue per loop.
+    exact ray cast of the residue, every (point, loop) pair in one
+    vectorized pass over the index's flat ring store.
 
     Earlier formulations (explode + Catalyst broadcast join + a second
     python stage) were bottlenecked by moving the ~4x-larger post-join
     row set across the JVM<->Arrow boundary; this crosses once with only
-    the point columns (measured 5.4x faster at 2M points)."""
+    the point columns (measured 5.4x faster at 2M points).
+
+    The ray cast works in blocks of at most geo.pip.RAY_CAST_MAX_ELEMS
+    (point, edge) pairs."""
     key = list(id_cols)
 
     def run(batches):
         import pandas as pd
 
-        cells, isint_arr, fid_arr, pos_arr, rings, min_l, max_l = stab_bc.value
+        (cells, isint_arr, loop_arr, loop_fid, loop_pos, rings,
+         min_l, max_l) = stab_bc.value
         ucells = geo_s2.to_unsigned(cells)
 
         def empty():
@@ -83,7 +101,11 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
             lat = pdf[lat_col].to_numpy()
             lng = pdf[lng_col].to_numpy()
             leaf = geo_s2.latlng_to_cell(lat, lng)
-            hit_pt, hit_f, hit_p, hit_i = [], [], [], []
+            # probe in cell order: sorted needles (a leaf's ancestors
+            # keep its order) make each level's searchsorted cache-friendly
+            srt = np.argsort(leaf, kind="stable")
+            leaf = leaf[srt]
+            hit_pt, hit_o, hit_i = [], [], []
             for lv in range(min_l, max_l + 1):
                 anc = geo_s2.parent(leaf, lv)
                 j = np.searchsorted(ucells, anc)
@@ -95,34 +117,21 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
                     if not valid.any():
                         break
                     rows = np.flatnonzero(valid)
-                    hit_pt.append(rows)
-                    hit_f.append(fid_arr[j[rows]])
-                    hit_p.append(pos_arr[j[rows]])
+                    hit_pt.append(srt[rows])
+                    hit_o.append(loop_arr[j[rows]])
                     hit_i.append(isint_arr[j[rows]])
                     j = j + 1
             if not hit_pt:
                 yield empty()
                 continue
             pt_i = np.concatenate(hit_pt)
-            f = np.concatenate(hit_f).astype(np.int64)
-            p = np.concatenate(hit_p).astype(np.int64)
+            lo = np.concatenate(hit_o).astype(np.int64)
             it = np.concatenate(hit_i).astype(np.int8)
-            # dedup (point, fid, pos) + interior precedence: packed keys
-            # + reduceat (reference A2 dedup + J5 anti-join)
-            # layout: point(23b) | fid(25b) | pos(16b) — fail loudly on
-            # overflow instead of silently corrupting dedup (ADVICE r01)
-            if len(f) and (
-                int(f.max()) >= (1 << 25)
-                or int(p.max()) >= (1 << 16)
-                or len(pdf) >= (1 << 23)
-            ):
-                raise ValueError(
-                    "fused stab packing overflow: need feature_id < 2^25, "
-                    "loop_pos < 2^16, batch < 2^23 rows "
-                    f"(got max fid={int(f.max())}, max pos={int(p.max())}, "
-                    f"batch={len(pdf)}); use strategy='jvm' for wider ids"
-                )
-            packed = (pt_i.astype(np.int64) << np.int64(41)) | (f << np.int64(16)) | p
+            # dedup (point, loop) + interior precedence: packed keys
+            # + reduceat (reference A2 dedup + J5 anti-join). The loop
+            # is the index's dense ordinal (< 2^31) and a batch holds
+            # < 2^31 rows, so point << 32 | loop cannot overflow
+            packed = (pt_i.astype(np.int64) << np.int64(32)) | lo
             order = np.argsort(packed, kind="stable")
             sp = packed[order]
             starts = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
@@ -131,25 +140,17 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
             keep = sure.copy()
             resid = np.flatnonzero(~sure)
             if len(resid):
-                fp = (f[rep[resid]] << np.int64(16)) | p[rep[resid]]
-                fo = np.argsort(fp, kind="stable")
-                fps = fp[fo]
-                fstarts = np.flatnonzero(np.r_[True, fps[1:] != fps[:-1]])
-                for si, gstart in enumerate(fstarts):
-                    gend = fstarts[si + 1] if si + 1 < len(fstarts) else len(fo)
-                    gsel = resid[fo[gstart:gend]]
-                    ring = rings.get((int(fps[gstart] >> 16), int(fps[gstart] & 0xFFFF)))
-                    if ring is None or len(ring) < 3:
-                        continue
-                    rows = pt_i[rep[gsel]]
-                    keep[gsel] = geo_pip.points_in_ring(lng[rows], lat[rows], ring)
+                rows = pt_i[rep[resid]]
+                keep[resid] = geo_pip.points_in_rings(
+                    lng[rows], lat[rows], lo[rep[resid]], rings
+                )
             sel = rep[keep]
             rows = pt_i[sel]
             out = {c: pdf[c].to_numpy()[rows] for c in key}
             out[lat_col] = lat[rows]
             out[lng_col] = lng[rows]
-            out["feature_id"] = f[sel].astype("int32")
-            out["loop_pos"] = p[sel].astype("int32")
+            out["feature_id"] = loop_fid[lo[sel]]
+            out["loop_pos"] = loop_pos[lo[sel]]
             out["is_sure_hit"] = sure[keep]
             yield pd.DataFrame(out)
 
@@ -161,7 +162,6 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
     return points.select(*key, lat_col, lng_col).mapInPandas(run, schema=out_schema)
 
 
-
 def pip_join(
     points: DataFrame,
     index: IndexBundle,
@@ -169,7 +169,7 @@ def pip_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     *,
-    strategy: str = "jvm",
+    strategy: str | None = None,
     broadcast_index: bool = True,
     salt_buckets: int | None = None,
     bucketed_table: str | None = None,
@@ -187,15 +187,19 @@ def pip_join(
     Physical strategies (the reference's db/tree/shape knob analog,
     server/server.go:73-108):
 
-    * "jvm" (default): the hot path never leaves whole-stage codegen —
-      Catalyst (face,i,j) stab keys, broadcast hash join, one
-      map-combinable dedup aggregation; ONLY the boundary-cell residue
-      crosses to the vectorized ray caster. Scales with cores because
-      the Arrow python transport (a shared bottleneck) sees a small
-      fraction of rows.
+    * None (default): "fused", or "jvm" when broadcast_edges is False
+      (the fused arm broadcasts every ring). broadcast_index=False
+      always selects "salted".
     * "fused": the whole stab in one Arrow pass with a broadcast
-      searchsorted index — fewest total instructions; best when python
-      transport is not contended (small parallelism).
+      searchsorted index; the ray cast runs only on boundary-cell
+      residue, chunked to a fixed memory budget. On local[4] it plans in
+      0.07-0.2 s (jvm: 0.6-1.5 s), runs 2 jobs per op (jvm: 5) and
+      geocodes 20k pages in 0.99 vs 2.38 s, 200k in 1.11 vs 2.39 s.
+    * "jvm": Catalyst (face,i,j) stab keys, broadcast hash join, bbox
+      prune, broadcast edge join and one map-combinable aggregation that
+      does dedup + the even-odd ray cast — no python on the hot path.
+      broadcast_edges=False turns its edge join into a shuffle for
+      continent-scale rings.
     * "salted": shuffled hash join on the stab key with explicit xS salt
       replication for polygon layers too large to broadcast; dedup via
       aggregation; ring travels as a column (no driver geometry).
@@ -211,6 +215,10 @@ def pip_join(
     min_l, max_l = man["min_cover_level"], man["max_cover_level"]
     if not broadcast_index:
         strategy = "salted"
+    elif strategy is None:
+        # the fused arm broadcasts every ring, so a caller that keeps
+        # edges off the broadcast gets the edge-join arm
+        strategy = "fused" if broadcast_edges else "jvm"
 
     pts = points.filter(F.col(lat_col).isNotNull() & F.col(lng_col).isNotNull())
 
@@ -335,9 +343,7 @@ def pip_join(
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 
-    props = index.features.select(
-        "feature_id", "loop_pos", "properties", "properties_json", "admin_level"
-    )
+    props = index.props()
     if include_properties:
         result = result.join(F.broadcast(props), ["feature_id", "loop_pos"], "left")
     else:  # P1 projection: strip feature payload (reference insidesvc.proto:21-24)

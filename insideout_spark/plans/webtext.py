@@ -419,9 +419,15 @@ _SIG_CACHES: list = []
 def release_signature_caches() -> None:
     """Unpersist every signature/fingerprint cache left by previous
     minhash_lsh_pairs / simhash_near_dup_pairs calls. Released result
-    DataFrames stay valid — re-consuming them recomputes."""
+    DataFrames stay valid — re-consuming them recomputes. Entries from a
+    stopped SparkContext are dropped without unpersist: their blocks
+    died with that context, and unpersist on them raises."""
+    from pyspark import SparkContext
+
     while _SIG_CACHES:
-        _SIG_CACHES.pop().unpersist()
+        df = _SIG_CACHES.pop()
+        if df.sparkSession.sparkContext is SparkContext._active_spark_context:
+            df.unpersist()
 
 
 def _register_sig_cache(df: DataFrame, auto_release: bool) -> DataFrame:

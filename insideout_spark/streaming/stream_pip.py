@@ -32,8 +32,9 @@ def stream_pip_join(pages_stream: DataFrame, index: IndexBundle) -> DataFrame:
     points = extract_points(pages_stream)
     # strategy="fused" is the streaming-correct path: it is a stateless
     # per-batch operator (no aggregation), so append mode needs no
-    # watermark; the default "jvm" strategy folds the stab into an
-    # aggregation, which streaming append mode rejects
+    # watermark; the "jvm" strategy folds the stab into an aggregation,
+    # which streaming append mode rejects — so the arm is pinned, not
+    # left to the batch default
     return pip_join(points, index, include_properties=False, strategy="fused")
 
 

@@ -59,10 +59,12 @@ def main() -> None:
         src_pages.synth_pages(spark, n_pages, cpus * 4)
     ).cache()
     pts.count()
-    pip_join(pts.limit(1), idx, include_properties=False).count()
+    pip_join(pts.limit(1), idx, include_properties=False, strategy="jvm").count()
     walls = []
     for _ in range(2):
-        sec, cnt = timed(lambda: pip_join(pts, idx, include_properties=False).count())
+        sec, cnt = timed(
+            lambda: pip_join(pts, idx, include_properties=False, strategy="jvm").count()
+        )
         walls.append(sec)
     out["flagship_wall"] = round(min(walls), 2)
     out["flagship_rows"] = cnt

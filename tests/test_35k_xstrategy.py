@@ -2,8 +2,9 @@
 'Next round' #4): the 35k-polygon communes-scale layer (auto cover
 params land at levels ~11-16, depths the 400-rect oracle fixture never
 touches) must produce IDENTICAL stab rows through every physical
-strategy — jvm (Catalyst edge join), fused (single Arrow pass),
-shuffled-edges, and bucketed (co-located join, no index Exchange).
+strategy — the default, jvm (Catalyst edge join), fused (single Arrow
+pass), shuffled-edges, and bucketed (co-located join, no index
+Exchange).
 """
 
 from __future__ import annotations
@@ -40,8 +41,13 @@ def _rows(df):
 
 def test_all_strategies_agree_at_35k(spark, idx35):
     pts = entry_mod._points(spark, SF_DIR)
-    jvm = _rows(pip_join(pts, idx35, id_cols=("point_id",), include_properties=False))
+    jvm = _rows(
+        pip_join(pts, idx35, id_cols=("point_id",), include_properties=False,
+                 strategy="jvm")
+    )
     assert len(jvm) > 0  # the layer tiles the point bbox; hits exist
+    default = _rows(pip_join(pts, idx35, id_cols=("point_id",), include_properties=False))
+    assert default == jvm
     fused = _rows(
         pip_join(pts, idx35, id_cols=("point_id",), include_properties=False,
                  strategy="fused")
@@ -49,7 +55,7 @@ def test_all_strategies_agree_at_35k(spark, idx35):
     assert fused == jvm
     shuffled_edges = _rows(
         pip_join(pts, idx35, id_cols=("point_id",), include_properties=False,
-                 broadcast_edges=False)
+                 strategy="jvm", broadcast_edges=False)
     )
     assert shuffled_edges == jvm
     save_index_bucketed(idx35, "communes35k_cells_bucketed", n_buckets=16)

@@ -37,12 +37,18 @@ def global_points(spark):
 def test_countries_e2e_matches_oracle(spark, countries, global_points):
     loops, idx = countries
     df, pdf = global_points
-    got = {
-        (r["point_id"], r["feature_id"], r["loop_pos"])
-        for r in pip_join(
-            df, idx, id_cols=("point_id",), include_properties=False
-        ).collect()
-    }
+    def hits(strategy):
+        return {
+            (r["point_id"], r["feature_id"], r["loop_pos"], r["is_sure_hit"])
+            for r in pip_join(
+                df, idx, id_cols=("point_id",), include_properties=False,
+                strategy=strategy,
+            ).collect()
+        }
+
+    by_arm = {s: hits(s) for s in (None, "fused", "jvm")}
+    assert by_arm[None] == by_arm["fused"] == by_arm["jvm"]
+    got = {hit[:3] for hit in by_arm[None]}
     rings = [(r["feature_id"], r["loop_pos"], np.asarray(r["ring"])) for r in loops]
     want = set()
     lats = pdf["lat"].to_numpy()

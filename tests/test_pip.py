@@ -72,3 +72,59 @@ def test_segments_intersect_rect():
     assert not pip.segments_intersect_rect(ring, 1.0, 3.0, 1.0, 3.0)  # fully inside
     assert not pip.segments_intersect_rect(ring, 10.0, 12.0, 1.0, 2.0)  # far away
     assert pip.segments_intersect_rect(ring, -1.0, 5.0, -1.0, 5.0)  # ring inside rect: edges within
+
+
+def test_chunked_ray_cast_matches_one_block(monkeypatch):
+    """A tiny element budget splits the points into many blocks; the
+    verdicts equal the single-block answer, boundary points included."""
+    rng = np.random.default_rng(5)
+    ang = np.linspace(0.0, 2 * np.pi, 301)[:-1]
+    ring = np.column_stack([np.cos(ang), np.sin(ang)])
+    lng = np.r_[rng.uniform(-1.2, 1.2, 997), ring[:3, 0], 0.0]
+    lat = np.r_[rng.uniform(-1.2, 1.2, 997), ring[:3, 1], 0.0]
+    monkeypatch.setattr(pip, "RAY_CAST_MAX_ELEMS", len(lng) * len(ring))
+    whole = pip.points_in_ring(lng, lat, ring)
+    monkeypatch.setattr(pip, "RAY_CAST_MAX_ELEMS", 7 * len(ring))
+    chunked = pip.points_in_ring(lng, lat, ring)
+    assert (chunked == whole).all()
+    assert whole.any() and not whole.all()
+    assert not whole[997:1000].any() and whole[-1]
+
+
+def test_points_in_rings_matches_per_ring(monkeypatch):
+    """The one-pass ray cast over a ring store gives each point the
+    verdict of points_in_ring against its own ring: closed and open
+    rings, a None and a degenerate ring (contain nothing), vertices as
+    points (open boundary), and a budget that cuts many blocks, one of
+    them a single point whose ring alone exceeds it."""
+    rng = np.random.default_rng(9)
+    rings = []
+    for r in range(60):
+        m = int(rng.integers(3, 120))
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, m))
+        rad = rng.uniform(0.5, 1.0, m)
+        cx, cy = rng.uniform(-2.0, 2.0, 2)
+        ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+        rings.append(np.vstack([ring, ring[:1]]) if r % 2 else ring)
+    rings[3] = None
+    rings[4] = np.array([[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]])
+    store = pip.ring_store(rings)
+    n = 3000
+    ring_of = rng.integers(0, len(rings), n)
+    lng = rng.uniform(-3.2, 3.2, n)
+    lat = rng.uniform(-3.2, 3.2, n)
+    for k in range(40):  # a vertex of the point's own ring
+        r = rings[ring_of[k]]
+        if r is not None:
+            lng[k], lat[k] = r[1]
+    want = np.array(
+        [
+            rings[r] is not None
+            and bool(pip.points_in_ring(lng[k : k + 1], lat[k : k + 1], rings[r])[0])
+            for k, r in enumerate(ring_of)
+        ]
+    )
+    assert want.any() and not want[:40].any()
+    assert (pip.points_in_rings(lng, lat, ring_of, store) == want).all()
+    monkeypatch.setattr(pip, "RAY_CAST_MAX_ELEMS", 50)
+    assert (pip.points_in_rings(lng, lat, ring_of, store) == want).all()

@@ -17,6 +17,17 @@ def golden_points_df(spark):
     return src_pages.extract_points(pg).cache()
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _hit_rows(df, id_col="url"):
+    return sorted(
+        (r[id_col], r["feature_id"], r["loop_pos"], bool(r["is_sure_hit"]))
+        for r in df.collect()
+    )
+
+
 def _hits_by_golden_row(rows):
     out = {}
     for r in rows:
@@ -107,8 +118,8 @@ def test_index_save_load_roundtrip(spark, houat_index, golden_points_df, tmp_pat
 def test_broadcast_join_in_plan(spark, houat_index, golden_points_df):
     """The stab join must be a broadcast hash join with no shuffle on the
     probe side before the join (scale contract, SURVEY.md §4)."""
-    plan = pip_join(golden_points_df, houat_index)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    plan = _plan(pip_join(golden_points_df, houat_index, strategy="jvm"))
+    assert "BroadcastHashJoin [fij_key" in plan
 
 
 def test_cover_guard_per_side(spark, houat_loops, golden_points_df):
@@ -253,15 +264,15 @@ def test_get_feature_api(spark, houat_index):
 
 def test_nonbroadcast_edges_equivalent(spark, houat_index, golden_points_df):
     """broadcast_edges=False (shuffled edge join for continent-scale
-    rings) returns identical rows to the broadcast default."""
+    rings) returns identical rows to the jvm arm's broadcast edges."""
     a = {
         (r["url"], r["feature_id"], r["loop_pos"], r["is_sure_hit"])
-        for r in pip_join(golden_points_df, houat_index).collect()
+        for r in pip_join(golden_points_df, houat_index, strategy="jvm").collect()
     }
     b = {
         (r["url"], r["feature_id"], r["loop_pos"], r["is_sure_hit"])
         for r in pip_join(
-            golden_points_df, houat_index, broadcast_edges=False
+            golden_points_df, houat_index, strategy="jvm", broadcast_edges=False
         ).collect()
     }
     assert a == b and len(a) > 0
@@ -343,7 +354,7 @@ def test_random_layer_differential(spark):
             oracle.add((int(pid), fid, 0))
     assert len(oracle) > 100  # the layer actually covers points
 
-    for strategy in ("jvm", "fused", "salted"):
+    for strategy in (None, "jvm", "fused", "salted"):
         got = {
             (r["point_id"], r["feature_id"], r["loop_pos"])
             for r in pip_join(
@@ -352,3 +363,112 @@ def test_random_layer_differential(spark):
             ).collect()
         }
         assert got == oracle, strategy
+
+
+def test_default_is_fused_stab(spark, houat_index, golden_points_df):
+    """For an index inside the fused packing, the default plan is the
+    one-pass MapInPandas stab (no fij_key join) with the fused rows."""
+    default = pip_join(golden_points_df, houat_index)
+    plan = _plan(default)
+    assert "MapInPandas" in plan and "fij_key" not in plan
+    fused = pip_join(golden_points_df, houat_index, strategy="fused")
+    assert _hit_rows(default) == _hit_rows(fused)
+
+
+@pytest.mark.parametrize(
+    "remap",
+    [
+        pytest.param(lambda fid, pos: (fid - 3, pos), id="negative_feature_id"),
+        pytest.param(lambda fid, pos: (fid, pos + (1 << 16)), id="wide_loop_pos"),
+        pytest.param(
+            lambda fid, pos: (fid + (1 << 30), pos - (1 << 20)), id="wide_both"
+        ),
+    ],
+)
+def test_default_fused_handles_any_int_ids(
+    spark, houat_loops, houat_index, golden_points_df, remap
+):
+    """The fused stab packs a dense loop ordinal, not the raw ids: for an
+    index with negative or wide feature_id / loop_pos the default still
+    plans the MapInPandas stab and returns the rows of an explicit jvm
+    call, which equal the in-range index's rows with the ids remapped.
+    The props cache dies with release()."""
+    from insideout_spark.geo.cover import CoverParams
+    from insideout_spark.plans.index_build import build_index
+
+    loops = []
+    for lr in houat_loops:
+        fid, pos = remap(lr["feature_id"], lr["loop_pos"])
+        loops.append({**lr, "feature_id": fid, "loop_pos": pos})
+    idx = build_index(
+        spark, loops, CoverParams(10, 16, 24), CoverParams(10, 15, 16),
+        warning_cells_cover=100,
+    )
+    try:
+        default = pip_join(golden_points_df, idx)
+        plan = _plan(default)
+        assert "MapInPandas" in plan and "fij_key" not in plan
+        got = _hit_rows(default)
+        assert got == _hit_rows(pip_join(golden_points_df, idx, strategy="jvm"))
+        want = sorted(
+            (url, *remap(fid, pos), sure)
+            for url, fid, pos, sure in _hit_rows(
+                pip_join(golden_points_df, houat_index, strategy="jvm")
+            )
+        )
+        assert got == want and len(got) > 0
+        # every query joins the one cached props projection; release frees it
+        props = idx.props()
+        assert props.is_cached and idx.props() is props
+    finally:
+        idx.release()
+    assert not props.is_cached
+
+
+def test_fused_ray_cast_chunks_many_vertex_ring(spark):
+    """A 4000-vertex ring leaves the default ray-cast budget room for
+    only 16 points per block, so the fused stab tests its boundary
+    residue (one batch) in several blocks; the rows equal the jvm edge
+    join's."""
+    import math
+
+    import pandas as pd
+
+    from insideout_spark.geo.cover import CoverParams
+    from insideout_spark.plans.index_build import build_index
+
+    n_vert = 4000
+    ring = [
+        [2.35 + 0.05 * math.cos(2 * math.pi * k / n_vert),
+         48.85 + 0.05 * math.sin(2 * math.pi * k / n_vert)]
+        for k in range(n_vert)
+    ]
+    ring.append(list(ring[0]))
+    idx = build_index(
+        spark,
+        [{"feature_id": 0, "loop_pos": 0, "ring": ring, "properties": {},
+          "admin_level": None}],
+        CoverParams(10, 16, 24), CoverParams(10, 15, 16), warning_cells_cover=100,
+    )
+    rng = np.random.default_rng(11)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "point_id": np.arange(2000, dtype=np.int64),
+        "lat": rng.uniform(48.79, 48.91, 2000),
+        "lng": rng.uniform(2.29, 2.41, 2000),
+    })).coalesce(1)
+
+    def rows(strategy):
+        return _hit_rows(
+            pip_join(pts, idx, id_cols=("point_id",), include_properties=False,
+                     strategy=strategy),
+            "point_id",
+        )
+
+    try:
+        fused = rows("fused")
+        # every non-sure hit went through the ray cast in one batch
+        step = geo_pip.RAY_CAST_MAX_ELEMS // n_vert
+        assert sum(not sure for *_, sure in fused) > 2 * step
+        assert fused == rows("jvm")
+    finally:
+        idx.release()

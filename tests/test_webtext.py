@@ -605,20 +605,41 @@ def test_minhash_driver_pairs_match_distributed(spark, monkeypatch):
 
     rows = _near_dup_cluster_rows(200, 30)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    native = {
-        tuple(r)
-        for r in webtext.minhash_lsh_pairs(
-            docs, threshold=0.35, bucket_cap=8
-        ).collect()
-    }
-    monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", 0)
-    distributed = {
-        tuple(r)
-        for r in webtext.minhash_lsh_pairs(
-            docs, threshold=0.35, bucket_cap=8
-        ).collect()
-    }
+    native_df = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
+    native = {tuple(r) for r in native_df.collect()}
+    monkeypatch.setattr(webtext, "_SIG_DRIVER_ROWS", 0)
+    distributed_df = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
+    distributed = {tuple(r) for r in distributed_df.collect()}
+    # the driver arm hands its numpy pair arrays on; the join arm cannot
+    assert hasattr(native_df, "_io_pairs_np")
+    assert not hasattr(distributed_df, "_io_pairs_np")
     assert native == distributed and len(native) > 0
+
+
+def test_signature_cache_drops_entries_of_stopped_context(spark, dup_docs):
+    """A signature cache left by a stopped SparkContext is dropped
+    without unpersist (which raises on a dead context); live entries
+    are still unpersisted, and the next minhash call runs."""
+    from types import SimpleNamespace
+
+    from insideout_spark.plans import webtext
+
+    class StaleCache:
+        sparkSession = SimpleNamespace(sparkContext=object())
+
+        def unpersist(self):
+            raise AssertionError("unpersist on a cache of a stopped context")
+
+    live = dup_docs.select("doc_id").cache()
+    live.count()
+    webtext._SIG_CACHES.extend([StaleCache(), live])
+    webtext.release_signature_caches()
+    assert webtext._SIG_CACHES == []
+    assert not live.is_cached
+    webtext._SIG_CACHES.append(StaleCache())
+    assert webtext.minhash_lsh_pairs(dup_docs, threshold=0.35).count() > 0
+    assert not any(isinstance(c, StaleCache) for c in webtext._SIG_CACHES)
+    webtext.release_signature_caches()
 
 
 def test_driver_pairs_budget_falls_back(spark, monkeypatch):

@@ -75,9 +75,9 @@ def _stats_barrier(df: DataFrame) -> DataFrame:
 # re-shuffled per round — at sf1 the edge table is 10.4M rows vs a 47k
 # label table, and the broadcast join removes one full edge shuffle per
 # round (guide §3.1/§2.4). Above the cap the sort-merge shape is kept:
-# a label table of billions of nodes cannot be broadcast. Parameterised
-# for cluster tuning; 4M labels ~ 64 MB broadcast.
-_BROADCAST_LABEL_CAP = int(os.environ.get("INSIDEOUT_CC_BROADCAST_CAP", "4000000"))
+# a label table of billions of nodes cannot be broadcast. 4M labels
+# ~ 64 MB broadcast.
+_BROADCAST_LABEL_CAP = 4_000_000
 
 # Pair graphs at or under this many edges run the DRIVER-SIDE numpy
 # label propagation (the knn_brute / cosine_topk_brute bounded-collect
@@ -88,7 +88,7 @@ _BROADCAST_LABEL_CAP = int(os.environ.get("INSIDEOUT_CC_BROADCAST_CAP", "4000000
 # the distributed loop runs unchanged — the gate is a count on the
 # already-materialized pair checkpoint, so nothing is collected before
 # the bound is known. 20M edges ~ 320 MB of driver arrays.
-_CC_DRIVER_EDGES = int(os.environ.get("INSIDEOUT_CC_DRIVER_EDGES", "20000000"))
+_CC_DRIVER_EDGES = 20_000_000
 
 
 def _cc_numpy(a, b):

@@ -455,18 +455,12 @@ def _register_sig_cache(df: DataFrame, auto_release: bool) -> DataFrame:
 # signature path counts eagerly anyway); optimizer size-estimate gate
 # otherwise (exact for parquet-backed signature tables). Above the
 # caps — corpus-scale signature tables — the shuffle join is kept.
-_SIG_BROADCAST_ROWS = int(os.environ.get("INSIDEOUT_SIG_BROADCAST_ROWS", "2000000"))
-# MinHash driver-side pair GENERATION has a tighter row gate than the
-# broadcast-attach joins: its capped-bucket chains sort by the 32-value
-# signature STRING (the oracle-pinned order), which is Python-object
-# work per capped bucket — measured faster than the distributed path at
-# 50k docs (3.5 vs 7.6 s) but slower at 500k (39 vs 16 s, cap=32).
-# SimHash keeps the wide gate: its chains lexsort int64 fingerprints
-# (measured 10.6 s driver vs 77 s distributed at 500k docs).
-_SIG_DRIVER_ROWS = int(os.environ.get("INSIDEOUT_SIG_DRIVER_ROWS", "150000"))
-_SIG_BROADCAST_BYTES = int(
-    os.environ.get("INSIDEOUT_SIG_BROADCAST_BYTES", str(256 << 20))
-)
+# The row gate also picks the driver arm of MinHash / SimHash pair
+# generation (_near_dup_pairs). Measured at 500k derived docs
+# (bucket_cap=32, local[4], min of 3): MinHash driver 12.9 s vs
+# distributed 15.3 s; SimHash 10.6 vs 77 s (r06, 32 cores).
+_SIG_BROADCAST_ROWS = 2_000_000
+_SIG_BROADCAST_BYTES = 256 << 20
 
 
 def _sig_broadcaster(df: DataFrame):
@@ -595,26 +589,14 @@ def save_signatures(
     minhash_signatures(docs, text_col, k).write.mode(mode).parquet(path)
 
 
-def _sig_bands(sigs: DataFrame, with_ord: bool = False) -> DataFrame:
+def _sig_bands(sigs: DataFrame) -> DataFrame:
     """LSH band rows (doc_id, band, bh) from a (doc_id, sig) frame.
     Band key = the raw per-band value tuple (stringified), NOT a hash
     of it: the candidate set is then provably identical to the DuckDB
-    oracle's (no cross-engine hash to reproduce, no collision noise).
-    `with_ord=True` adds `__ord`, the full 32-value signature string —
-    the chain cap's similarity sort key."""
+    oracle's (no cross-engine hash to reproduce, no collision noise)."""
     rows_per_band = _MINHASH_PERMS // _LSH_BANDS
-    ord_cols = (
-        [
-            F.concat_ws(
-                "_", *[F.col("sig")[j].cast("string") for j in range(_MINHASH_PERMS)]
-            ).alias("__ord")
-        ]
-        if with_ord
-        else []
-    )
     return sigs.select(
         "doc_id",
-        *ord_cols,
         F.explode(
             F.array(
                 *[
@@ -634,7 +616,7 @@ def _sig_bands(sigs: DataFrame, with_ord: bool = False) -> DataFrame:
                 ]
             )
         ).alias("b"),
-    ).select("doc_id", *(["__ord"] if with_ord else []), "b.band", "b.bh")
+    ).select("doc_id", "b.band", "b.bh")
 
 
 def _sig_est_jaccard(a_col: str = "sig_a", b_col: str = "sig_b"):
@@ -677,93 +659,45 @@ def minhash_lsh_pairs(
         sigs = _register_sig_cache(
             minhash_signatures(docs, text_col, k), auto_release
         )
-    # NATIVE fast path (r06): when the signature table is provably
-    # small enough to hold driver-side (same bound as the broadcast
-    # gate; the knn_brute bounded-collect pattern), the ENTIRE banded
-    # pair generation runs vectorized on the driver from the signature
-    # matrix — banding, bucket grouping, clique/chain emission,
-    # cross-band dedup and the est rescore (_banded_pairs_numpy).
-    # The previous shape (per-bucket numpy inside mapInPandas + a
-    # broadcast-matrix rescore + a dropDuplicates shuffle) paid a
-    # collect_list shuffle of every band row, a serialized Arrow
-    # transport of every surviving pair instance out of 32 Python
-    # workers, and a pair shuffle — measured 9.8 s warm at sf1 vs
-    # ~3 s driver-side, with far tighter variance. matches/32 is the
-    # same int/int double division, the chain order key is the same
-    # 32-value signature string compared byte-wise, and the clique/
-    # chain pair sets are replicated exactly — identical pairs,
-    # identical est_jaccard (oracle-verified). Above the row gate, or
-    # when the capped candidate count exceeds _DRIVER_PAIRS_CAP (a
-    # replicated corpus explodes cliques quadratically — measured
-    # 368 s driver-side at a derived sf10 vs the executor-parallel
-    # join path), the distributed path below runs instead — identical
-    # pair set either way.
-    n_sigs = getattr(sigs, "_io_nrows", None)
-    if n_sigs is None and signatures is not None:
-        # persisted signature tables (the save_signatures contract):
-        # a count is metadata-cheap and callers reuse the frame
-        n_sigs = sigs.count()
-        try:
-            sigs._io_nrows = n_sigs
-        except AttributeError:  # pragma: no cover - exotic DataFrame proxy
-            pass
-    if n_sigs is not None and n_sigs <= _SIG_DRIVER_ROWS:
-        spdf = sigs.select("doc_id", "sig").toPandas()
-        ids = spdf["doc_id"].to_numpy(dtype=np.int64)
-        spark = sigs.sparkSession
-        schema = "doc_a long, doc_b long, est_jaccard double"
-        if len(ids) == 0:
-            return spark.createDataFrame([], schema)
-        smat = np.array(spdf["sig"].tolist(), dtype=np.int64)
-        o = np.argsort(ids)
-        ids, smat = ids[o], smat[o]
-        res = _banded_pairs_numpy(ids, smat, bucket_cap, float(threshold))
-        if res is not None:
-            a, b, est = res
-            import pandas as pd
+    # Below the row gate the whole banded generation runs on the driver
+    # (_near_dup_pairs / _driver_pairs); above it, the band self-join.
+    # The distributed chain orders capped buckets by the FULL 32-value
+    # signature string, so near-dup sub-clusters sort contiguously and
+    # stay connected through edges that genuinely pass the threshold;
+    # the driver arm ranks the same strings once per call.
+    rpb = _MINHASH_PERMS // _LSH_BANDS
 
-            if len(a) == 0:
-                return spark.createDataFrame([], schema)
-            out = spark.createDataFrame(
-                pd.DataFrame({"doc_a": a, "doc_b": b, "est_jaccard": est}),
-                schema=schema,
-            )
-            # pass-through hint for connected_components: the pair
-            # arrays are already on the driver, so a CC consumer can
-            # skip the persist + collect round-trip (identical content
-            # by construction — the DataFrame was built FROM these
-            # arrays)
-            out._io_pairs_np = (a, b)
-            return out
-    bands = _sig_bands(sigs)
-    # pair shuffle carries ONLY (doc_a, doc_b): dedup the banded pairs
-    # first, then re-attach one signature per side (VERDICT r01 minor
-    # #5 — previously both 32-long arrays rode through the band join
-    # AND the dropDuplicates shuffle). Buckets over bucket_cap emit a
-    # sorted-neighborhood chain instead of a clique (r02 #2 / r04 #4);
-    # the chain's order key is the FULL 32-value signature string, so
-    # near-dup sub-clusters sort contiguously and stay connected
-    # through edges that genuinely pass the threshold.
-    _b = _sig_broadcaster(sigs)
-    sig_ord = sigs.select(
-        "doc_id",
-        F.concat_ws(
+    def driver_parts(vals):
+        smat = np.array(vals.tolist(), dtype=np.int64)
+        # int32 halves the rescore's gather bandwidth (minhash values
+        # are < 2^31 by construction; exact either way)
+        small = -(1 << 31) <= int(smat.min()) and int(smat.max()) < (1 << 31)
+        cm = smat.astype(np.int32) if small else smat
+
+        def chain_rank(rows):
+            # `__ord` of the distributed chain: Python str(int) == Spark's
+            # long-to-string cast, and the byte-wise 'S' sort == Spark's
+            # UTF8 binary compare (shorter prefix first)
+            strs = ["_".join(map(str, r)) for r in smat[rows].tolist()]
+            return _stable_rank(np.array(strs, dtype="S"))
+
+        def score(ia, ib):
+            est = _match_frac(cm, ia, ib)
+            return est, est >= threshold
+
+        bands = [smat[:, i * rpb : (i + 1) * rpb] for i in range(_LSH_BANDS)]
+        return bands, chain_rank, score
+
+    def spark_parts():
+        sig_str = F.concat_ws(
             "_", *[F.col("sig")[j].cast("string") for j in range(_MINHASH_PERMS)]
-        ).alias("__ord"),
-    )
-    pairs = _capped_bucket_pairs(
-        bands, ["band", "bh"], "doc_id", "doc_a", "doc_b", bucket_cap,
-        order_df=_b(sig_ord),
-    )
-    pairs = (
-        pairs.join(_b(sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))), "doc_a")
-        .join(_b(sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))), "doc_b")
-    )
-    est = _sig_est_jaccard()
-    return (
-        pairs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+        )
+        est = _sig_est_jaccard("va", "vb")
+        keep = F.col("est_jaccard") >= threshold
+        return _sig_bands(sigs), ["band", "bh"], sig_str, est, keep
+
+    return _near_dup_pairs(
+        sigs, "sig", bucket_cap, "est_jaccard double", driver_parts, spark_parts
     )
 
 
@@ -1140,77 +1074,49 @@ def simhash_near_dup_pairs(
     (index.go:71-74, dedup of posting hits); DuckDB oracle:
     webtext_sql.simhash_pairs_sql."""
     sh = _register_sig_cache(simhash64(docs, text_col), auto_release)
-    # driver fast path (r06, the _banded_pairs_numpy pattern): when the
-    # fingerprint table fits the broadcast gate, banding, bucket
-    # grouping, clique/chain emission, cross-band dedup and the exact
-    # Hamming rescore all run vectorized on the driver — SimHash's
-    # ~200k mostly-tiny buckets made the per-bucket mapInPandas loop
-    # SLOWER than the join path (5.5 vs 3.4-4.0 s at sf1, reverted),
-    # but a flat numpy pass over sorted band values has no per-bucket
-    # overhead at all (measured ~1 s). Same pair set: clique a < b at
-    # or under the cap, (fingerprint, id)-ordered consecutive chain
-    # above it (signed int64 order — the window's LongType ORDER BY),
-    # np.unique == the cross-band dropDuplicates, and popcount(xor) is
-    # the same integer bit_count the JVM computes. Above the gate the
-    # join path below is unchanged.
-    n_sh = getattr(sh, "_io_nrows", None)
-    if n_sh is not None and n_sh <= _SIG_BROADCAST_ROWS:
-        spdf = sh.select("doc_id", "simhash").toPandas()
-        spark = sh.sparkSession
-        schema = "doc_a long, doc_b long, hamming int"
-        if len(spdf) == 0:
-            return spark.createDataFrame([], schema)
-        ids = spdf["doc_id"].to_numpy(dtype=np.int64)
-        fps = spdf["simhash"].to_numpy(dtype=np.int64)
-        o = np.argsort(ids)
-        ids, fps = ids[o], fps[o]
-        res = _simhash_pairs_numpy(ids, fps, bucket_cap, int(max_hamming))
-        if res is not None:  # else: over _DRIVER_PAIRS_CAP, join path
-            a, b, ham = res
-            import pandas as pd
+    # Below the row gate the whole generation runs on the driver
+    # (_near_dup_pairs): SimHash's ~200k mostly-tiny buckets at sf1 made
+    # a per-bucket mapInPandas loop SLOWER than the join path (5.5 vs
+    # 3.4-4.0 s, reverted), while the flat numpy pass over sorted band
+    # values has no per-bucket overhead (measured ~1 s). Capped chains
+    # rank by the signed fingerprint — the window's LongType ORDER BY —
+    # and popcount(xor) is the same integer bit_count the JVM computes.
 
-            if len(a) == 0:
-                return spark.createDataFrame([], schema)
-            return spark.createDataFrame(
-                pd.DataFrame({"doc_a": a, "doc_b": b, "hamming": ham}),
-                schema=schema,
-            )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("bv"),
-            )
+    def driver_parts(vals):
+        fps = vals.to_numpy(dtype=np.int64)
+        u = fps.view(np.uint64)
+
+        def score(ia, ib):
+            ham = _popcount64(u[ia] ^ u[ib])
+            return ham, ham <= max_hamming
+
+        bands = [
+            ((u >> np.uint64(16 * i)) & np.uint64(0xFFFF))[:, None]
             for i in range(_SIMHASH_BANDS)
         ]
-    )
-    # NOTE r06: the per-bucket native pair generation used by minhash /
-    # embedding was tried here and REVERTED — SimHash's 4x16-bit
-    # banding yields ~200k mostly-tiny buckets at sf1, so the grouped
-    # Python loop cost more (5.5 s) than the join path it replaced
-    # (3.4-4.0 s); the join path's per-pair work (one long attach +
-    # bit_count) is already cheap.
-    bands = sh.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", "b.band", "b.bv"
-    )
-    _b = _sig_broadcaster(sh)
-    pairs = _capped_bucket_pairs(
-        bands, ["band", "bv"], "doc_id", "doc_a", "doc_b", bucket_cap,
-        order_df=_b(sh.select("doc_id", F.col("simhash").alias("__ord"))),
-    )
-    pairs = pairs.join(
-        _b(sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"))),
-        "doc_a",
-    ).join(
-        _b(sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"))),
-        "doc_b",
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int")
-    return (
-        pairs.select("doc_a", "doc_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        return bands, lambda rows: _stable_rank(fps[rows]), score
+
+    def spark_parts():
+        band_structs = F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("band"),
+                    F.shiftrightunsigned(F.col("simhash"), 16 * i)
+                    .bitwiseAND(F.lit(0xFFFF))
+                    .alias("bv"),
+                )
+                for i in range(_SIMHASH_BANDS)
+            ]
+        )
+        bands = sh.select("doc_id", F.explode(band_structs).alias("b")).select(
+            "doc_id", "b.band", "b.bv"
+        )
+        ham = F.bit_count(F.col("va").bitwiseXOR(F.col("vb"))).cast("int")
+        keep = F.col("hamming") <= max_hamming
+        return bands, ["band", "bv"], F.col("simhash"), ham, keep
+
+    return _near_dup_pairs(
+        sh, "simhash", bucket_cap, "hamming int", driver_parts, spark_parts
     )
 
 
@@ -1274,7 +1180,7 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
 # gram expression (measured 29 -> ~4 s at sf1, 50k docs). Both shapes
 # compute identical grams (same tokenization, first-occurrence
 # distinct, truncated short-doc gram) and identical pair sets.
-_NGRAM_INLINE_DOCS = int(os.environ.get("INSIDEOUT_NGRAM_INLINE_DOCS", "10000"))
+_NGRAM_INLINE_DOCS = 10_000
 # ... refined for ngram by TOKEN volume: the inline arm re-evaluates
 # the gram expression (~12us/token on this box) once per consumer, so
 # it loses to the one materialized pass well before the doc-count gate
@@ -1283,9 +1189,7 @@ _NGRAM_INLINE_DOCS = int(os.environ.get("INSIDEOUT_NGRAM_INLINE_DOCS", "10000"))
 # fixture 2.1 s inline vs 4.8 s materialized — there the pair volume,
 # not the gram cost, dominates). The token pre-count is one cheap
 # Catalyst agg and only runs for corpora already under the doc gate.
-_NGRAM_INLINE_TOKENS = int(
-    os.environ.get("INSIDEOUT_NGRAM_INLINE_TOKENS", "200000")
-)
+_NGRAM_INLINE_TOKENS = 200_000
 
 
 def ngram_jaccard_pairs(
@@ -1894,36 +1798,24 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
     return ((x * h01) >> np.uint64(56)).astype(np.int32)
 
 
-def _row_lookup(ids: np.ndarray, probes: np.ndarray) -> np.ndarray:
-    """Row indices of `probes` in sorted `ids` — a dense position map
-    when the id domain is compact (one O(max_id) table + one gather,
-    ~10x faster than searchsorted at 20M probes), binary search
-    otherwise."""
-    max_id = int(ids[-1])
-    if max_id < max(4 * len(ids), 1 << 20):
-        pos = np.empty(max_id + 1, dtype=np.intp)
-        pos[ids] = np.arange(len(ids), dtype=np.intp)
-        return pos[probes]
-    return np.searchsorted(ids, probes).astype(np.intp)
-
-
 # driver-side pair generation is additionally bounded by the CANDIDATE
 # count (the row gate alone does not bound it: a 10x-replicated corpus
 # multiplies every near-dup cluster's clique quadratically — measured
 # 368 s at a derived sf10 where sf1 takes ~5 s). Over this budget the
 # operator falls back to its distributed generation path — identical
 # pair set, executor-parallel work.
-_DRIVER_PAIRS_CAP = int(os.environ.get("INSIDEOUT_DRIVER_PAIRS_CAP", "40000000"))
+_DRIVER_PAIRS_CAP = 40_000_000
 
 
-def _grouped_sizes(order_key: np.ndarray) -> tuple:
-    """(order, starts, ends) grouping equal values of a 1-D key."""
-    n = len(order_key)
-    order = np.argsort(order_key, kind="stable")
-    sk = order_key[order]
+def _grouped_sizes(key: np.ndarray) -> tuple:
+    """(order, starts, ends) grouping equal rows of an (n, k) key
+    matrix; the groups partition `order`."""
+    n = len(key)
+    order = np.lexsort(key.T)
+    sk = key[order]
     boundary = np.empty(n, dtype=bool)
     boundary[0] = True
-    np.not_equal(sk[1:], sk[:-1], out=boundary[1:])
+    np.any(sk[1:] != sk[:-1], axis=1, out=boundary[1:])
     starts = np.flatnonzero(boundary)
     return order, starts, np.append(starts[1:], n)
 
@@ -1941,211 +1833,197 @@ def _capped_pair_count(sizes: np.ndarray, cap: int) -> int:
     return int((m * (m - 1) // 2).sum()) + chain
 
 
+def _stable_rank(keys: np.ndarray) -> np.ndarray:
+    """Position of each element in a stable sort of `keys`: ties keep
+    input order, which is id order for id-sorted rows."""
+    order = np.argsort(keys, kind="stable")
+    rank = np.empty(len(keys), dtype=np.int64)
+    rank[order] = np.arange(len(keys))
+    return rank
+
+
 def _clique_chain_pairs(
     ids: np.ndarray,
     order: np.ndarray,
     starts: np.ndarray,
     ends: np.ndarray,
     cap: int,
-    chain_sort,
+    rank: np.ndarray,
 ) -> tuple:
-    """Vectorized pair emission for one band's bucket grouping
-    (`order` groups bucket members contiguously; bucket b spans
-    order[starts[b]:ends[b]]). Buckets are processed by SIZE CLASS:
-    all size-m cliques become one (k, m) gather + row-sort + triu
-    fancy-index — a band with 200k tiny buckets costs a handful of
-    numpy calls instead of 200k Python iterations (measured 3-6.7 s
-    -> ~0.3 s for the sf1 SimHash band pass). Capped buckets (rare)
-    emit the (chain_sort-ordered) consecutive chain per bucket."""
+    """The pair set of `_capped_bucket_pairs` for one grouping into
+    buckets: bucket b holds rows order[starts[b]:ends[b]], and the
+    buckets partition `order`. Returns lists of (a, b) id arrays.
+
+    Buckets at or under `cap` (every bucket when cap < 0) emit their
+    clique, member ids ascending, a < b. All size-m cliques become one
+    (k, m) gather + row-sort + triu fancy-index, so a band with 200k
+    tiny buckets costs a handful of numpy calls instead of 200k Python
+    iterations (measured 3-6.7 s -> ~0.3 s for the sf1 SimHash band
+    pass). Buckets over `cap` emit the chain of consecutive members in
+    `rank` order, least/greatest oriented — every capped bucket in one
+    lexsort on (bucket, rank)."""
     outs_a: list = []
     outs_b: list = []
     sizes = ends - starts
-    multi = np.flatnonzero(sizes > 1)
-    if cap >= 0:
-        big = multi[sizes[multi] > cap]
-        multi = multi[sizes[multi] <= cap]
-    else:
-        big = np.empty(0, dtype=np.int64)
-    if len(multi):
-        ms = sizes[multi]
-        for m in np.unique(ms):
-            sel = multi[ms == m]
-            pos = starts[sel][:, None] + np.arange(int(m))
-            mem = ids[order[pos]]
-            mem.sort(axis=1)
-            iu, ju = np.triu_indices(int(m), 1)
-            outs_a.append(mem[:, iu].ravel())
-            outs_b.append(mem[:, ju].ravel())
-    for bi in big:
-        idxs = order[starts[bi] : ends[bi]]
-        chain = ids[chain_sort(idxs)]
-        outs_a.append(np.minimum(chain[:-1], chain[1:]))
-        outs_b.append(np.maximum(chain[:-1], chain[1:]))
+    capped = sizes > cap if cap >= 0 else np.zeros(len(sizes), dtype=bool)
+    multi = np.flatnonzero((sizes > 1) & ~capped)
+    ms = sizes[multi]
+    for m in np.unique(ms):
+        sel = multi[ms == m]
+        pos = starts[sel][:, None] + np.arange(int(m))
+        mem = ids[order[pos]]
+        mem.sort(axis=1)
+        iu, ju = np.triu_indices(int(m), 1)
+        outs_a.append(mem[:, iu].ravel())
+        outs_b.append(mem[:, ju].ravel())
+    if capped.any():
+        rows = order[np.repeat(capped, sizes)]
+        bucket = np.repeat(np.arange(int(capped.sum())), sizes[capped])
+        chain = ids[rows[np.lexsort((rank[rows], bucket))]]
+        same = bucket[1:] == bucket[:-1]
+        a, b = chain[:-1][same], chain[1:][same]
+        outs_a.append(np.minimum(a, b))
+        outs_b.append(np.maximum(a, b))
     return outs_a, outs_b
 
 
-def _simhash_pairs_numpy(
-    ids: np.ndarray, fps: np.ndarray, bucket_cap: int | None, max_hamming: int
-) -> tuple:
-    """Driver-side twin of the SimHash band self-join +
-    `_capped_bucket_pairs` + bit_count rescore (see the call site):
-    returns (doc_a, doc_b, hamming) for the exact post-dedup pair set,
-    or None when the capped candidate count exceeds _DRIVER_PAIRS_CAP.
-    ids sorted ascending, fps row-aligned int64 bit patterns."""
-    n = len(ids)
-    cap = -1 if bucket_cap is None else int(bucket_cap)
-    u = fps.view(np.uint64)
-
-    def chain_sort(idxs):
-        # chain order (signed fingerprint, id) — the window's LongType
-        # ORDER BY on (__ord, doc_id)
-        return idxs[np.lexsort((ids[idxs], fps[idxs]))]
-
-    groups: list = []
-    total = 0
-    for band in range(_SIMHASH_BANDS):
-        bv = ((u >> np.uint64(16 * band)) & np.uint64(0xFFFF)).astype(np.int64)
-        order, starts, ends = _grouped_sizes(bv)
-        groups.append((order, starts, ends))
-        total += _capped_pair_count(ends - starts, cap)
-    if total > _DRIVER_PAIRS_CAP:
-        return None  # caller falls back to the distributed path
-    outs_a: list = []
-    outs_b: list = []
-    for order, starts, ends in groups:
-        oa, ob = _clique_chain_pairs(ids, order, starts, ends, cap, chain_sort)
-        outs_a += oa
-        outs_b += ob
-    if not outs_a:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, empty, np.empty(0, dtype=np.int32)
-    a = np.concatenate(outs_a)
-    b = np.concatenate(outs_b)
-    if max(int(a.max()), int(b.max())) < (1 << 32) and int(a.min()) >= 0:
-        key = np.unique((a.astype(np.uint64) << np.uint64(32)) | b.astype(np.uint64))
-        a = (key >> np.uint64(32)).astype(np.int64)
-        b = (key & np.uint64(0xFFFFFFFF)).astype(np.int64)
-    else:  # pragma: no cover - >32-bit ids
-        st = np.unique(np.stack([a, b], axis=1), axis=0)
-        a, b = np.ascontiguousarray(st[:, 0]), np.ascontiguousarray(st[:, 1])
-    ia = _row_lookup(ids, a)
-    ib = _row_lookup(ids, b)
-    ham = _popcount64(u[ia] ^ u[ib])
-    keep = ham <= max_hamming
-    return a[keep], b[keep], ham[keep]
-
-
-def _banded_pairs_numpy(
-    ids: np.ndarray,
-    smat: np.ndarray,
-    bucket_cap: int | None,
-    threshold: float,
-) -> tuple:
-    """Driver-side twin of `_sig_bands` + `_bucket_pairs_arrow` +
-    est-rescore for a signature matrix that fits in memory (the
-    broadcast-gate bound): returns (doc_a, doc_b, est_jaccard) arrays —
-    the EXACT post-dedup pair set of the distributed path — or None
-    when the capped candidate count exceeds _DRIVER_PAIRS_CAP (the
-    caller then uses its distributed path).
-
-    Replication contract, piece by piece:
-    - bucket key: `_sig_bands` stringifies each band's value tuple,
-      which is injective, so grouping on the raw int64 tuples partitions
-      the docs identically (lexsort + row-diff boundaries);
-    - clique (n <= cap): member ids sorted ascending, all a < b pairs —
-      `np.triu_indices`, as in `_bucket_pairs_arrow`;
-    - chain (n > cap): members sorted by (full 32-value "_"-joined
-      signature STRING, id) — Python str compare == Spark UTF8 binary
-      compare for these ASCII digit/underscore strings — consecutive
-      pairs, min/max oriented;
-    - cross-band dedup: np.unique over packed (a, b) keys == the
-      distributed dropDuplicates;
-    - est_jaccard: matching-perm count / 32 in float64 — the identical
-      correctly-rounded double of the small-int ratio that the Catalyst
-      filter compares; filter est >= threshold commutes with dedup
-      (pair-intrinsic score).
-
-    ids MUST be sorted ascending with smat row-aligned."""
-    n, perms = smat.shape
-    rpb = perms // _LSH_BANDS
-    cap = -1 if bucket_cap is None else int(bucket_cap)
-    ord_strs: list = []
-
-    def chain_sort(idxs):
-        if not ord_strs:
-            ord_strs.append(["_".join(map(str, row)) for row in smat.tolist()])
-        os_ = ord_strs[0]
-        return np.asarray(
-            sorted(idxs, key=lambda t: (os_[t], ids[t])), dtype=np.int64
-        )
-
-    groups: list = []
-    total = 0
-    for band in range(_LSH_BANDS):
-        bv = smat[:, band * rpb : (band + 1) * rpb]
-        order = np.lexsort(bv.T[::-1])
-        sb = bv[order]
-        boundary = np.empty(n, dtype=bool)
-        boundary[0] = True
-        np.any(sb[1:] != sb[:-1], axis=1, out=boundary[1:])
-        starts = np.flatnonzero(boundary)
-        ends = np.append(starts[1:], n)
-        groups.append((order, starts, ends))
-        total += _capped_pair_count(ends - starts, cap)
-    if total > _DRIVER_PAIRS_CAP:
-        return None  # caller falls back to the distributed path
-    outs_a: list = []
-    outs_b: list = []
-    for order, starts, ends in groups:
-        oa, ob = _clique_chain_pairs(ids, order, starts, ends, cap, chain_sort)
-        outs_a += oa
-        outs_b += ob
-    if not outs_a:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, empty, np.empty(0, dtype=np.float64)
-    a = np.concatenate(outs_a)
-    b = np.concatenate(outs_b)
-    ia = _row_lookup(ids, a)
-    ib = _row_lookup(ids, b)
-    # match-count rescore BEFORE the cross-band dedup (a pair-intrinsic
-    # score commutes with dedup: identical pair => identical est =>
-    # identical keep), so the sort-based unique runs over survivors
-    # only. Tuned for this box's memory-bandwidth wall (measured
-    # 17.5 s -> ~2 s at sf1): int32 matrix (minhash values < 2^31 by
-    # construction — exact), 256k-pair chunks so the two gathered
-    # operand blocks stay ~32 MB each, and preallocated out= buffers
-    # instead of fresh temporaries per chunk. est arithmetic unchanged:
-    # integer match count, then one division by the power-of-two perm
-    # count — exact in float64, the identical double of the per-pair
-    # matches/32 ratio.
-    cm = smat.astype(np.int32) if int(smat.max()) < (1 << 31) else smat
-    est = np.empty(len(a), dtype=np.float64)
+def _match_frac(mat: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+    """Share of equal entries between rows `ia` and rows `ib` of `mat`:
+    an integer match count, then one division by the power-of-two
+    width — the identical double of the Catalyst matches/32. Chunked
+    for the memory-bandwidth wall (measured 17.5 s -> ~2 s at sf1):
+    256k-pair chunks keep the two gathered operand blocks ~32 MB each,
+    in preallocated out= buffers."""
+    width = mat.shape[1]
+    frac = np.empty(len(ia), dtype=np.float64)
     step = 1 << 18
-    bufa = np.empty((step, perms), dtype=cm.dtype)
-    bufb = np.empty((step, perms), dtype=cm.dtype)
-    eq = np.empty((step, perms), dtype=bool)
-    for s in range(0, len(a), step):
-        e = min(s + step, len(a))
+    bufa = np.empty((step, width), dtype=mat.dtype)
+    bufb = np.empty_like(bufa)
+    eq = np.empty((step, width), dtype=bool)
+    for s in range(0, len(ia), step):
+        e = min(s + step, len(ia))
         m = e - s
-        np.take(cm, ia[s:e], axis=0, out=bufa[:m])
-        np.take(cm, ib[s:e], axis=0, out=bufb[:m])
+        np.take(mat, ia[s:e], axis=0, out=bufa[:m])
+        np.take(mat, ib[s:e], axis=0, out=bufb[:m])
         np.equal(bufa[:m], bufb[:m], out=eq[:m])
-        est[s:e] = eq[:m].sum(axis=1)
-    est /= float(perms)
-    keep = est >= threshold
-    a, b, est = a[keep], b[keep], est[keep]
-    # cross-band dedup: pack when both sides fit in 32 bits (always for
-    # this engine's doc ids), lexicographic unique otherwise
-    if len(a) == 0:
-        return a, b, est
-    if max(int(a.max()), int(b.max())) < (1 << 32) and int(a.min()) >= 0:
-        _, first = np.unique(
-            (a.astype(np.uint64) << np.uint64(32)) | b.astype(np.uint64),
-            return_index=True,
+        frac[s:e] = eq[:m].sum(axis=1)
+    return frac / width
+
+
+def _driver_pairs(ids, band_keys, cap, chain_rank, score) -> tuple:
+    """Driver-side twin of `_capped_bucket_pairs` + rescore + the
+    cross-band dedup: returns (doc_a, doc_b, score) arrays — the EXACT
+    pair set and scores of the distributed arm — or None when the
+    capped candidate count exceeds _DRIVER_PAIRS_CAP (the caller then
+    runs that arm).
+
+    - `ids`: doc ids sorted ascending. The kernel works in row indices
+      and maps to ids once at the end: sorting rows sorts ids, and any
+      int64 id (negative, wide) works.
+    - `band_keys`: one row-aligned (n, k) key matrix per band; equal
+      rows <=> equal band keys of the distributed arm.
+    - `cap`: bucket_cap (None: no cap).
+    - `chain_rank(rows)`: int ranks of the capped-bucket rows in the
+      distributed chain's (`__ord`, id) order; called once, and only
+      when some bucket is over the cap.
+    - `score(ra, rb)`: (values, keep mask) per candidate. A
+      pair-intrinsic score commutes with the dedup (identical pair =>
+      identical score => identical keep), so it runs first and the
+      np.unique (== the distributed dropDuplicates) sees survivors only."""
+    n = len(ids)
+    cap = -1 if cap is None else int(cap)
+    groups = [_grouped_sizes(k) for k in band_keys]
+    if sum(_capped_pair_count(e - s, cap) for _, s, e in groups) > _DRIVER_PAIRS_CAP:
+        return None
+    rank = np.zeros(n, dtype=np.int64)
+    if cap >= 0:
+        capped = np.unique(
+            np.concatenate([o[np.repeat(e - s > cap, e - s)] for o, s, e in groups])
         )
-    else:  # pragma: no cover - >32-bit ids
-        _, first = np.unique(np.stack([a, b], axis=1), axis=0, return_index=True)
-    return a[first], b[first], est[first]
+        if len(capped):
+            rank[capped] = chain_rank(capped)
+    rows = np.arange(n)
+    outs_a: list = []
+    outs_b: list = []
+    for order, starts, ends in groups:
+        oa, ob = _clique_chain_pairs(rows, order, starts, ends, cap, rank)
+        outs_a += oa
+        outs_b += ob
+    ra = np.concatenate([*outs_a, rows[:0]])
+    rb = np.concatenate([*outs_b, rows[:0]])
+    vals, keep = score(ra, rb)
+    ra, rb, vals = ra[keep], rb[keep], vals[keep]
+    # row indices are < 2^32, so one packed uint64 key per pair
+    key = (ra.astype(np.uint64) << np.uint64(32)) | rb.astype(np.uint64)
+    _, first = np.unique(key, return_index=True)
+    return ids[ra[first]], ids[rb[first]], vals[first]
+
+
+def _near_dup_pairs(
+    sigs: DataFrame,
+    val_col: str,
+    bucket_cap: int | None,
+    score_field: str,
+    driver_parts,
+    spark_parts,
+) -> DataFrame:
+    """(doc_a, doc_b, score) pairs of a banded near-dup operator over
+    its (doc_id, `val_col`) signature table; `score_field` names the
+    score column and its type ("est_jaccard double"). Two arms,
+    identical pair sets and scores (pinned by the driver ==
+    distributed tests):
+
+    - Driver: at most _SIG_BROADCAST_ROWS rows. The table is
+      collected, sorted by id, and `_driver_pairs` runs on
+      `driver_parts(vals)` -> (band_keys, chain_rank, score). This
+      replaced a per-bucket mapInPandas shape that paid a collect_list
+      shuffle, serialized Arrow transport of every pair instance and a
+      pair shuffle (MinHash at sf1: 9.8 s vs ~3 s). The result carries
+      `_io_pairs_np`, the arrays it was built from, so
+      connected_components skips a persist + collect round-trip (only
+      this exact object has the attribute: equal content by
+      construction).
+    - Distributed: above the gate, for empty tables, or over the
+      candidate budget. `spark_parts()` -> (bands, key_cols, order_col,
+      score_col, keep): `_capped_bucket_pairs` over `bands` (capped
+      chains ordered by `order_col`), one value attached per side as
+      `va` / `vb` (broadcast under the size gate; the pair shuffle
+      carries only ids), then `score_col` in Catalyst, filtered by
+      `keep`. Built only here: constructing these frames and columns
+      costs ~0.4 s of driver time per call (8k docs, local[4])."""
+    n = getattr(sigs, "_io_nrows", None)
+    if n is None:
+        # persisted signature tables (the save_signatures contract): a
+        # count is metadata-cheap and callers reuse the frame
+        n = sigs._io_nrows = sigs.count()
+    score_name = score_field.split()[0]
+    if 0 < n <= _SIG_BROADCAST_ROWS:
+        import pandas as pd
+
+        pdf = sigs.select("doc_id", val_col).toPandas().sort_values("doc_id")
+        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        band_keys, chain_rank, score = driver_parts(pdf[val_col])
+        res = _driver_pairs(ids, band_keys, bucket_cap, chain_rank, score)
+        if res is not None:
+            a, b, vals = res
+            out = sigs.sparkSession.createDataFrame(
+                pd.DataFrame({"doc_a": a, "doc_b": b, score_name: vals}),
+                schema=f"doc_a long, doc_b long, {score_field}",
+            )
+            out._io_pairs_np = (a, b)
+            return out
+    bands, key_cols, order_col, score_col, keep = spark_parts()
+    _b = _sig_broadcaster(sigs)
+    pairs = _capped_bucket_pairs(
+        bands, key_cols, "doc_id", "doc_a", "doc_b", bucket_cap,
+        order_df=_b(sigs.select("doc_id", order_col.alias("__ord"))),
+    )
+    for side in ("a", "b"):
+        val = sigs.select(
+            F.col("doc_id").alias(f"doc_{side}"), F.col(val_col).alias(f"v{side}")
+        )
+        pairs = pairs.join(_b(val), f"doc_{side}")
+    return pairs.select("doc_a", "doc_b", score_col.alias(score_name)).filter(keep)
 
 
 def _bucket_pairs_arrow(
@@ -2155,27 +2033,19 @@ def _bucket_pairs_arrow(
     a_name: str,
     b_name: str,
     bucket_cap: int | None,
-    ord_col: str | None = None,
     rescore=None,
     extra_schema: str = "",
 ) -> DataFrame:
     """Id-ordered candidate pairs per LSH bucket, generated NATIVELY:
-    one tiny groupBy collects each bucket's member ids, then numpy
-    emits the clique (triu indices, n <= cap) or the sorted-id
-    consecutive chain (n > cap) per bucket — the exact pair set of
-    `_capped_bucket_pairs(..., order_df=None)` (clique pairs a < b;
-    chain pairs = consecutive members in id order, least/greatest
-    oriented), without the bucket self-join, the per-bucket window or
-    the stats re-join (r06, guide §4.2: at sf1 the join-based
-    generation of 7.2M embedding candidates took 11.8 s; the grouped
-    native pass replaces it with one 160k-row shuffle). The final
-    dropDuplicates matches the join path's cross-table dedup.
-
-    `ord_col` (optional) replays `_capped_bucket_pairs`' similarity-key
-    chain exactly: capped-bucket members are sorted by (ord, id) —
-    Python tuple sort == the window's (`__ord`, id) ORDER BY for the
-    ASCII band-string / integer order keys used here — and consecutive
-    members pair up least/greatest-oriented.
+    one tiny groupBy collects each bucket's member ids, then each Arrow
+    batch of buckets goes through `_clique_chain_pairs` with the id as
+    the chain rank — the exact pair set of
+    `_capped_bucket_pairs(..., order_df=None)`, without the bucket
+    self-join, the per-bucket window or the stats re-join (r06, guide
+    §4.2: at sf1 the join-based generation of 7.2M embedding candidates
+    took 11.8 s; the grouped native pass replaces it with one 160k-row
+    shuffle). The final dropDuplicates matches the join path's
+    cross-table dedup.
 
     `rescore` (optional, r06): `(a, b) -> (a', b', extra_cols_dict)` —
     a vectorized similarity rescore applied INSIDE the generation
@@ -2185,15 +2055,7 @@ def _bucket_pairs_arrow(
     carries only surviving pairs — at sf1 this turns the embedding
     dedup's 7.2M-row shuffle into a ~10k-row one. `extra_schema` names
     the extra output columns."""
-    import numpy as np
-
-    if ord_col is not None:
-        agg = F.collect_list(
-            F.struct(F.col(id_col).alias("i"), F.col(ord_col).alias("o"))
-        ).alias("__ids")
-    else:
-        agg = F.collect_list(id_col).alias("__ids")
-    grouped = bands.groupBy(*key_cols).agg(agg)
+    grouped = bands.groupBy(*key_cols).agg(F.collect_list(id_col).alias("__ids"))
     # bucket count is tiny (tables x 2^planes) and AQE coalesces the
     # groupBy output to one partition — spread the per-bucket pair
     # generation back across the cluster
@@ -2201,49 +2063,26 @@ def _bucket_pairs_arrow(
         bands.sparkSession.sparkContext.defaultParallelism
     )
     cap = -1 if bucket_cap is None else int(bucket_cap)
-    with_ord = ord_col is not None
 
     def run(batches):
         import pandas as pd
 
         for pdf in batches:
-            outs_a, outs_b = [], []
-            for ids in pdf["__ids"]:
-                if with_ord:
-                    arr = np.asarray([m["i"] for m in ids], dtype=np.int64)
-                else:
-                    arr = np.asarray(ids, dtype=np.int64)
-                n = len(arr)
-                if n < 2:
-                    continue
-                if 0 <= cap < n:
-                    if with_ord:
-                        chain = np.asarray(
-                            [
-                                m["i"]
-                                for m in sorted(ids, key=lambda m: (m["o"], m["i"]))
-                            ],
-                            dtype=np.int64,
-                        )
-                    else:
-                        chain = np.sort(arr)
-                    outs_a.append(np.minimum(chain[:-1], chain[1:]))
-                    outs_b.append(np.maximum(chain[:-1], chain[1:]))
-                else:
-                    s = np.sort(arr)
-                    iu, ju = np.triu_indices(n, 1)
-                    outs_a.append(s[iu])
-                    outs_b.append(s[ju])
+            if len(pdf) == 0:
+                continue
+            sizes = pdf["__ids"].map(len).to_numpy()
+            ids = np.concatenate(pdf["__ids"].to_list()).astype(np.int64)
+            ends = np.cumsum(sizes)
+            outs_a, outs_b = _clique_chain_pairs(
+                ids, np.arange(len(ids)), ends - sizes, ends, cap, ids
+            )
             if not outs_a:
                 continue
-            a = np.concatenate(outs_a)
-            bb = np.concatenate(outs_b)
+            a, bb, extra = np.concatenate(outs_a), np.concatenate(outs_b), {}
             if rescore is not None:
                 a, bb, extra = rescore(a, bb)
-                if len(a):
-                    yield pd.DataFrame({a_name: a, b_name: bb, **extra})
-            else:
-                yield pd.DataFrame({a_name: a, b_name: bb})
+            if len(a):
+                yield pd.DataFrame({a_name: a, b_name: bb, **extra})
 
     schema = f"{a_name} long, {b_name} long"
     if extra_schema:
@@ -2260,9 +2099,7 @@ def _bucket_pairs_arrow(
 # and sqrt/divide are correctly rounded in both runtimes), and the
 # round+threshold filter stays in Catalyst either way. Above the cap
 # the join path is kept — a corpus-scale matrix cannot be broadcast.
-_EMB_RESCORE_BROADCAST_BYTES = int(
-    os.environ.get("INSIDEOUT_EMB_RESCORE_BYTES", str(256 << 20))
-)
+_EMB_RESCORE_BROADCAST_BYTES = 256 << 20
 
 
 def embedding_near_dup_pairs(

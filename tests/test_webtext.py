@@ -597,7 +597,7 @@ def test_bmp_roundtrip_padding_and_topdown():
 
 
 def test_minhash_driver_pairs_match_distributed(spark, monkeypatch):
-    """The r06 driver-side banded generator (_banded_pairs_numpy) must
+    """The r06 driver-side banded generator (_driver_pairs) must
     produce EXACTLY the distributed join path's pair set — clique and
     chain arms both firing (cap=8 on a 200-doc near-dup cluster) —
     when the size gate flips between the two implementations."""
@@ -607,7 +607,7 @@ def test_minhash_driver_pairs_match_distributed(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     native_df = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
     native = {tuple(r) for r in native_df.collect()}
-    monkeypatch.setattr(webtext, "_SIG_DRIVER_ROWS", 0)
+    monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", 0)
     distributed_df = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
     distributed = {tuple(r) for r in distributed_df.collect()}
     # the driver arm hands its numpy pair arrays on; the join arm cannot
@@ -663,7 +663,7 @@ def test_driver_pairs_budget_falls_back(spark, monkeypatch):
 
 
 def test_simhash_driver_pairs_match_distributed(spark, monkeypatch):
-    """The r06 driver-side SimHash generator (_simhash_pairs_numpy)
+    """The r06 driver-side SimHash generator (_driver_pairs)
     must produce EXACTLY the distributed join path's pair set, chain
     arm included (cap=8 on a near-dup cluster)."""
     from insideout_spark.plans import webtext
@@ -684,6 +684,104 @@ def test_simhash_driver_pairs_match_distributed(spark, monkeypatch):
         ).collect()
     }
     assert native == distributed and len(native) > 0
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash"])
+def test_driver_pairs_negative_ids_match_distributed(spark, monkeypatch, op):
+    """All-negative doc_ids: the driver arm accepts every id the
+    distributed arm accepts, chain arm included (cap=8 on a 200-doc
+    near-dup cluster), with an identical non-empty pair set."""
+    from insideout_spark.plans import webtext
+
+    rows = [(-1 - i, text) for i, text in _near_dup_cluster_rows(200, 30)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def run():
+        if op == "minhash":
+            return webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
+        return webtext.simhash_near_dup_pairs(docs, max_hamming=10, bucket_cap=8)
+
+    driver_df = run()
+    driver = {tuple(r) for r in driver_df.collect()}
+    monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", 0)
+    distributed_df = run()
+    distributed = {tuple(r) for r in distributed_df.collect()}
+    assert hasattr(driver_df, "_io_pairs_np")
+    assert not hasattr(distributed_df, "_io_pairs_np")
+    assert driver == distributed and len(driver) > 0
+
+
+def test_minhash_chain_rank_is_signature_string_order(spark, monkeypatch):
+    """A capped bucket whose members' "_"-joined signature strings sort
+    differently from their numeric values (10 < 1234 < 123 < 55 < 9 as
+    strings): both arms chain them in (string, doc_id) order — the
+    distributed window's (`__ord`, doc_id) ORDER BY — never in numeric
+    order. Docs 6 and 7 share a whole signature, so their tie breaks
+    on the id."""
+    from insideout_spark.plans import webtext
+
+    # band 0 = (1, 1, 1, 1) for every doc: one bucket of 6 > cap 2; the
+    # first band-1 value carries the order; every other value is
+    # distinct per doc, so no other band collides (except 6 == 7)
+    lead = {4: 9, 3: 10, 2: 123, 1: 1234, 6: 55, 7: 55}
+    rows = []
+    for doc, v in lead.items():
+        rest_id = 6 if doc == 7 else doc
+        rest = [1_000_000 + rest_id * 100 + j for j in range(27)]
+        rows.append((doc, [1, 1, 1, 1, v] + rest))
+    sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+
+    def run():
+        return webtext.minhash_lsh_pairs(
+            None, signatures=sigs, bucket_cap=2, threshold=0.0
+        )
+
+    driver_df = run()
+    monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", 0)
+    distributed_df = run()
+    assert hasattr(driver_df, "_io_pairs_np")
+    assert not hasattr(distributed_df, "_io_pairs_np")
+    driver = {tuple(r) for r in driver_df.collect()}
+    assert driver == {tuple(r) for r in distributed_df.collect()}
+    # string order 10(3) 1234(1) 123(2) 55(6) 55(7) 9(4); the numeric
+    # order would chain 4-3-6-7-2-1 instead
+    assert {(a, b) for a, b, _ in driver} == {(1, 3), (1, 2), (2, 6), (6, 7), (4, 7)}
+
+
+def test_driver_pairs_kernel_matches_naive_clique_chain():
+    """`_driver_pairs` against a per-bucket Python replay of the
+    clique/chain semantics, over random band keys, caps (0, 1 and none
+    included), negative ids and chain-rank ties (broken by id)."""
+    from insideout_spark.plans import webtext
+
+    rng = np.random.default_rng(0)
+    for _ in range(200):
+        n = int(rng.integers(1, 60))
+        ids = np.sort(rng.choice(np.arange(-500, 500), n, replace=False))
+        keys = [
+            rng.integers(0, int(rng.integers(1, 6)), (n, int(rng.integers(1, 3))))
+            for _ in range(int(rng.integers(1, 4)))
+        ]
+        cap = [None, 0, 1, 2, 5, 100][int(rng.integers(0, 6))]
+        ordkey = rng.integers(0, 4, n)
+        a, b, _ = webtext._driver_pairs(
+            ids, keys, cap,
+            lambda rows: webtext._stable_rank(ordkey[rows]),
+            lambda ra, rb: (ra, np.ones(len(ra), dtype=bool)),
+        )
+        want = set()
+        for k in keys:
+            buckets: dict = {}
+            for r in range(n):
+                buckets.setdefault(tuple(k[r]), []).append(r)
+            for mem in buckets.values():
+                if cap is not None and len(mem) > cap:
+                    chain = sorted(mem, key=lambda r: (ordkey[r], ids[r]))
+                    edges = zip(chain, chain[1:])
+                else:
+                    edges = ((x, y) for i, x in enumerate(mem) for y in mem[i + 1:])
+                want |= {(min(ids[x], ids[y]), max(ids[x], ids[y])) for x, y in edges}
+        assert list(zip(a.tolist(), b.tolist())) == sorted(want)
 
 
 def test_emb_driver_pairs_match_distributed(spark, monkeypatch):
@@ -774,6 +872,45 @@ def test_ngram_block_cap_chain_semantics(spark):
     # big block -> chain 1-2-3-4 (sizes tie -> id order); 2-doc block
     # under cap -> clique kept
     assert capped == {(1, 2), (2, 3), (3, 4), (10, 11)}
+
+
+def test_ngram_family_materialized_arm_matches_inline(spark, monkeypatch, dup_docs):
+    """Gate flip: with the inline-Catalyst gates at 0 and the inline
+    helpers disabled, ngram_jaccard_pairs, bigram_topk and pmi_topk
+    must return the same rows from the materialized arm as the default
+    (inline) run, on the two planted near-dup corpora."""
+    from insideout_spark.plans import webtext
+
+    corpora = [
+        dup_docs,
+        spark.createDataFrame(
+            _near_dup_cluster_rows(60, 20), "doc_id long, text string"
+        ),
+    ]
+
+    def rows():
+        # row order after the top-k's context join is unspecified
+        return [
+            sorted(tuple(r) for r in df.collect())
+            for docs in corpora
+            for df in (
+                webtext.ngram_jaccard_pairs(docs),
+                webtext.bigram_topk(docs, k=20),
+                webtext.pmi_topk(docs, k=20, min_count=2),
+            )
+        ]
+
+    inline = rows()
+    assert all(len(r) > 0 for r in inline)
+
+    def disabled(*args, **kwargs):
+        raise AssertionError("inline arm ran")
+
+    monkeypatch.setattr(webtext, "_NGRAM_INLINE_DOCS", 0)
+    monkeypatch.setattr(webtext, "_NGRAM_INLINE_TOKENS", 0)
+    for name in ("_ngram_pairs_inline", "_bigram_topk_inline", "_pmi_topk_inline"):
+        monkeypatch.setattr(webtext, name, disabled)
+    assert rows() == inline
 
 
 def test_chain_cap_preserves_clusters_star_would_split(spark):

@@ -12,9 +12,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType
 
-from ..geo import extract as geo_extract
 from ..geo import grid as geo_grid
 from ..geo import s2 as geo_s2
 
@@ -40,19 +39,6 @@ def s2_cell_from_token(tok: pd.Series) -> pd.Series:
 
     ids = np.array([geo_s2.token_to_cell(t) for t in tok], dtype="uint64")
     return pd.Series(geo_s2.to_signed(ids))
-
-
-_COORD_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lng", DoubleType())]
-)
-
-
-@F.pandas_udf(_COORD_SCHEMA)
-def extract_coords(text: pd.Series) -> pd.DataFrame:
-    """Deterministic geo-token extraction from page text (FIXTURES.md §1);
-    NaN -> null when no token present."""
-    lat, lng = geo_extract.extract_coords_series(text)
-    return pd.DataFrame({"lat": lat, "lng": lng})
 
 
 def s2_parent_expr(cell_col: str, level: int):

@@ -3,29 +3,18 @@
 Per BASELINE.json input_hint, pages carry coordinates embedded in their
 text (FIXTURES.md §1: a ``geo:{lat},{lng}`` token). Extraction must be
 byte-identical per url across runs — so it is a pure function of the
-text bytes: first ``geo:`` token wins, full float syntax, no locale.
-This plays the role of the reference loadtester's point source
-(cmd/loadtester/main.go:106-107), made deterministic.
+text bytes: first ``geo:`` token wins, signed decimals in ASCII digits,
+no exponent, no locale, each parsed by Spark's correctly rounded string
+to double cast (`sources.pages.extract_points`). This plays the role of
+the reference loadtester's point source (cmd/loadtester/main.go:106-107),
+made deterministic.
 """
 
 from __future__ import annotations
 
-import re
-
-import numpy as np
-import pandas as pd
-
-GEO_RE = re.compile(r"geo:([-+]?\d+(?:\.\d+)?),([-+]?\d+(?:\.\d+)?)")
-
-
-def extract_coords_series(text: "pd.Series"):
-    """Vectorized extraction over a pandas Series of page text.
-
-    Returns (lat, lng) float64 Series (NaN when no geo token)."""
-    ext = text.str.extract(GEO_RE, expand=True)
-    lat = pd.to_numeric(ext[0], errors="coerce")
-    lng = pd.to_numeric(ext[1], errors="coerce")
-    return lat.astype(np.float64), lng.astype(np.float64)
+# Java's and RE2's \d are ASCII-only, so Spark's `regexp_extract` and the
+# DuckDB oracles match the same tokens.
+GEO_RE = r"geo:([-+]?\d+(?:\.\d+)?),([-+]?\d+(?:\.\d+)?)"
 
 
 def extract_text_from_html(html: bytes) -> str:

@@ -379,29 +379,53 @@ def _batch_shingle_keys(texts, k: int):
     return seg_starts.astype(np.int64), seg_counts.astype(np.int64), h_u
 
 
+# Shingle columns of one (32, columns) uint64 permutation matrix: each
+# Arrow batch is hashed in whole-document chunks whose k-shingle windows
+# sum to at most this (a longer document is a chunk of its own), so the
+# matrix stays ~512 MiB where a 65536-record batch of ~300-char
+# documents built ~5 GB. A batch of ~7k such documents is one chunk.
+_MINHASH_CHUNK_SHINGLES = 1 << 21
+
+
+def _doc_chunks(texts, k: int, budget: int):
+    """[lo, hi) document ranges of `texts` under `budget` k-shingle
+    windows each (short texts are padded to one window)."""
+    windows = np.array([max(len(t.encode("utf-8")), k) - k + 1 for t in texts], dtype=np.int64)
+    ends = np.cumsum(windows)
+    bounds = [0]
+    while bounds[-1] < len(texts):
+        lo = bounds[-1]
+        done = int(ends[lo - 1]) if lo else 0
+        hi = int(np.searchsorted(ends, done + budget, side="right"))
+        bounds.append(max(hi, lo + 1))
+    return zip(bounds[:-1], bounds[1:])
+
+
 def minhash_signatures(docs: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
     """(doc_id, sig: array<long>) — 32-perm MinHash over k-char shingles.
     (a*h + b) mod (2^31-1): all products < 2^62, exact in uint64.
     Batch-vectorized (r06): one rolling-hash pass + one (32, N) perm
     matrix + minimum.reduceat per doc, instead of a per-doc numpy
-    round-trip; identical values (min over the same distinct hashes)."""
+    round-trip; identical values (min over the same distinct hashes).
+    N is bounded per chunk of whole documents (_MINHASH_CHUNK_SHINGLES);
+    a signature depends only on its own document, so chunking leaves
+    every value unchanged."""
     a, b = _minhash_params()
+    budget = _MINHASH_CHUNK_SHINGLES  # read on the driver, shipped in the closure
 
     def run(batches):
         import pandas as pd
 
         for pdf in batches:
             texts = _texts(pdf[text_col])
-            if not texts:
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": []})
-                continue
-            starts, counts, h_u = _batch_shingle_keys(texts, k)
-            perms = (a[:, None] * h_u[None, :] + b[:, None]) % np.uint64(_P31)
-            mins = np.minimum.reduceat(perms, starts, axis=1)  # (32, n_docs)
-            sig_mat = mins.T.astype(np.int64)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sig": list(sig_mat)}
-            )
+            sig = np.empty((len(texts), _MINHASH_PERMS), dtype=np.int64)
+            for lo, hi in _doc_chunks(texts, k, budget):
+                starts, _counts, h_u = _batch_shingle_keys(texts[lo:hi], k)
+                perms = a[:, None] * h_u[None, :]
+                perms += b[:, None]
+                perms %= np.uint64(_P31)
+                sig[lo:hi] = np.minimum.reduceat(perms, starts, axis=1).T
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": list(sig)})
 
     return ensure_parallel(docs.select("doc_id", text_col), "doc_id").mapInPandas(
         run, schema="doc_id long, sig array<long>"

@@ -20,13 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from ..geo.extract import GEO_RE
 
 # six golden stab points (FIXTURES.md §4; tree cases 1-4, shape cases 5-6)
 GOLDEN_POINTS = [
@@ -165,34 +165,34 @@ def synth_skewed_docs(
     return docs.unionByName(planted)
 
 
-POINTS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("lat", DoubleType(), True),
-        StructField("lng", DoubleType(), True),
-    ]
-)
+def select_points(pages: DataFrame, *keep: str) -> DataFrame:
+    """pages -> (*keep, lat, lng) for the pages whose text carries a geo
+    token; pages without one are dropped.
+
+    Pure Catalyst, the DuckDB oracles' own expression:
+    `regexp_extract(text, GEO_RE, 1|2)` cast to double. `try_cast`
+    because ANSI mode (the Spark 4 default) raises on `CAST('' AS
+    DOUBLE)`, which is what `regexp_extract` returns on no match; the
+    not-null filter then drops those pages. Spark's cast is correctly
+    rounded at any mantissa length, like DuckDB's."""
+    lat, lng = (F.regexp_extract("text", GEO_RE, g).try_cast("double") for g in (1, 2))
+    return pages.select(*keep, lat.alias("lat"), lng.alias("lng")).where(
+        F.col("lat").isNotNull() & F.col("lng").isNotNull()
+    )
 
 
 def extract_points(pages: DataFrame) -> DataFrame:
-    """pages -> (url, lat, lng) via the deterministic text extractor.
+    """pages -> (url, lat, lng) via the deterministic text extractor
+    (`select_points`).
 
-    Extraction + the no-coordinate filter run in ONE mapInPandas stage:
-    a scalar-UDF + filter formulation makes Catalyst collapse the
-    projection and evaluate the UDF twice (observed in .explain)."""
-    from ..geo.extract import extract_coords_series
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            lat, lng = extract_coords_series(pdf["text"])
-            keep = lat.notna() & lng.notna()
-            yield pd.DataFrame(
-                {"url": pdf["url"][keep], "lat": lat[keep], "lng": lng[keep]}
-            )
-
-    return pages.select("url", "text").mapInPandas(run, schema=POINTS_SCHEMA)
+    No Python stage on purpose: on a 4-core local[4] VM every Python
+    task pays ~0.25 s before its UDF runs, ~80% of it in the worker's
+    `setup_spark_files` -> `importlib.invalidate_caches`, which re-reads
+    the zip directories of pyspark.zip, py4j and the spark-core jar on
+    the worker PYTHONPATH for every task. The extraction itself is ~10
+    ms per 5k texts, so a pandas pass here would cost the flagship one
+    such set-up per task on top of the fused stab's."""
+    return select_points(pages, "url")
 
 
 def derive_points_from_events(events: DataFrame) -> DataFrame:

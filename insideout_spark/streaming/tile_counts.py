@@ -2,9 +2,11 @@
 
 Beyond the stateless streaming stab join (stream_pip.py), this is the
 stateful streaming pattern the engine needs for live tile dashboards:
-pages stream -> coordinate extraction -> grid-tile assignment (pure
-Catalyst) -> event-time windowed counts per tile with a WATERMARK so
-late pages update the right window and state is eventually dropped.
+pages stream -> coordinate extraction (`sources.pages.select_points`)
+-> grid-tile assignment -> event-time windowed counts per tile with a
+WATERMARK so late pages update the right window and state is
+eventually dropped. Every stage is Catalyst: the query has no Python
+stage.
 (The reference has no streaming at all — SURVEY.md §2.9.)
 """
 
@@ -15,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import grid_cell_expr
 from ..geo import grid as geo_grid
+from ..sources.pages import select_points
 
 
 def tile_count_stream(
@@ -26,26 +29,7 @@ def tile_count_stream(
     """(window, grid_cell, n_pages) streaming aggregation keyed by the
     page's event time (warc_ts). Append-mode emits a window once the
     watermark passes — late pages within the watermark still count."""
-    def run(batches):
-        import pandas as pd
-
-        from ..geo.extract import extract_coords_series
-
-        for pdf in batches:
-            lat, lng = extract_coords_series(pdf["text"])
-            keep = lat.notna() & lng.notna()
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"][keep],
-                    "warc_ts": pdf["warc_ts"][keep],
-                    "lat": lat[keep],
-                    "lng": lng[keep],
-                }
-            )
-
-    pts = pages_stream.select("url", "warc_ts", "text").mapInPandas(
-        run, schema="url string, warc_ts timestamp, lat double, lng double"
-    ).withWatermark("warc_ts", watermark)
+    pts = select_points(pages_stream, "warc_ts").withWatermark("warc_ts", watermark)
     cells = pts.withColumn("grid_cell", grid_cell_expr("lat", "lng", grid_res))
     return (
         cells.groupBy(F.window("warc_ts", window).alias("w"), "grid_cell")

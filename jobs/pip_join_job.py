@@ -40,10 +40,8 @@ def main(argv=None) -> None:
     ap.add_argument(
         "--points",
         help="parquet path with pre-extracted (url, lat, lng) points — "
-        "skips the Arrow extraction stage so the measured job is the "
-        "pure-JVM stab (the bench.py scaling-block methodology; on a "
-        "real cluster extraction scales per-executor, but this "
-        "single-VM sandbox serializes Arrow transport globally)",
+        "skips the text extraction so the measured job is the stab "
+        "alone (the bench.py scaling-block methodology)",
     )
     ap.add_argument("--pages-n", type=int, default=100_000, help="synthesize N pages instead")
     ap.add_argument("--out", required=True)

@@ -264,3 +264,50 @@ def test_normalize_text_zero_shuffle(spark):
     assert "Exchange" not in p
     for py in ("ArrowEval", "BatchEvalPython", "InPandas"):
         assert py not in p
+
+
+_PY_STAGES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _text_pages(spark):
+    from insideout_spark.sources.pages import GOLDEN_POINTS
+
+    return spark.createDataFrame(
+        [
+            (f"https://example.org/{i:08d}", dt.datetime(2024, 1, 1, 0, i),
+             f"page {i} geo:{la:.7f},{ln:.7f}")
+            for i, (la, ln) in enumerate(GOLDEN_POINTS)
+        ],
+        "url string, warc_ts timestamp, text string",
+    )
+
+
+def test_extract_points_no_python(spark):
+    """Coordinate extraction is Catalyst: every Python stage costs a
+    worker set-up per task, more than the parse itself."""
+    from insideout_spark.sources.pages import extract_points
+
+    p = _plan(extract_points(_text_pages(spark)))
+    for py in _PY_STAGES:
+        assert py not in p
+
+
+def test_pip_join_default_one_python_stage(spark, houat_index):
+    """The flagship op (extract -> default fused stab) crosses into
+    Python exactly once: the stab's own Arrow pass."""
+    from insideout_spark.plans.pip_join import pip_join
+    from insideout_spark.sources.pages import extract_points
+
+    p = _plan(pip_join(extract_points(_text_pages(spark)), houat_index))
+    assert p.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
+def test_tile_count_stream_no_python(spark):
+    """Streaming tile rollups (run here on a batch frame, where the
+    watermark is a no-op) have no Python stage."""
+    from insideout_spark.streaming.tile_counts import tile_count_stream
+
+    p = _plan(tile_count_stream(_text_pages(spark)))
+    for py in _PY_STAGES:
+        assert py not in p

@@ -67,6 +67,38 @@ def test_minhash_estimates_jaccard(spark, dup_docs):
     assert sigs[100] == sigs[103]  # identical docs -> identical signatures
 
 
+def test_minhash_signatures_chunked_match_unchunked(spark, dup_docs, monkeypatch):
+    """A batch hashed in whole-document chunks under a small shingle
+    budget gives bit-identical signatures: the same as one chunk per
+    batch and as a per-document numpy reference. The corpus has empty,
+    NULL, shorter-than-k and non-ASCII texts, and documents longer than
+    the budget (a chunk of their own)."""
+    extra = spark.createDataFrame(
+        [(200, ""), (201, None), (202, "abc"), (203, "été ünïcode ﬁ 東京 " * 5),
+         (204, "long " * 80)],
+        "doc_id long, text string",
+    )
+    docs = dup_docs.unionByName(extra).coalesce(1)  # one batch, many chunks
+
+    def sigs(budget):
+        monkeypatch.setattr(webtext, "_MINHASH_CHUNK_SHINGLES", budget)
+        return {r["doc_id"]: list(r["sig"]) for r in webtext.minhash_signatures(docs).collect()}
+
+    texts = [r["text"] or "" for r in docs.orderBy("doc_id").collect()]
+    chunks = list(webtext._doc_chunks(texts, 5, 120))
+    assert len(chunks) > 10 and any(hi - lo == 1 for lo, hi in chunks)
+    assert chunks[0][0] == 0 and chunks[-1][1] == len(texts)
+    assert all(a[1] == b[0] for a, b in zip(chunks, chunks[1:]))
+
+    chunked = sigs(120)
+    assert chunked == sigs(1 << 62)
+    a, b = webtext._minhash_params()
+    for r in docs.collect():
+        h = webtext._shingle_hashes(r["text"] or "", 5)
+        want = ((a[:, None] * h[None, :] + b[:, None]) % np.uint64(webtext._P31)).min(axis=1)
+        assert chunked[r["doc_id"]] == want.astype(np.int64).tolist(), r["doc_id"]
+
+
 def test_minhash_lsh_finds_near_dups(spark, dup_docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]

@@ -16,6 +16,10 @@ until a function is actually used):
 
 from __future__ import annotations
 
+from insideout_spark import _worker
+
+_worker.install()
+
 _EXPORTS = {
     "build_index": "insideout_spark.plans.index_build",
     "save_index": "insideout_spark.plans.index_build",

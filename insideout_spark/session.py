@@ -7,6 +7,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """`SPARK_DRIVER_MEMORY`, else min(24g, 60% of physical RAM).
+
+    In local mode the one JVM hosts the driver AND every executor thread,
+    so the heap is sized to the machine (guide §5). 24g on a 128 GiB box
+    left headroom for 32 concurrent tasks' sort/agg buffers without
+    old-gen GC thrash (with 8g, repeated dedup_components degraded
+    10 -> 54 s as the heap filled). On a smaller host without swap a 24g
+    heap invites an OOM kill where there should be GC, hence the RAM cap.
+    On a real cluster spark.executor.memory governs the workers and this
+    value is irrelevant to data work."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        ram = 0
+    mb = int(ram * 0.6) >> 20
+    return f"{mb}m" if 0 < mb < 24 << 10 else "24g"
+
+
 def get_spark(app_name: str = "insideout-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Session with AQE (runtime re-plan + skew-join splitting), Arrow
@@ -22,15 +44,7 @@ def get_spark(app_name: str = "insideout-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        # local-mode default: the ONE JVM hosts the driver AND every
-        # executor thread, so size it to the machine, not to a cluster
-        # driver (guide §5). 24g on this 128 GiB box leaves headroom
-        # for 32 concurrent tasks' sort/agg buffers plus per-call
-        # materializations without old-gen GC thrash (measured: with 8g
-        # repeated dedup_components degraded 10 -> 54 s as the heap
-        # filled). On a real cluster spark.executor.memory governs the
-        # workers and this value is irrelevant to data work.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

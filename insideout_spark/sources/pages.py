@@ -185,13 +185,14 @@ def extract_points(pages: DataFrame) -> DataFrame:
     """pages -> (url, lat, lng) via the deterministic text extractor
     (`select_points`).
 
-    No Python stage on purpose: on a 4-core local[4] VM every Python
-    task pays ~0.25 s before its UDF runs, ~80% of it in the worker's
-    `setup_spark_files` -> `importlib.invalidate_caches`, which re-reads
-    the zip directories of pyspark.zip, py4j and the spark-core jar on
-    the worker PYTHONPATH for every task. The extraction itself is ~10
-    ms per 5k texts, so a pandas pass here would cost the flagship one
-    such set-up per task on top of the fused stab's."""
+    No Python stage on purpose: each Python task carries fixed worker
+    set-up, and the extraction itself is ~10 ms per 5k texts. Most of
+    that set-up was `setup_spark_files` -> `importlib.invalidate_caches`
+    re-reading every zip directory on the worker path (0.25-0.28 s per
+    task on a 4-core local[4] VM); `insideout_spark._worker` skips the
+    re-read for unchanged archives, so a trivial 4-task `mapInPandas`
+    takes 0.22-0.26 s instead of 0.71-0.81 s (median), still more than
+    this parse costs in the JVM."""
     return select_points(pages, "url")
 
 

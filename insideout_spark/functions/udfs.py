@@ -33,14 +33,6 @@ def s2_token(cell: pd.Series) -> pd.Series:
     return pd.Series([geo_s2.token(c) for c in cells])
 
 
-@F.pandas_udf(LongType())
-def s2_cell_from_token(tok: pd.Series) -> pd.Series:
-    import numpy as np
-
-    ids = np.array([geo_s2.token_to_cell(t) for t in tok], dtype="uint64")
-    return pd.Series(geo_s2.to_signed(ids))
-
-
 def s2_parent_expr(cell_col: str, level: int):
     """Catalyst expression for the S2 ancestor at `level` — pure int64
     bit math (reference storage/bbolt/storage.go:242 Parent), JVM-side,
@@ -48,12 +40,6 @@ def s2_parent_expr(cell_col: str, level: int):
     new_lsb = 1 << (2 * (geo_s2.MAX_LEVEL - level))
     # (id & -new_lsb) | new_lsb in two's complement
     return F.expr(f"(({cell_col} & {-new_lsb}L) | {new_lsb}L)")
-
-
-def s2_ancestors_array(cell_col: str, min_level: int, max_level: int):
-    """Array of ancestors for the stab join's point-side explode
-    (SURVEY.md §2.3 J1). All JVM-side."""
-    return F.array(*[s2_parent_expr(cell_col, lv) for lv in range(min_level, max_level + 1)])
 
 
 def grid_cell_expr(lat_col, lng_col, res: int):

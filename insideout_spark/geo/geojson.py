@@ -13,10 +13,6 @@ from __future__ import annotations
 import gzip
 import json
 
-import numpy as np
-
-from . import s2
-
 
 def parse_feature_collection(data):
     """Parse GeoJSON FeatureCollection (str / bytes, optionally gzip like
@@ -83,26 +79,6 @@ def _prop_to_str(v):
     if isinstance(v, float):
         return repr(v)
     return str(v)
-
-
-def s2_cells_to_geojson(cell_ids):
-    """S2 cells -> GeoJSON FeatureCollection string with one closed
-    polygon per cell (reference server/debug/web.go:47-77: 4 vertices +
-    duplicated first vertex)."""
-    cell_ids = np.asarray(cell_ids, dtype=np.uint64)
-    lats, lngs = s2.cell_vertices_latlng(cell_ids)
-    feats = []
-    for k in range(len(cell_ids)):
-        ring = [[float(lngs[k, c]), float(lats[k, c])] for c in range(4)]
-        ring.append(ring[0])
-        feats.append(
-            {
-                "type": "Feature",
-                "properties": {"token": s2.token(cell_ids[k])},
-                "geometry": {"type": "Polygon", "coordinates": [ring]},
-            }
-        )
-    return json.dumps({"type": "FeatureCollection", "features": feats})
 
 
 def ring_to_geojson_feature(ring, properties=None):

@@ -40,15 +40,3 @@ def supersede(key: str, obj):
             pass
     old.append(obj)
     return obj
-
-
-def release_all() -> None:
-    """Release every registered materialization (test teardown /
-    explicit end-of-pipeline hook)."""
-    for old in _REG.values():
-        while old:
-            o = old.pop()
-            try:
-                o.unpersist()
-            except Exception:  # pragma: no cover - session already stopped
-                pass

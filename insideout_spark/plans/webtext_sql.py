@@ -150,14 +150,14 @@ def capped_pairs_sql(
     a_name: str,
     b_name: str,
     bucket_cap: int | None,
-    order_cte: str | None = None,
+    order_cte: str,
 ) -> str:
     """SQL twin of webtext._capped_bucket_pairs: candidate pairs from a
     bucket self-join where buckets over `bucket_cap` emit a
     sorted-neighborhood CHAIN — consecutive members in (__ord, id)
     order — instead of the full clique (VERDICT r04 #4; was a min-id
     star through r04). `order_cte` names a CTE providing
-    ({id_col}, __ord); omitted, the chain orders by id alone.
+    ({id_col}, __ord).
     Mirroring the cap in the oracle means the driver gate exercises
     the cap LOGIC itself (not just 'cap never fires at gate scale')."""
     keys = " AND ".join(f"l.{c} = r.{c}" for c in key_cols)
@@ -171,12 +171,6 @@ def capped_pairs_sql(
     skeys = " AND ".join(f"s.{c} = x.{c}" for c in key_cols)
     stats = f"(SELECT {gkeys}, count(*) AS __bn FROM {bands_cte} GROUP BY {gkeys})"
     part = ", ".join(f"x.{c}" for c in key_cols)
-    if order_cte is not None:
-        ord_join = f" JOIN {order_cte} o ON o.{id_col} = x.{id_col}"
-        ord_by = f"o.__ord, x.{id_col}"
-    else:
-        ord_join = ""
-        ord_by = f"x.{id_col}"
     return (
         "SELECT DISTINCT * FROM ("
         f"SELECT l.{id_col} AS {a_name}, r.{id_col} AS {b_name} "
@@ -187,8 +181,10 @@ def capped_pairs_sql(
         f"SELECT least(__prev, {id_col}) AS {a_name}, "
         f"greatest(__prev, {id_col}) AS {b_name} FROM ("
         f"SELECT x.{id_col} AS {id_col}, "
-        f"lag(x.{id_col}) OVER (PARTITION BY {part} ORDER BY {ord_by}) AS __prev "
-        f"FROM {bands_cte} x JOIN {stats} s ON {skeys}{ord_join} "
+        f"lag(x.{id_col}) OVER (PARTITION BY {part} "
+        f"ORDER BY o.__ord, x.{id_col}) AS __prev "
+        f"FROM {bands_cte} x JOIN {stats} s ON {skeys} "
+        f"JOIN {order_cte} o ON o.{id_col} = x.{id_col} "
         f"WHERE s.__bn > {int(bucket_cap)}"
         ") WHERE __prev IS NOT NULL)"
     )
@@ -449,8 +445,8 @@ def embedding_near_dup_sql(
     bucket_cap: int | None = 1024,
 ) -> str:
     """Oracle for webtext.embedding_near_dup_pairs: same literal
-    hyperplanes / bucket bits / chain-capped pair join (id-ordered,
-    matching the Spark side) / rounded cosine."""
+    hyperplanes / bucket bits / chain-capped pair join (ordered by the
+    id, matching the Spark side) / rounded cosine."""
     planes = webtext.lsh_planes(n_tables, n_planes, dim)
     selects = []
     for t in range(n_tables):
@@ -462,12 +458,14 @@ def embedding_near_dup_sql(
         selects.append(f"SELECT vec_id, {t} AS tbl, {bits} AS bucket FROM e")
     b = " UNION ALL ".join(selects)
     pairs = capped_pairs_sql(
-        "b", ("tbl", "bucket"), "vec_id", "vec_a", "vec_b", bucket_cap
+        "b", ("tbl", "bucket"), "vec_id", "vec_a", "vec_b", bucket_cap,
+        order_cte="ordk",
     )
     return (
         f"WITH e AS (SELECT vec_id, "
         f"{_quant_list_sql('CAST(embedding AS DOUBLE[])')} AS v FROM {table}), "
         f"b AS ({b}), "
+        "ordk AS (SELECT vec_id, vec_id AS __ord FROM e), "
         f"pairs AS ({pairs}), "
         "scored AS (SELECT p.vec_a, p.vec_b, "
         f"ROUND(list_dot_product(ea.v, eb.v) / "

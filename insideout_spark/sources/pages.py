@@ -194,16 +194,3 @@ def extract_points(pages: DataFrame) -> DataFrame:
     takes 0.22-0.26 s instead of 0.71-0.81 s (median), still more than
     this parse costs in the JVM."""
     return select_points(pages, "url")
-
-
-def derive_points_from_events(events: DataFrame) -> DataFrame:
-    """Deterministic points from the driver's TPC-H-ish `events` table
-    (FIXTURES.md §6) — plain mod arithmetic so a DuckDB oracle can
-    reproduce it exactly in ANSI SQL (see __spark_entry__.POINTS_SQL)."""
-    lat0, lat1, lng0, lng1 = FRANCE_BBOX
-    nlat, nlng = 997, 1009  # co-prime grids avoid on-edge coincidences
-    return events.select(
-        F.col("event_id").cast("long").alias("point_id"),
-        (F.lit(lat0) + (F.col("event_id") % nlat) * F.lit((lat1 - lat0) / nlat)).alias("lat"),
-        (F.lit(lng0) + (F.col("event_id") % nlng) * F.lit((lng1 - lng0) / nlng)).alias("lng"),
-    )

@@ -238,13 +238,3 @@ def rects_sql_predicates(loop_rows):
             )
         )
     return out
-
-
-def dump_geojson(loop_rows) -> str:
-    """loop rows -> GeoJSON FeatureCollection string (inverse transform,
-    reference tools.go:156-170)."""
-    feats = [
-        geo_geojson.ring_to_geojson_feature(r["ring"], r.get("properties"))
-        for r in loop_rows
-    ]
-    return json.dumps({"type": "FeatureCollection", "features": feats})

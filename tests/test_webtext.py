@@ -816,32 +816,84 @@ def test_driver_pairs_kernel_matches_naive_clique_chain():
         assert list(zip(a.tolist(), b.tolist())) == sorted(want)
 
 
-def test_emb_driver_pairs_match_distributed(spark, monkeypatch):
-    """The r06 gated native embedding generator (_bucket_pairs_arrow +
-    broadcast rescore) must produce EXACTLY the corpus-scale join
-    path's pair set, chain arm included (cap=8, threshold -1 keeps the
-    full candidate structure comparable). A fully driver-side variant
-    (_emb_pairs_numpy, the minhash pattern) was tried and REVERTED:
-    the 64-d dot rescore over millions of candidates is memory-bound
-    and parallelizes in workers (2.4-3.7 s) but not on one driver core
-    (8.3 s measured at sf1)."""
+def _driver_pairs_spy(monkeypatch):
+    """Record every `_driver_pairs` call of the pair engine; a call
+    that returns None (over the candidate budget) is recorded too."""
+    from insideout_spark.plans import webtext
+
+    calls = []
+    real = webtext._driver_pairs
+
+    def spy(*args):
+        calls.append(len(args[0]))
+        return real(*args)
+
+    monkeypatch.setattr(webtext, "_driver_pairs", spy)
+    return calls
+
+
+@pytest.mark.parametrize("ids", ["sf001", "negative_ids"])
+def test_emb_driver_pairs_match_distributed(spark, monkeypatch, ids):
+    """The embedding operator runs on the banded pair engine: its
+    driver arm (`_driver_pairs`, float32-gathered exact dot products)
+    and its distributed arm (bucket self-join + Catalyst cosine) give
+    EXACTLY the same rows, chain arm included (cap=8 over 16 buckets
+    of 500 vectors; threshold -1 keeps every candidate). All-negative
+    vec_ids reverse the id order the chain follows. The driver arm
+    replaced a worker-side broadcast rescore: on a 4-core VM, min of 5
+    alternating reps, sf0.1 went 0.98 s -> 0.51 s and a derived
+    20k-vector sf1 4.94 s -> 4.20 s; at 14k vectors (35M candidates)
+    the worker rescore crashed its Python workers."""
     from insideout_spark.plans import webtext
 
     embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    native = {
-        tuple(r)
-        for r in webtext.embedding_near_dup_pairs(
-            embs, threshold=-1.0, bucket_cap=8
-        ).collect()
-    }
-    monkeypatch.setattr(webtext, "_EMB_RESCORE_BROADCAST_BYTES", 0)
-    distributed = {
-        tuple(r)
-        for r in webtext.embedding_near_dup_pairs(
-            embs, threshold=-1.0, bucket_cap=8
-        ).collect()
-    }
-    assert native == distributed and len(native) > 0
+    if ids == "negative_ids":
+        embs = embs.withColumn("vec_id", -1 - F.col("vec_id"))
+
+    def run():
+        return {
+            tuple(r)
+            for r in webtext.embedding_near_dup_pairs(
+                embs, threshold=-1.0, bucket_cap=8
+            ).collect()
+        }
+
+    calls = _driver_pairs_spy(monkeypatch)
+    driver = run()
+    assert calls == [500]
+    monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", 0)
+    distributed = run()
+    assert calls == [500]
+    assert driver == distributed and len(driver) > 0
+
+
+def test_near_dup_driver_arm_byte_gate(spark, monkeypatch):
+    """The driver arm also needs the rows to fit _SIG_BROADCAST_BYTES:
+    just under n * dim * 8 sends embeddings to the distributed arm,
+    while a small MinHash frame (128 B rows) stays on the driver."""
+    from insideout_spark.plans import webtext
+
+    embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    monkeypatch.setattr(webtext, "_SIG_BROADCAST_BYTES", 500 * 64 * 8 - 1)
+    calls = _driver_pairs_spy(monkeypatch)
+    assert webtext.embedding_near_dup_pairs(embs, threshold=0.4).count() > 0
+    assert calls == []
+    docs = spark.createDataFrame(
+        _near_dup_cluster_rows(200, 30), "doc_id long, text string"
+    )
+    assert webtext.minhash_lsh_pairs(docs, threshold=0.35).count() > 0
+    assert calls == [230]
+
+
+def test_embedding_near_dup_pairs_empty_input(spark):
+    """An empty embedding frame gives an empty pair frame with the
+    operator's schema (no dimension to probe, no pairs)."""
+    from insideout_spark.plans import webtext
+
+    embs = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = webtext.embedding_near_dup_pairs(embs)
+    assert out.schema.simpleString() == "struct<vec_a:bigint,vec_b:bigint,cos_sim:double>"
+    assert out.collect() == []
 
 
 def test_minhash_saved_signatures_roundtrip(spark, tmp_path):

@@ -24,11 +24,14 @@ def _materialize(key: str, df: DataFrame) -> DataFrame:
     """Persist + eagerly compute a per-call shared frame, superseding
     the previous call's copy (matreg, guide §5): persistence keeps the
     lineage, so a later release is always correct — consumers of a
-    released frame recompute instead of reading freed blocks."""
+    released frame recompute instead of reading freed blocks. The
+    release comes first: a repeat call on the same input has the same
+    plan, so it shares the old frame's cache entry, and a release after
+    the persist would drop that entry and leave every consumer to
+    recompute."""
     from pyspark import StorageLevel
 
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    matreg.supersede(key, df)
+    df = matreg.supersede(key, df).persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
     return df
 
@@ -1151,10 +1154,14 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     (transform over sequence + slice + concat_ws + array_distinct)
     measured 27 s for ONE pass over 50k sf1 docs on local[32] — ~17 ms
     of core time per doc in allocation churn — and the query plan
-    re-evaluated it per consumer. Tokenization mirrors the Catalyst /
-    DuckDB-oracle semantics exactly: trim spaces only, split on ' +',
-    first-occurrence-ordered distinct, and for docs shorter than n
-    tokens one truncated gram (the whole token list)."""
+    re-evaluated it per consumer. This is ngram_jaccard_pairs' only
+    shape: on a 4-core VM (min of 3-5 alternating reps, t=0.2, cap 3)
+    the inline Catalyst shape ran 1.67/8.98/45.6 s at sf0.01/sf0.1/
+    derived sf1 vs 1.56/1.59/10.2 s with this pass, so no count() job
+    is spent choosing between them. Tokenization mirrors the DuckDB
+    oracle (webtext_sql.ngram_pairs_sql) exactly: trim spaces only,
+    split on ' +', first-occurrence-ordered distinct, and for docs
+    shorter than n tokens one truncated gram (the whole token list)."""
     import re
 
     nn = int(n)
@@ -1193,27 +1200,6 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     return _materialize("gram_frame", out)
 
 
-# corpora at or under this many docs run the INLINE Catalyst gram
-# shape (r5's, oracle-gated for three rounds): at fixture scale the
-# materialized-gram shape's extra jobs (Python gram pass + persist +
-# broadcast builds) are pure fixed overhead — measured 4.8-5.5 s vs
-# 1.4 s for the 5k-doc skewed-block fixture — while at corpus scale
-# the one materialized pass replaces per-consumer re-evaluation of the
-# gram expression (measured 29 -> ~4 s at sf1, 50k docs). Both shapes
-# compute identical grams (same tokenization, first-occurrence
-# distinct, truncated short-doc gram) and identical pair sets.
-_NGRAM_INLINE_DOCS = 10_000
-# ... refined for ngram by TOKEN volume: the inline arm re-evaluates
-# the gram expression (~12us/token on this box) once per consumer, so
-# it loses to the one materialized pass well before the doc-count gate
-# when docs are long (measured at 5000 docs: 270k-token sf0.1 corpus
-# 5.8 s inline vs 2.7 s materialized; 150k-token short-doc skew
-# fixture 2.1 s inline vs 4.8 s materialized — there the pair volume,
-# not the gram cost, dominates). The token pre-count is one cheap
-# Catalyst agg and only runs for corpora already under the doc gate.
-_NGRAM_INLINE_TOKENS = 200_000
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -1223,7 +1209,8 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram (token) Jaccard over blocked pairs: blocks on the
     opening BIGRAM (first two tokens) to avoid the full cross join,
-    then exact set Jaccard in Catalyst array functions. Round 1
+    then exact set Jaccard in Catalyst array functions over the grams
+    of the one materialized pass (`_gram_frame`). Round 1
     blocked on the first token alone — web text makes "the"/"le"
     blocks enormous and quadratic (VERDICT r01 'What's wrong' #3); the
     bigram key spreads stopword openings across second tokens.
@@ -1244,21 +1231,11 @@ def ngram_jaccard_pairs(
     back, the clique self-join, and the chain's window add no second
     shuffle key. Exactly mirrored (cap included) by the DuckDB oracle
     in webtext_sql.ngram_pairs_sql."""
-    if docs.count() <= _NGRAM_INLINE_DOCS:
-        n_tokens = docs.select(
-            F.sum(F.size(F.split(F.trim(F.col(text_col)), " +")))
-        ).first()[0]
-        if (n_tokens or 0) <= _NGRAM_INLINE_TOKENS:
-            return _ngram_pairs_inline(docs, text_col, n, threshold, block_cap)
     # SLIM pair generation (r06, guide §8 "decide with small rows"):
     # blocking, the block-key self-join / chain window, and the
-    # size-ratio prefilter all run over (doc_id, block, n_grams) —
-    # previously the full gram arrays rode the block shuffle, the
-    # chain window's sort (as a lagged struct) and the clique join.
-    # Gram arrays are attached only to the pairs that SURVIVE the
-    # prefilter, by two doc_id joins against the one materialized gram
-    # pass (_gram_frame). Same pairs, same arrays, same Jaccard — just
-    # a different physical order of attachment.
+    # size-ratio prefilter all run over (doc_id, block, n_grams). Gram
+    # arrays are attached only to the pairs that SURVIVE the prefilter,
+    # by two doc_id joins against the one materialized gram pass.
     gf = _gram_frame(docs, text_col, n)
     slim = gf.select("doc_id", "block", "ng")
     if block_cap is None:
@@ -1325,82 +1302,6 @@ def ngram_jaccard_pairs(
     # the same integer array_union produced, without a second per-pair
     # hash-set pass
     union = F.col("na") + F.col("nb") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return pairs.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
-def _ngram_pairs_inline(
-    docs: DataFrame,
-    text_col: str,
-    n: int,
-    threshold: float,
-    block_cap: int | None,
-) -> DataFrame:
-    """Small-corpus arm of ngram_jaccard_pairs: the round-5 inline
-    Catalyst shape, verbatim — gram arrays computed per join side, one
-    block-key shuffle, no materialize/attach jobs. See the dispatch
-    comment at _NGRAM_INLINE_DOCS."""
-    toks = F.split(F.trim(F.col(text_col)), " +")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-    # try_element_at: ANSI element_at THROWS on out-of-bounds, so a
-    # single one-token document would kill the whole job
-    block = F.concat_ws(
-        "|",
-        F.try_element_at(toks, F.lit(1)),
-        F.coalesce(F.try_element_at(toks, F.lit(2)), F.lit("")),
-    )
-    d = docs.select("doc_id", block.alias("block"), grams.alias("grams"))
-    if block_cap is None:
-        a = d.select(F.col("doc_id").alias("doc_a"), "block", F.col("grams").alias("ga"))
-        b = d.select(F.col("doc_id").alias("doc_b"), "block", F.col("grams").alias("gb"))
-        pairs = a.join(b, "block").filter(F.col("doc_a") < F.col("doc_b"))
-    else:
-        stats = d.groupBy("block").agg(F.count("*").alias("__bn"))
-        dd = d.join(stats, "block")
-        small = dd.filter(F.col("__bn") <= block_cap)
-        clique = (
-            small.select(F.col("doc_id").alias("doc_a"), "block", F.col("grams").alias("ga"))
-            .join(
-                small.select(F.col("doc_id").alias("doc_b"), "block", F.col("grams").alias("gb")),
-                "block",
-            )
-            .filter(F.col("doc_a") < F.col("doc_b"))
-        )
-        # chain: consecutive members in (|grams|, doc_id) order; each
-        # doc has ONE block so consecutive pairs are distinct, no dedup
-        w = Window.partitionBy("block").orderBy(F.size("grams"), F.col("doc_id"))
-        prev = F.lag(
-            F.struct(F.col("doc_id").alias("id"), F.col("grams").alias("g"))
-        ).over(w)
-        chained = (
-            dd.filter(F.col("__bn") > block_cap)
-            .withColumn("__p", prev)
-            .filter(F.col("__p").isNotNull())
-        )
-        fwd = F.col("__p.id") < F.col("doc_id")
-        chain = chained.select(
-            F.when(fwd, F.col("__p.id")).otherwise(F.col("doc_id")).alias("doc_a"),
-            F.when(fwd, F.col("doc_id")).otherwise(F.col("__p.id")).alias("doc_b"),
-            F.when(fwd, F.col("__p.g")).otherwise(F.col("grams")).alias("ga"),
-            F.when(fwd, F.col("grams")).otherwise(F.col("__p.g")).alias("gb"),
-        )
-        cols = ["doc_a", "doc_b", "ga", "gb"]
-        pairs = clique.select(cols).unionByName(chain.select(cols))
-    # size-ratio prefilter: J(A,B) <= min/max, so Jaccard >= t requires
-    # min(|A|,|B|) >= t * max(|A|,|B|) — prunes most pairs before the
-    # O(|A|+|B|) set intersection (exact integer sizes, identical
-    # arithmetic in the DuckDB oracle)
-    sa, sb = F.size("ga").cast("double"), F.size("gb").cast("double")
-    pairs = pairs.filter(F.least(sa, sb) >= F.lit(threshold) * F.greatest(sa, sb))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_union("ga", "gb"))
     jac = inter.cast("double") / union.cast("double")
     return pairs.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
@@ -1919,12 +1820,13 @@ def _match_frac(mat: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
     """Share of equal entries between rows `ia` and rows `ib` of `mat`:
     an integer match count, then one division by the power-of-two
     width — the identical double of the Catalyst matches/32. Chunked
-    for the memory-bandwidth wall (measured 17.5 s -> ~2 s at sf1):
-    256k-pair chunks keep the two gathered operand blocks ~32 MB each,
-    in preallocated out= buffers."""
+    into preallocated out= buffers of 512 KB per gathered operand (4096
+    int32 x 32 rows), sized by bytes like the embedding score: 10M
+    pairs over a 200k x 32 int32 matrix took 3.36 s at 32 MB blocks vs
+    1.80 s at 512 KB (min of 5, 4-core VM)."""
     width = mat.shape[1]
     frac = np.empty(len(ia), dtype=np.float64)
-    step = 1 << 18
+    step = max(1, min(len(ia), (512 << 10) // (width * mat.itemsize)))
     bufa = np.empty((step, width), dtype=mat.dtype)
     bufb = np.empty_like(bufa)
     eq = np.empty((step, width), dtype=bool)
@@ -3130,36 +3032,6 @@ def quality_classifier(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _bigram_frame(docs: DataFrame, text_col: str) -> DataFrame:
-    """Exploded adjacent-token pairs (w1, w2) for the whole corpus in
-    ONE Arrow-batched Python pass, materialized via persist+supersede
-    (r06, the _gram_frame pattern): the pure-Catalyst
-    slice+zip_with+concat explode measured 3.7-5.2 s ALONE at sf1 and
-    was re-evaluated per consumer (bigram counts, first-position
-    counts, second-position counts, totals — pmi_topk paid it 3x).
-    Tokenization mirrors ws_tokens / WS_TOKS_SQL exactly: split on
-    [ \\t\\r\\n]+, drop empties."""
-    import re
-
-    pat = re.compile("[ \t\r\n]+")
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            w1s, w2s = [], []
-            for t in _texts(pdf[text_col]):
-                toks = [x for x in pat.split(t) if x]
-                w1s.extend(toks[:-1])
-                w2s.extend(toks[1:])
-            yield pd.DataFrame({"w1": w1s, "w2": w2s})
-
-    out = ensure_parallel(docs.select(text_col)).mapInPandas(
-        run, schema="w1 string, w2 string"
-    )
-    return _materialize("bigram_frame", out)
-
-
 def bigram_topk(docs: DataFrame, text_col: str = "text", k: int = 100) -> DataFrame:
     """Bigram language-model counts: top-k adjacent token pairs with
     their context (first-token) counts and the conditional probability
@@ -3171,34 +3043,40 @@ def bigram_topk(docs: DataFrame, text_col: str = "text", k: int = 100) -> DataFr
     bigrams/tokens, not occurrences); the top-k is ORDER BY + LIMIT =
     TakeOrderedAndProject; the context join is on the post-limit k
     rows (broadcast). Oracle: webtext_sql.bigram_topk_sql."""
-    # size dispatch (r06, the ngram_jaccard_pairs pattern — shared
-    # gate _NGRAM_INLINE_DOCS): at fixture scale the materialized
-    # explode's extra jobs are pure fixed overhead (measured
-    # bigram 0.72 -> 1.37 s, pmi 0.90 -> 1.69 s at sf0.1), while at
-    # corpus scale one Python explode pass replaces per-consumer
-    # re-evaluation of the slice+zip_with subtree (bigram 4.1 -> 1.8,
-    # pmi 4.5 -> 2.2 at sf1). Identical tokenization and counts.
-    if docs.count() <= _NGRAM_INLINE_DOCS:
-        return _bigram_topk_inline(docs, text_col, k)
-    # one materialized (w1, w2) explode feeds BOTH aggregations (r06);
-    # the bigram string is rebuilt post-agg — injective since tokens
-    # cannot contain spaces — so grouping by (w1, w2) counts and orders
-    # identically to grouping by the string.
-    ex = _bigram_frame(docs, text_col)
+    # the only shape: on a 4-core VM (min of 3-5 alternating reps) this
+    # Catalyst explode ran 0.39/0.93/6.71 s at sf0.01/sf0.1/derived sf1
+    # vs 0.86/0.87/7.07 s for one materialized Python pass (pmi_topk:
+    # 0.61/1.03/7.19 vs 1.09/1.54/8.67 s). The explode is cheap, so the
+    # Python pass's extra jobs never pay for themselves.
+    toks = ws_tokens(F.col(text_col))
+    n = F.size(toks)
+    pairs = F.when(
+        n >= 2,
+        F.zip_with(
+            F.slice(toks, 1, n - 1),
+            F.slice(toks, 2, n - 1),
+            lambda a, b: F.concat(a, F.lit(" "), b),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
     bg = (
-        ex.groupBy("w1", "w2")
+        docs.select(F.explode(pairs).alias("bigram"))
+        .groupBy("bigram")
         .agg(F.count("*").alias("n_bigram"))
-        .select(
-            F.concat(F.col("w1"), F.lit(" "), F.col("w2")).alias("bigram"),
-            "n_bigram",
-        )
         .orderBy(F.desc("n_bigram"), F.asc("bigram"))
         .limit(k)
     )
     # context counts: occurrences of w1 as the FIRST element of any
     # bigram (i.e. token occurrences excluding each doc's last token)
-    # == the w1 column of the exploded pairs
-    ctx = ex.groupBy("w1").agg(F.count("*").alias("n_context"))
+    ctx = (
+        docs.select(
+            F.explode(
+                F.when(n >= 2, F.slice(toks, 1, n - 1))
+                .otherwise(F.array().cast("array<string>"))
+            ).alias("w1")
+        )
+        .groupBy("w1")
+        .agg(F.count("*").alias("n_context"))
+    )
     out = bg.withColumn(
         "w1", F.split(F.col("bigram"), " ", 2).getItem(0)
     ).join(ctx, "w1")
@@ -3277,96 +3155,7 @@ def pmi_topk(
     frame BEFORE the two vocab joins; the total-events N rides along
     as a 1-row broadcast; the top-k is TakeOrderedAndProject.
     Oracle: webtext_sql.pmi_topk_sql."""
-    # size dispatch (r06, see bigram_topk)
-    if docs.count() <= _NGRAM_INLINE_DOCS:
-        return _pmi_topk_inline(docs, text_col, k, min_count)
-    # one materialized (w1, w2) explode feeds all three count
-    # aggregations AND the totals (r06): firsts == the w1 column,
-    # seconds == the w2 column, and n_events == sum over docs of
-    # max(n_tokens - 1, 0) == the exploded row count — the old plan
-    # re-evaluated the slice/zip_with explode once per consumer.
-    ex = _bigram_frame(docs, text_col)
-    bg = (
-        ex.groupBy("w1", "w2")
-        .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= min_count)
-    )
-    c1 = ex.groupBy("w1").agg(F.count("*").alias("n_w1"))
-    c2 = ex.groupBy("w2").agg(F.count("*").alias("n_w2"))
-    tot = ex.agg(F.count("*").cast("long").alias("n_events"))
-    dec = "decimal(38,0)"
-    return (
-        bg.join(c1, "w1")
-        .join(c2, "w2")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1",
-            "w2",
-            F.col("n_ab").cast("long").alias("n_ab"),
-            F.col("n_w1").cast("long").alias("n_w1"),
-            F.col("n_w2").cast("long").alias("n_w2"),
-            "n_events",
-            (
-                (F.col("n_ab").cast(dec) * F.col("n_events").cast(dec))
-                .cast("double")
-                / (F.col("n_w1").cast(dec) * F.col("n_w2").cast(dec))
-                .cast("double")
-            ).alias("pmi_ratio"),
-        )
-        .orderBy(F.desc("pmi_ratio"), F.asc("w1"), F.asc("w2"))
-        .limit(k)
-    )
-
-
-def _bigram_topk_inline(docs: DataFrame, text_col: str, k: int) -> DataFrame:
-    """Small-corpus arm of bigram_topk: the round-5 inline Catalyst
-    shape, verbatim (see the dispatch comment at the call site)."""
-    toks = ws_tokens(F.col(text_col))
-    n = F.size(toks)
-    pairs = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(toks, 1, n - 1),
-            F.slice(toks, 2, n - 1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bg = (
-        docs.select(F.explode(pairs).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count("*").alias("n_bigram"))
-        .orderBy(F.desc("n_bigram"), F.asc("bigram"))
-        .limit(k)
-    )
-    # context counts: occurrences of w1 as the FIRST element of any
-    # bigram (i.e. token occurrences excluding each doc's last token)
-    ctx = (
-        docs.select(
-            F.explode(
-                F.when(n >= 2, F.slice(toks, 1, n - 1))
-                .otherwise(F.array().cast("array<string>"))
-            ).alias("w1")
-        )
-        .groupBy("w1")
-        .agg(F.count("*").alias("n_context"))
-    )
-    out = bg.withColumn(
-        "w1", F.split(F.col("bigram"), " ", 2).getItem(0)
-    ).join(ctx, "w1")
-    return out.select(
-        "bigram",
-        "n_bigram",
-        "n_context",
-        (F.col("n_bigram").cast("double") / F.col("n_context").cast("double"))
-        .alias("p_cond"),
-    )
-
-
-def _pmi_topk_inline(
-    docs: DataFrame, text_col: str, k: int, min_count: int
-) -> DataFrame:
-    """Small-corpus arm of pmi_topk: the round-5 inline Catalyst shape,
-    verbatim (see the dispatch comment at the call site)."""
+    # the only shape; measured against a Python pass in bigram_topk
     toks = ws_tokens(F.col(text_col))
     n = F.size(toks)
     firsts = F.when(n >= 2, F.slice(toks, 1, n - 1)).otherwise(
@@ -3443,14 +3232,14 @@ def paragraph_dedup(
     is min (doc_id, seg_no) — row_number over ONE segment-keyed
     shuffle. Scale shape: explode (no shuffle) -> one hash-partitioned
     window on the segment value (groups are duplicate sets, tiny) ->
-    one doc_id groupBy to reassemble. Zero Python, zero joins; at
+    one doc_id groupBy to reassemble. One Python pass, zero joins; at
     100 TB this is two shuffles of the segment table, the same plan
     CCNet runs as a hash-shard sort. Oracle:
     webtext_sql.paragraph_dedup_sql (lockstep segmentation + window).
     """
     st = int(seg_tokens)
     # segment explode in ONE Arrow-batched Python pass (r06, the
-    # _bigram_frame pattern): the Catalyst transform+slice+array_join
+    # _gram_frame pattern): the Catalyst transform+slice+array_join
     # explode measured 4.7 s ALONE at sf1 for 295k segments — the whole
     # query minus ~0.4 s. Tokenization and the ceil(n/st) windowing
     # mirror ws_tokens / the oracle exactly (docs with zero tokens emit

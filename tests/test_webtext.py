@@ -958,43 +958,89 @@ def test_ngram_block_cap_chain_semantics(spark):
     assert capped == {(1, 2), (2, 3), (3, 4), (10, 11)}
 
 
-def test_ngram_family_materialized_arm_matches_inline(spark, monkeypatch, dup_docs):
-    """Gate flip: with the inline-Catalyst gates at 0 and the inline
-    helpers disabled, ngram_jaccard_pairs, bigram_topk and pmi_topk
-    must return the same rows from the materialized arm as the default
-    (inline) run, on the two planted near-dup corpora."""
-    from insideout_spark.plans import webtext
+def test_ngram_family_matches_duckdb_oracle(spark, dup_docs):
+    """ngram_jaccard_pairs (default cap and the chain path at
+    block_cap=3), bigram_topk and pmi_topk return exactly the rows of
+    their DuckDB oracles on the two planted near-dup corpora."""
+    import duckdb
+    import pandas as pd
 
+    from insideout_spark.plans import webtext_sql
+
+    cluster_rows = _near_dup_cluster_rows(60, 20)
     corpora = [
-        dup_docs,
-        spark.createDataFrame(
-            _near_dup_cluster_rows(60, 20), "doc_id long, text string"
+        (dup_docs, dup_docs.toPandas()),
+        (
+            spark.createDataFrame(cluster_rows, "doc_id long, text string"),
+            pd.DataFrame(cluster_rows, columns=["doc_id", "text"]),
         ),
     ]
+    cases = [
+        (
+            webtext.ngram_jaccard_pairs,
+            webtext_sql.ngram_pairs_sql(threshold=0.3, block_cap=1024),
+        ),
+        (
+            lambda d: webtext.ngram_jaccard_pairs(d, threshold=0.2, block_cap=3),
+            webtext_sql.ngram_pairs_sql(threshold=0.2, block_cap=3),
+        ),
+        (lambda d: webtext.bigram_topk(d, k=20), webtext_sql.bigram_topk_sql(k=20)),
+        (
+            lambda d: webtext.pmi_topk(d, k=20, min_count=2),
+            webtext_sql.pmi_topk_sql(k=20, min_count=2),
+        ),
+    ]
+    for docs, pdf in corpora:
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        for op, sql in cases:
+            # row order after the top-k's context join is unspecified
+            got = sorted(tuple(r) for r in op(docs).collect())
+            want = sorted(map(tuple, con.execute(sql).fetchall()))
+            assert got == want and len(got) > 0, sql
 
-    def rows():
-        # row order after the top-k's context join is unspecified
-        return [
-            sorted(tuple(r) for r in df.collect())
-            for docs in corpora
-            for df in (
-                webtext.ngram_jaccard_pairs(docs),
-                webtext.bigram_topk(docs, k=20),
-                webtext.pmi_topk(docs, k=20, min_count=2),
-            )
-        ]
 
-    inline = rows()
-    assert all(len(r) > 0 for r in inline)
+def _jobs_started(spark, build) -> int:
+    """Spark jobs started while `build()` runs, counted by job group."""
+    import uuid
 
-    def disabled(*args, **kwargs):
-        raise AssertionError("inline arm ran")
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the listener bus, which runs behind
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    monkeypatch.setattr(webtext, "_NGRAM_INLINE_DOCS", 0)
-    monkeypatch.setattr(webtext, "_NGRAM_INLINE_TOKENS", 0)
-    for name in ("_ngram_pairs_inline", "_bigram_topk_inline", "_pmi_topk_inline"):
-        monkeypatch.setattr(webtext, name, disabled)
-    assert rows() == inline
+
+def test_ngram_family_runs_no_job_to_pick_an_arm(spark, dup_docs):
+    """No operator of the n-gram family scans its input just to choose
+    a shape: building the top-k plans starts no job, and the n-gram
+    pairs start only the jobs of their one materialized gram pass."""
+    assert _jobs_started(spark, lambda: webtext.bigram_topk(dup_docs)) == 0
+    assert _jobs_started(spark, lambda: webtext.pmi_topk(dup_docs)) == 0
+    grams = _jobs_started(spark, lambda: webtext._gram_frame(dup_docs, "text", 3))
+    assert grams > 0
+    pairs = _jobs_started(spark, lambda: webtext.ngram_jaccard_pairs(dup_docs))
+    assert pairs == grams
+
+
+def test_match_frac_multi_block_matches_direct():
+    """The MinHash rescore's blocked gather (three 512 KB blocks, the
+    last one ragged) equals the direct row comparison, as do a 3-pair
+    and an empty input."""
+    rng = np.random.default_rng(5)
+    mat = rng.integers(0, 3, size=(500, 32), dtype=np.int32)
+    ia = rng.integers(0, 500, 10_000)
+    ib = rng.integers(0, 500, 10_000)
+    want = (mat[ia] == mat[ib]).sum(1) / 32
+    assert np.array_equal(webtext._match_frac(mat, ia, ib), want)
+    assert np.array_equal(webtext._match_frac(mat, ia[:3], ib[:3]), want[:3])
+    assert len(webtext._match_frac(mat, ia[:0], ib[:0])) == 0
 
 
 def test_chain_cap_preserves_clusters_star_would_split(spark):

@@ -12,9 +12,13 @@ made deterministic.
 
 from __future__ import annotations
 
-# Java's and RE2's \d are ASCII-only, so Spark's `regexp_extract` and the
-# DuckDB oracles match the same tokens.
-GEO_RE = r"geo:([-+]?\d+(?:\.\d+)?),([-+]?\d+(?:\.\d+)?)"
+# The oracles' `geo:([-+]?\d+(?:\.\d+)?),...` spelled with classes instead
+# of escapes (Java's and RE2's \d are ASCII-only, so both match the same
+# tokens). With no backslash and no quote in it, a plain SQL string
+# literal carries it unchanged whatever
+# `spark.sql.parser.escapedStringLiterals` says; a raw r'...' literal
+# does not (with the setting on, Spark 4.1 reads r'a' as "'a").
+GEO_RE = "geo:([-+]?[0-9]+(?:[.][0-9]+)?),([-+]?[0-9]+(?:[.][0-9]+)?)"
 
 
 def extract_text_from_html(html: bytes) -> str:

@@ -91,15 +91,16 @@ class IndexBundle:
     _edges_df: DataFrame | None = None
     _props_df: DataFrame | None = None
 
-    def _rings(self) -> dict:
-        """{(fid, pos): (M, 2) vertex ndarray} hydrated through Arrow —
-        the reference's startup feature cache (server/server.go:73-108,
-        118-156). One columnar transfer, then vectorized slicing: no
-        per-vertex Row objects."""
+    def _loops(self) -> dict:
+        """{(fid, pos): ((M, 2) vertex ndarray, admin_level)} hydrated
+        through Arrow — the reference's startup feature cache
+        (server/server.go:73-108, 118-156). One columnar transfer, then
+        vectorized slicing: no per-vertex Row objects. A NULL
+        admin_level reads as NaN."""
         import numpy as np
         import pyarrow.compute as pc
 
-        t = self.features.select("feature_id", "loop_pos", "ring").toArrow()
+        t = self.features.select("feature_id", "loop_pos", "ring", "admin_level").toArrow()
         ring = t.column("ring").combine_chunks()
         verts = ring.flatten()  # one [lng, lat(, alt)] list per vertex
         xy = np.column_stack(
@@ -112,11 +113,16 @@ class IndexBundle:
         parts = np.split(xy, np.cumsum(lens)[:-1]) if len(lens) else []
         fid = t.column("feature_id").to_numpy()
         pos = t.column("loop_pos").to_numpy()
-        return {(int(f), int(p)): r for f, p, r in zip(fid, pos, parts)}
+        level = pc.fill_null(t.column("admin_level"), np.nan).to_numpy()
+        return {
+            (int(f), int(p)): (r, lv) for f, p, r, lv in zip(fid, pos, parts, level)
+        }
 
     def props(self) -> DataFrame:
-        """The per-loop payload every stab result joins (feature_id,
-        loop_pos, properties, properties_json, admin_level) — no rings.
+        """The per-loop payload a stab result joins (feature_id,
+        loop_pos, properties, properties_json, admin_level) — no rings:
+        in full with include_properties=True, and its admin_level for
+        the edge-join arms' P1 projection.
         Cached once per index so a query broadcasts it from memory
         instead of re-scanning and re-shuffling the features."""
         if self._props_df is None:
@@ -191,8 +197,12 @@ class IndexBundle:
 
         Each posting carries a dense loop ordinal instead of its
         (feature_id, loop_pos): the ordinal indexes the per-loop
-        feature_id / loop_pos arrays and the ring store, so the fused
-        stab packs (point, loop) into one int64 whatever the ids' range."""
+        feature_id / loop_pos / admin_level arrays and the ring store,
+        so the fused stab packs (point, loop) into one int64 whatever
+        the ids' range. admin_level is float64 with NaN for NULL (and
+        for a loop missing from `features`); it is read in the same
+        Arrow transfer as the rings, so the stab emits the column the
+        P1 projection needs without a props join."""
         if self._stab_bc is None:
             import numpy as np
 
@@ -205,7 +215,8 @@ class IndexBundle:
             loops, loop = np.unique(
                 np.column_stack([fid, pos]), axis=0, return_inverse=True
             )
-            rings = self._rings()
+            loops_by_id = self._loops()
+            per_loop = [loops_by_id.get((int(f), int(p)), (None, np.nan)) for f, p in loops]
             # sort in UNSIGNED cell-id order (the searchsorted key space)
             o = np.argsort(cells.view(np.uint64), kind="stable")
             payload = (
@@ -214,7 +225,8 @@ class IndexBundle:
                 loop[o].astype(np.int32),
                 loops[:, 0].astype(np.int32),
                 loops[:, 1].astype(np.int32),
-                geo_pip.ring_store([rings.get((int(f), int(p))) for f, p in loops]),
+                np.array([lv for _, lv in per_loop], dtype=np.float64),
+                geo_pip.ring_store([r for r, _ in per_loop]),
                 int(self.manifest["min_cover_level"]),
                 int(self.manifest["max_cover_level"]),
             )

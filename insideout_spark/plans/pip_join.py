@@ -11,14 +11,21 @@ Default strategy "fused" — the reference's one lookup per point, batched
            leaf cells (numpy S2) -> per-level searchsorted stab of the
            broadcast sorted cell index -> dedup (A2) + interior
            precedence (J5) -> ray cast of the boundary residue only
-           (P3, one numpy pass over a flat ring store)-->
-           --broadcast join of the cached per-loop properties-->
+           (P3, one numpy pass over a flat ring store) -> the hit's
+           per-loop admin_level from the same broadcast-->
 
-Measured on a 4-core VM, local[4], 400-polygon layer (min of 3): fused
-plans in 0.07-0.2 s (~200 py4j calls) and runs 2 Spark jobs in 3 stages
-per op; the "jvm" arm below needs 0.6-1.5 s of driver-side planning
-(~3,700 py4j calls, mostly the S2 key CASE tree) and 5 jobs in 9 stages.
-20k pages: 0.99 s fused vs 2.38 s jvm; 200k pages: 1.11 vs 2.39 s. The
+With include_properties=False (the P1 projection every declared query,
+the benchmark and the streaming backfill use) that is the whole op: one
+Spark job, one stage, no join and no Catalyst not-null filter (the
+kernel drops NULL/NaN coordinates). include_properties=True adds a
+broadcast join of the cached per-loop properties. Measured on a 4-core
+VM, local[4], 400-polygon layer, 20k pages (min of 3 x 15 ops):
+planning `pip_join(extract_points(pages), idx, include_properties=False)`
+takes 41-58 ms of driver time in 51 py4j calls (109-138 ms and 287+
+calls with the props join and the extra filter). The "jvm" arm below
+needs 0.6-1.5 s (~3,700 py4j calls, mostly the S2 key CASE tree) and
+5 jobs in 9 stages; with its props join still in place, fused took
+0.99 s vs 2.38 s jvm at 20k pages and 1.11 vs 2.39 s at 200k. The
 fused arm costs one Arrow crossing per batch, point columns only.
 
 The fused arm broadcasts every ring to the Python workers. When the
@@ -49,6 +56,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
 from ..functions.s2_expr import with_fij_keys
 from ..geo import pip as geo_pip
@@ -58,6 +66,10 @@ from .index_build import IndexBundle
 
 def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str) -> DataFrame:
     """The whole stab in ONE Arrow crossing per batch of points.
+
+    Rows come out as `feature_id, loop_pos, *id_cols, lat, lng,
+    is_sure_hit, admin_level` — the columns and order of the jvm arm's
+    P1 projection. Points with a NULL or NaN coordinate never hit.
 
     Point batch -> leaf cells (numpy S2) -> per-level ancestor lookup by
     binary search in the broadcast sorted cell array (the reference's
@@ -78,23 +90,28 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
     def run(batches):
         import pandas as pd
 
-        (cells, isint_arr, loop_arr, loop_fid, loop_pos, rings,
+        (cells, isint_arr, loop_arr, loop_fid, loop_pos, loop_level, rings,
          min_l, max_l) = stab_bc.value
         ucells = geo_s2.to_unsigned(cells)
 
         def empty():
             return pd.DataFrame(
                 {
+                    "feature_id": pd.Series(dtype="int32"),
+                    "loop_pos": pd.Series(dtype="int32"),
                     **{c: pd.Series(dtype="object") for c in key},
                     lat_col: pd.Series(dtype="float64"),
                     lng_col: pd.Series(dtype="float64"),
-                    "feature_id": pd.Series(dtype="int32"),
-                    "loop_pos": pd.Series(dtype="int32"),
                     "is_sure_hit": pd.Series(dtype="bool"),
+                    "admin_level": pd.Series(dtype="float64"),
                 }
             )
 
         for pdf in batches:
+            # Arrow NULLs arrive as NaN: neither can be stabbed
+            ok = pdf[lat_col].notna().to_numpy() & pdf[lng_col].notna().to_numpy()
+            if not ok.all():
+                pdf = pdf[ok]
             if len(pdf) == 0:
                 yield empty()
                 continue
@@ -146,20 +163,25 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
                 )
             sel = rep[keep]
             rows = pt_i[sel]
-            out = {c: pdf[c].to_numpy()[rows] for c in key}
+            hit_loop = lo[sel]
+            out = {"feature_id": loop_fid[hit_loop], "loop_pos": loop_pos[hit_loop]}
+            for c in key:
+                out[c] = pdf[c].to_numpy()[rows]
             out[lat_col] = lat[rows]
             out[lng_col] = lng[rows]
-            out["feature_id"] = loop_fid[lo[sel]]
-            out["loop_pos"] = loop_pos[lo[sel]]
             out["is_sure_hit"] = sure[keep]
+            out["admin_level"] = loop_level[hit_loop]
             yield pd.DataFrame(out)
 
-    in_schema = points.select(*key, lat_col, lng_col).schema
-    out_schema = ", ".join(
-        [f"{fld.name} {fld.dataType.simpleString()}" for fld in in_schema.fields]
-        + ["feature_id int", "loop_pos int", "is_sure_hit boolean"]
+    # selectExpr and a StructType schema: this plan is rebuilt on every
+    # op, and each Column helper or DDL parse is a py4j round trip
+    cols = points.selectExpr(*(f"`{c}`" for c in (*key, lat_col, lng_col)))
+    out_schema = StructType(
+        [StructField("feature_id", IntegerType()), StructField("loop_pos", IntegerType())]
+        + [StructField(fld.name, fld.dataType) for fld in cols.schema.fields]
+        + [StructField("is_sure_hit", BooleanType()), StructField("admin_level", DoubleType())]
     )
-    return points.select(*key, lat_col, lng_col).mapInPandas(run, schema=out_schema)
+    return cols.mapInPandas(run, schema=out_schema)
 
 
 def pip_join(
@@ -183,6 +205,10 @@ def pip_join(
     Returns one row per (point, feature_id, loop_pos) containment hit
     with `is_sure_hit` marking interior-cover hits that skipped the
     exact test (reference IDsInside vs IDsMayBeInside, index.go:14-17).
+    Columns: `feature_id, loop_pos, *id_cols, lat, lng, is_sure_hit`,
+    then `properties, properties_json, admin_level` or, with
+    include_properties=False, `admin_level` alone (the P1 projection).
+    Points with a NULL or NaN coordinate never hit.
 
     Physical strategies (the reference's db/tree/shape knob analog,
     server/server.go:73-108):
@@ -192,9 +218,10 @@ def pip_join(
       always selects "salted".
     * "fused": the whole stab in one Arrow pass with a broadcast
       searchsorted index; the ray cast runs only on boundary-cell
-      residue, chunked to a fixed memory budget. On local[4] it plans in
-      0.07-0.2 s (jvm: 0.6-1.5 s), runs 2 jobs per op (jvm: 5) and
-      geocodes 20k pages in 0.99 vs 2.38 s, 200k in 1.11 vs 2.39 s.
+      residue, chunked to a fixed memory budget. The kernel emits
+      admin_level itself, so with include_properties=False the op is
+      one Spark job with no join (jvm: 5 jobs); on local[4] it plans in
+      41-58 ms (jvm: 0.6-1.5 s).
     * "jvm": Catalyst (face,i,j) stab keys, broadcast hash join, bbox
       prune, broadcast edge join and one map-combinable aggregation that
       does dedup + the even-odd ray cast — no python on the hot path.
@@ -220,11 +247,11 @@ def pip_join(
         # edges off the broadcast gets the edge-join arm
         strategy = "fused" if broadcast_edges else "jvm"
 
-    pts = points.filter(F.col(lat_col).isNotNull() & F.col(lng_col).isNotNull())
-
     if strategy == "fused":
-        result = _fused_stab(pts, index.stab_broadcast(), id_cols, lat_col, lng_col)
+        # drops NULL/NaN points and emits admin_level in the kernel
+        result = _fused_stab(points, index.stab_broadcast(), id_cols, lat_col, lng_col)
     elif strategy in ("jvm", "salted", "bucketed"):
+        pts = points.filter(F.col(lat_col).isNotNull() & F.col(lng_col).isNotNull())
         keyed = with_fij_keys(
             pts.select(*id_cols, lat_col, lng_col), lat_col, lng_col, min_l, max_l
         )
@@ -343,12 +370,15 @@ def pip_join(
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 
-    props = index.props()
     if include_properties:
-        result = result.join(F.broadcast(props), ["feature_id", "loop_pos"], "left")
-    else:  # P1 projection: strip feature payload (reference insidesvc.proto:21-24)
+        if strategy == "fused":
+            result = result.drop("admin_level")
+        result = result.join(F.broadcast(index.props()), ["feature_id", "loop_pos"], "left")
+    elif strategy != "fused":
+        # P1 projection: strip feature payload (reference
+        # insidesvc.proto:21-24); the fused stab already emits it
         result = result.join(
-            F.broadcast(props.select("feature_id", "loop_pos", "admin_level")),
+            F.broadcast(index.props().select("feature_id", "loop_pos", "admin_level")),
             ["feature_id", "loop_pos"],
             "left",
         )

@@ -1161,7 +1161,9 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     is spent choosing between them. Tokenization mirrors the DuckDB
     oracle (webtext_sql.ngram_pairs_sql) exactly: trim spaces only,
     split on ' +', first-occurrence-ordered distinct, and for docs
-    shorter than n tokens one truncated gram (the whole token list)."""
+    shorter than n tokens one truncated gram (the whole token list).
+    A NULL text gets a NULL block and no grams, so it never pairs (the
+    oracle's block is NULL too); an empty text is one empty token."""
     import re
 
     nn = int(n)
@@ -1171,7 +1173,12 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
 
         for pdf in batches:
             blocks, ngs, gram_lists = [], [], []
-            for t in _texts(pdf[text_col]):
+            for t in pdf[text_col]:
+                if t is None:
+                    blocks.append(None)
+                    ngs.append(0)
+                    gram_lists.append([])
+                    continue
                 toks = re.split(" +", t.strip(" "))
                 if len(toks) >= nn:
                     gs = list(

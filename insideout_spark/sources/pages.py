@@ -17,7 +17,6 @@ import datetime as dt
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -174,11 +173,17 @@ def select_points(pages: DataFrame, *keep: str) -> DataFrame:
     because ANSI mode (the Spark 4 default) raises on `CAST('' AS
     DOUBLE)`, which is what `regexp_extract` returns on no match; the
     not-null filter then drops those pages. Spark's cast is correctly
-    rounded at any mantissa length, like DuckDB's."""
-    lat, lng = (F.regexp_extract("text", GEO_RE, g).try_cast("double") for g in (1, 2))
-    return pages.select(*keep, lat.alias("lat"), lng.alias("lng")).where(
-        F.col("lat").isNotNull() & F.col("lng").isNotNull()
-    )
+    rounded at any mantissa length, like DuckDB's.
+
+    Built as SQL text, one `selectExpr` and one `where`: each Column
+    helper is a py4j round trip, and this plan is rebuilt on every
+    geocode op. GEO_RE holds no backslash or quote, so the plain
+    literal reads the same whatever
+    `spark.sql.parser.escapedStringLiterals` says."""
+    ext = "try_cast(regexp_extract(text, '" + GEO_RE + "', {}) AS DOUBLE) AS {}"
+    return pages.selectExpr(
+        *(f"`{c}`" for c in keep), ext.format(1, "lat"), ext.format(2, "lng")
+    ).where("lat IS NOT NULL AND lng IS NOT NULL")
 
 
 def extract_points(pages: DataFrame) -> DataFrame:

@@ -49,6 +49,29 @@ def houat_index(spark, houat_loops):
     )
 
 
+@pytest.fixture
+def jobs_started(spark):
+    """`jobs_started(build)`: the Spark jobs started while `build()`
+    runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(build) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the listener bus, which runs behind
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -5,6 +5,7 @@ DuckDB oracles' parse."""
 import math
 
 import duckdb
+import pytest
 
 from insideout_spark.geo import extract
 from insideout_spark.sources.pages import extract_points
@@ -115,3 +116,19 @@ def test_pages_synth_deterministic(spark):
     assert a == b
     # golden rows present
     assert a["https://example.org/00000001"].endswith("geo:47.3965063,-2.9876391")
+
+
+@pytest.mark.parametrize("escaped", ["true", "false"])
+def test_extract_points_regex_under_escaped_string_literals(spark, escaped):
+    """GEO_RE reaches the regex engine intact whether or not the SQL
+    parser unescapes string literals: both settings return the DuckDB
+    oracle's rows."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        got = _points(spark, ADVERSARIAL_TEXTS)
+    finally:
+        spark.conf.set(key, before)
+    assert _signed(got) == _signed(_oracle_points(ADVERSARIAL_TEXTS))
+    assert len(got) == 7

@@ -472,3 +472,68 @@ def test_fused_ray_cast_chunks_many_vertex_ring(spark):
         assert fused == rows("jvm")
     finally:
         idx.release()
+
+
+@pytest.fixture(scope="module")
+def levels_index(spark):
+    """Four overlapping squares near Paris, two of them with a NULL
+    admin_level."""
+    from insideout_spark.geo.cover import CoverParams
+    from insideout_spark.plans.index_build import build_index
+
+    loops = []
+    for fid, (x0, y0, level) in enumerate(
+        [(2.30, 48.80, None), (2.35, 48.82, 6.0), (2.32, 48.85, None), (2.28, 48.78, 8.0)]
+    ):
+        ring = [[x0, y0], [x0 + 0.08, y0], [x0 + 0.08, y0 + 0.06], [x0, y0 + 0.06], [x0, y0]]
+        loops.append({"feature_id": fid, "loop_pos": 0, "ring": ring,
+                      "properties": {"name": f"sq{fid}"}, "admin_level": level})
+    idx = build_index(
+        spark, loops, CoverParams(10, 16, 24), CoverParams(10, 15, 16),
+        warning_cells_cover=100,
+    )
+    yield idx
+    idx.release()
+
+
+@pytest.mark.parametrize("include_properties", [False, True])
+@pytest.mark.parametrize(
+    "top", [{}, {"stop_on_first": True}, {"ordered": True}], ids=["all", "first", "ordered"]
+)
+def test_fused_equals_jvm_full_rows(spark, levels_index, include_properties, top):
+    """The fused stab returns the jvm arm's rows in full, admin_level
+    and properties included, in the same column order. Points with a
+    NULL or NaN coordinate hit nothing on either arm."""
+    from collections import Counter
+
+    rng = np.random.default_rng(17)
+    rows = [
+        (i, float(la), float(ln))
+        for i, (la, ln) in enumerate(
+            zip(rng.uniform(48.77, 48.92, 400), rng.uniform(2.27, 2.44, 400))
+        )
+    ]
+    nan = float("nan")
+    bad = [(1000, None, 2.35), (1001, 48.85, None), (1002, nan, 2.35),
+           (1003, 48.85, nan), (1004, nan, nan), (1005, None, None)]
+    pts = spark.createDataFrame(rows + bad, "point_id long, lat double, lng double")
+
+    def run(strategy):
+        df = pip_join(pts, levels_index, id_cols=("point_id",), strategy=strategy,
+                      include_properties=include_properties, **top)
+        return df.columns, Counter(
+            tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+            for r in df.collect()
+        )
+
+    fused_cols, fused = run("fused")
+    jvm_cols, jvm = run("jvm")
+    assert fused_cols == jvm_cols
+    assert fused_cols[:7] == [
+        "feature_id", "loop_pos", "point_id", "lat", "lng", "is_sure_hit",
+        "properties" if include_properties else "admin_level",
+    ]
+    assert fused == jvm
+    levels = {r[fused_cols.index("admin_level")] for r in fused}
+    assert None in levels and levels - {None}
+    assert not {r[2] for r in fused} & {b[0] for b in bad}

@@ -311,3 +311,30 @@ def test_tile_count_stream_no_python(spark):
     p = _plan(tile_count_stream(_text_pages(spark)))
     for py in _PY_STAGES:
         assert py not in p
+
+
+def test_default_geocode_op_is_one_stab_pass_one_job(spark, houat_index, jobs_started):
+    """The default P1 geocode op, `pip_join(extract_points(pages), idx,
+    include_properties=False)`, is the extraction and one MapInPandas
+    stab that emits admin_level itself: no broadcast, no join, no
+    second not-null filter on lat/lng. A noop write of it runs exactly
+    one Spark job."""
+    from insideout_spark.plans.pip_join import pip_join
+    from insideout_spark.sources.pages import GOLDEN_POINTS, extract_points
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"page geo:{la},{ln}") for i, (la, ln) in enumerate(GOLDEN_POINTS)]
+        + [("none", "no token")],
+        "url string, text string",
+    )
+    houat_index.stab_broadcast()  # hydrated once per index, not per op
+    op = pip_join(extract_points(pages), houat_index, include_properties=False)
+    assert op.columns[-1] == "admin_level"
+    p = _plan(op)
+    assert p.count("MapInPandas") == 1
+    for banned in ("BroadcastExchange", "Join"):
+        assert banned not in p
+    filters = [ln for ln in p.splitlines() if "Filter" in ln]
+    # the only filter is the extraction's, on the regex-extracted text
+    assert len(filters) == 1 and "regexp_extract" in filters[0], filters
+    assert jobs_started(lambda: op.write.format("noop").mode("overwrite").save()) == 1

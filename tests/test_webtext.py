@@ -1000,32 +1000,38 @@ def test_ngram_family_matches_duckdb_oracle(spark, dup_docs):
             assert got == want and len(got) > 0, sql
 
 
-def _jobs_started(spark, build) -> int:
-    """Spark jobs started while `build()` runs, counted by job group."""
-    import uuid
+def test_ngram_pairs_null_text_never_pairs(spark):
+    """A NULL-text doc has no block, so it pairs with nothing, not even
+    another NULL-text doc or an empty one; the DuckDB oracle agrees
+    with and without the block cap's chain path."""
+    import duckdb
+    import pandas as pd
 
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed by the listener bus, which runs behind
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    from insideout_spark.plans import webtext_sql
+
+    rows = [(1, None), (2, None), (3, ""), (4, "a b c d e"), (5, "a b c d e")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    for cap in (1024, 1):
+        got = sorted(
+            (r["doc_a"], r["doc_b"])
+            for r in webtext.ngram_jaccard_pairs(docs, threshold=0.3, block_cap=cap).collect()
+        )
+        sql = webtext_sql.ngram_pairs_sql(threshold=0.3, block_cap=cap)
+        want = sorted((a, b) for a, b, _ in con.execute(sql).fetchall())
+        assert got == want == [(4, 5)], cap
 
 
-def test_ngram_family_runs_no_job_to_pick_an_arm(spark, dup_docs):
+def test_ngram_family_runs_no_job_to_pick_an_arm(spark, dup_docs, jobs_started):
     """No operator of the n-gram family scans its input just to choose
     a shape: building the top-k plans starts no job, and the n-gram
     pairs start only the jobs of their one materialized gram pass."""
-    assert _jobs_started(spark, lambda: webtext.bigram_topk(dup_docs)) == 0
-    assert _jobs_started(spark, lambda: webtext.pmi_topk(dup_docs)) == 0
-    grams = _jobs_started(spark, lambda: webtext._gram_frame(dup_docs, "text", 3))
+    assert jobs_started(lambda: webtext.bigram_topk(dup_docs)) == 0
+    assert jobs_started(lambda: webtext.pmi_topk(dup_docs)) == 0
+    grams = jobs_started(lambda: webtext._gram_frame(dup_docs, "text", 3))
     assert grams > 0
-    pairs = _jobs_started(spark, lambda: webtext.ngram_jaccard_pairs(dup_docs))
+    pairs = jobs_started(lambda: webtext.ngram_jaccard_pairs(dup_docs))
     assert pairs == grams
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import gzip
 import json
+import math
 
 
 def parse_feature_collection(data):
@@ -41,6 +42,10 @@ def parse_feature_collection(data):
             try:
                 admin_level = float(props["admin_level"])
             except (TypeError, ValueError):
+                pass
+            # a NaN level is no level: NULL, as an unparsable one (every
+            # strategy then agrees; the fused stab ships NaN as NULL)
+            if admin_level is not None and math.isnan(admin_level):
                 admin_level = None
         str_props = {str(k): _prop_to_str(v) for k, v in props.items()}
         # typed fidelity (reference tools.go:253-274 keeps

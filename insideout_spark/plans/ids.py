@@ -31,19 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-_RANGE_CACHES: list = []
-
-
-def release_ordinal_caches() -> None:
-    """Unpersist range frames pinned by earlier global_ordinals calls
-    (the webtext signature-cache discipline: auto-release on the next
-    call so long sessions don't accumulate executor storage)."""
-    while _RANGE_CACHES:
-        try:
-            _RANGE_CACHES.pop().unpersist()
-        except Exception:
-            pass
+from . import matreg
 
 
 def global_ordinals(
@@ -61,13 +49,14 @@ def global_ordinals(
     (row_number over the same ordering)."""
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    release_ordinal_caches()
-    ranged = (
-        df.repartitionByRange(p, F.col(order_col).asc())
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    _RANGE_CACHES.append(ranged)
+    # superseding the previous call's range frame before the persist:
+    # a repeat call on the same input shares its cache entry
+    ranged = matreg.supersede(
+        "global_ordinals",
+        df.repartitionByRange(p, F.col(order_col).asc()).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+    ).persist()
     counts = sorted(
         (r["_pid"], r["cnt"])
         for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()

@@ -1,10 +1,16 @@
 """Per-producer materialization registry (r06, guide §5 driver memory).
 
-Every eager per-call materialization on a hot query path — a persisted
-frame that several consumers in one plan share, or an explicit
-driver-built broadcast — is registered under its producer's key and
-released when the SAME producer runs again (the signature-cache
-supersede contract from webtext.release_signature_caches, generalized).
+The one place that records and releases per-call materializations on a
+hot query path: a persisted frame that several consumers in one plan
+share (signature and fingerprint frames, gram and segment frames, kNN
+round aggregates, the global_ordinals range frame) or an explicit
+driver-built broadcast. Each is registered under its producer's key and
+released when the SAME producer runs again, so one key holds at most
+one call's objects. Three calls:
+
+- `release(key)`: unpersist and forget everything under `key`.
+- `keep(key, obj)`: register `obj` under `key`, next to what is there.
+- `supersede(key, obj)`: `release(key)`, then `keep(key, obj)`.
 
 Why: localCheckpoint/broadcast blocks are otherwise freed only when the
 ContextCleaner notices the Python proxy was garbage-collected, which in
@@ -19,7 +25,9 @@ Safety: registered frames are persist()-ed (lineage kept), never
 checkpointed, so a release is always correct — any late consumer
 silently recomputes from lineage instead of reading freed blocks.
 Broadcasts are released with unpersist() (re-broadcastable on next
-use), never destroy().
+use), never destroy(). An unpersist that raises — an entry left by a
+SparkContext that has since been stopped, whose blocks died with it —
+is dropped all the same.
 """
 
 from __future__ import annotations
@@ -27,16 +35,24 @@ from __future__ import annotations
 _REG: dict[str, list] = {}
 
 
+def release(key: str) -> None:
+    """Unpersist everything registered under `key` and forget it."""
+    for obj in _REG.pop(key, []):
+        try:
+            obj.unpersist()
+        except Exception:  # session already stopped
+            pass
+
+
+def keep(key: str, obj):
+    """Register `obj` (a persisted DataFrame or a Broadcast — anything
+    with .unpersist()) under `key`. Returns `obj`."""
+    _REG.setdefault(key, []).append(obj)
+    return obj
+
+
 def supersede(key: str, obj):
     """Release everything previously registered under `key`, then
-    register `obj` (a persisted DataFrame or a Broadcast — anything
-    with .unpersist()). Returns `obj`."""
-    old = _REG.setdefault(key, [])
-    while old:
-        o = old.pop()
-        try:
-            o.unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    old.append(obj)
-    return obj
+    register `obj`. Returns `obj`."""
+    release(key)
+    return keep(key, obj)

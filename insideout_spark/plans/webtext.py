@@ -20,20 +20,23 @@ from . import matreg
 from .util import ensure_parallel
 
 
-def _materialize(key: str, df: DataFrame) -> DataFrame:
+def _materialize(key: str, df: DataFrame) -> tuple[DataFrame, int]:
     """Persist + eagerly compute a per-call shared frame, superseding
-    the previous call's copy (matreg, guide §5): persistence keeps the
-    lineage, so a later release is always correct — consumers of a
-    released frame recompute instead of reading freed blocks. The
-    release comes first: a repeat call on the same input has the same
-    plan, so it shares the old frame's cache entry, and a release after
-    the persist would drop that entry and leave every consumer to
-    recompute."""
+    the previous call's copy (matreg, guide §5); returns the frame and
+    its row count. Persistence keeps the lineage, so a later release is
+    always correct — consumers of a released frame recompute instead of
+    reading freed blocks. The release comes first: a repeat call on the
+    same input has the same plan, so it shares the old frame's cache
+    entry, and a release after the persist would drop that entry and
+    leave every consumer to recompute. The count is EAGER on purpose:
+    broadcast-exchange subqueries run in separate threads, and with a
+    lazily-populated cache each of a frame's consumers would race it
+    and recompute the whole Python pass (measured: cold
+    simhash_near_dup_pairs 6.5 s vs a 2 s fingerprint pass)."""
     from pyspark import StorageLevel
 
     df = matreg.supersede(key, df).persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
+    return df, df.count()
 
 # ---------------------------------------------------------------------------
 # exact dedup (hash groupBy)
@@ -435,43 +438,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", k: int = 5) -> D
     )
 
 
-# cached per-doc fingerprint/signature frames of past near-dup calls;
-# superseded on the next call of the same operator (auto-release) or
-# freed explicitly — same contract as plans/knn.release_round_caches
-# (ADVICE r03: simhash_near_dup_pairs/minhash_lsh_pairs leaked one
-# pinned cache per call in long sessions)
-_SIG_CACHES: list = []
-
-
 def release_signature_caches() -> None:
-    """Unpersist every signature/fingerprint cache left by previous
-    minhash_lsh_pairs / simhash_near_dup_pairs calls. Released result
-    DataFrames stay valid — re-consuming them recomputes. Entries from a
-    stopped SparkContext are dropped without unpersist: their blocks
-    died with that context, and unpersist on them raises."""
-    from pyspark import SparkContext
-
-    while _SIG_CACHES:
-        df = _SIG_CACHES.pop()
-        if df.sparkSession.sparkContext is SparkContext._active_spark_context:
-            df.unpersist()
-
-
-def _register_sig_cache(df: DataFrame, auto_release: bool) -> DataFrame:
-    if auto_release:
-        release_signature_caches()
-    df = df.cache()
-    _SIG_CACHES.append(df)
-    # EAGER materialization: the signature frame has 3+ consumers (band
-    # explode + both pair-side re-attach joins), and broadcast-exchange
-    # subqueries run in separate threads — with a lazily-populated
-    # cache they race it and EACH recomputes the full Python
-    # fingerprint pass (measured: cold simhash_near_dup_pairs 6.5 s vs
-    # a 2 s fingerprint pass; Arrow transport is serialized on this
-    # box, so concurrent duplicate passes stack). One count() up front
-    # guarantees a single pass.
-    df._io_nrows = df.count()  # row count reused by the broadcast gate
-    return df
+    """Unpersist the signature/fingerprint frame left by the last
+    minhash_lsh_pairs / simhash_near_dup_pairs / dedup_incremental call
+    (the next such call supersedes it anyway). Released result
+    DataFrames stay valid — re-consuming them recomputes."""
+    matreg.release("signatures")
 
 
 # Signature/fingerprint frames at or under these bounds are BROADCAST
@@ -491,10 +463,10 @@ _SIG_BROADCAST_ROWS = 2_000_000
 _SIG_BROADCAST_BYTES = 256 << 20
 
 
-def _sig_broadcaster(df: DataFrame):
-    """Return F.broadcast when `df` is provably small, identity
-    otherwise — join RESULTS are identical either way."""
-    n = getattr(df, "_io_nrows", None)
+def _sig_broadcaster(df: DataFrame, n: int | None):
+    """Return F.broadcast when `df` (of `n` rows, None if unknown) is
+    provably small, identity otherwise — join RESULTS are identical
+    either way."""
     if n is not None:
         small = n <= _SIG_BROADCAST_ROWS
     else:
@@ -660,7 +632,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     bucket_cap: int | None = 1024,
     signatures: DataFrame | None = None,
-    auto_release: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded LSH, verified by signature-
     estimated Jaccard >= threshold. shingle->minhash->band->bucket-join:
@@ -668,21 +639,20 @@ def minhash_lsh_pairs(
 
     `signatures`: a precomputed (doc_id, sig) table (see
     save_signatures) — skips the signature pass entirely; the caller
-    owns its lifecycle. Without it, signatures are computed and cached
-    for this call (they feed the band explode AND both re-attach
-    joins); the previous call's cache is auto-released."""
+    owns its lifecycle. Without it, signatures are computed and
+    materialized for this call (they feed the band explode AND both
+    re-attach joins), superseding the previous near-dup call's
+    signature frame."""
     if signatures is not None:
-        # the caller owns this frame's lifecycle, but a PREVIOUS direct
-        # call's pinned signature cache must still be released (ADVICE
-        # r04: this branch skipped auto-release, leaking one cache in
-        # long sessions that alternate paths)
-        if auto_release:
-            release_signature_caches()
-        sigs = signatures
-    else:
-        sigs = _register_sig_cache(
-            minhash_signatures(docs, text_col, k), auto_release
-        )
+        return _minhash_pairs(signatures, signatures.count(), threshold, bucket_cap)
+    sigs, n = _materialize("signatures", minhash_signatures(docs, text_col, k))
+    return _minhash_pairs(sigs, n, threshold, bucket_cap)
+
+
+def _minhash_pairs(
+    sigs: DataFrame, n: int, threshold: float, bucket_cap: int | None
+) -> DataFrame:
+    """minhash_lsh_pairs over its (doc_id, sig) table of `n` rows."""
     # Below the row gate the whole banded generation runs on the driver
     # (_near_dup_pairs / _driver_pairs); above it, the band self-join.
     # The distributed chain orders capped buckets by the FULL 32-value
@@ -721,7 +691,7 @@ def minhash_lsh_pairs(
         return _sig_bands(sigs), ["band", "bh"], sig_str, est, keep
 
     return _near_dup_pairs(
-        sigs, "sig", bucket_cap, "est_jaccard double", 4 * _MINHASH_PERMS,
+        sigs, n, "sig", bucket_cap, "est_jaccard double", 4 * _MINHASH_PERMS,
         driver_parts, spark_parts,
     )
 
@@ -733,7 +703,6 @@ def dedup_incremental(
     k: int = 5,
     threshold: float = 0.5,
     bucket_cap: int | None = 1024,
-    auto_release: bool = True,
 ) -> DataFrame:
     """Incremental-ingest dedup: admit a NEW batch against an already-
     signed corpus (a save_signatures table) plus within itself, without
@@ -753,13 +722,13 @@ def dedup_incremental(
     standard capped banded self-join (minhash_lsh_pairs). Oracle:
     webtext_sql.dedup_incremental_sql (lockstep split + bands + est).
     """
-    new_sigs = _register_sig_cache(
-        minhash_signatures(new_docs, text_col, k), auto_release
+    new_sigs, n_new = _materialize(
+        "signatures", minhash_signatures(new_docs, text_col, k)
     )
     nb = _sig_bands(new_sigs).withColumnRenamed("doc_id", "n_doc")
     cb = _sig_bands(corpus_signatures).withColumnRenamed("doc_id", "c_doc")
-    _bn = _sig_broadcaster(new_sigs)
-    _bc = _sig_broadcaster(corpus_signatures)
+    _bn = _sig_broadcaster(new_sigs, n_new)
+    _bc = _sig_broadcaster(corpus_signatures, None)
     cross = (
         nb.join(cb, ["band", "bh"])
         .select("n_doc", "c_doc")
@@ -779,15 +748,7 @@ def dedup_incremental(
         .filter(_sig_est_jaccard() >= threshold)
         .select("n_doc", F.col("c_doc").alias("match_id"))
     )
-    within = minhash_lsh_pairs(
-        new_docs,
-        text_col,
-        k,
-        threshold,
-        bucket_cap,
-        signatures=new_sigs,
-        auto_release=False,
-    ).select(
+    within = _minhash_pairs(new_sigs, n_new, threshold, bucket_cap).select(
         F.col("doc_b").alias("n_doc"), F.col("doc_a").alias("match_id")
     )
     dup = (
@@ -1080,7 +1041,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     bucket_cap: int | None = 1024,
-    auto_release: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs (doc_a, doc_b, hamming): split the 64-bit
     fingerprint into 4 disjoint 16-bit blocks and self-join on each
@@ -1098,7 +1058,7 @@ def simhash_near_dup_pairs(
     dedup analog of the reference's identical-result dedup
     (index.go:71-74, dedup of posting hits); DuckDB oracle:
     webtext_sql.simhash_pairs_sql."""
-    sh = _register_sig_cache(simhash64(docs, text_col), auto_release)
+    sh, n = _materialize("signatures", simhash64(docs, text_col))
     # Below the row gate the whole generation runs on the driver
     # (_near_dup_pairs): SimHash's ~200k mostly-tiny buckets at sf1 made
     # a per-bucket mapInPandas loop SLOWER than the join path (5.5 vs
@@ -1141,7 +1101,7 @@ def simhash_near_dup_pairs(
         return bands, ["band", "bv"], F.col("simhash"), ham, keep
 
     return _near_dup_pairs(
-        sh, "simhash", bucket_cap, "hamming int", 8, driver_parts, spark_parts
+        sh, n, "simhash", bucket_cap, "hamming int", 8, driver_parts, spark_parts
     )
 
 
@@ -1204,7 +1164,7 @@ def _gram_frame(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     out = ensure_parallel(docs.select("doc_id", text_col), "doc_id").mapInPandas(
         run, schema="doc_id long, block string, ng int, grams array<string>"
     )
-    return _materialize("gram_frame", out)
+    return _materialize("gram_frame", out)[0]
 
 
 def ngram_jaccard_pairs(
@@ -1296,7 +1256,7 @@ def ngram_jaccard_pairs(
     # the gate (corpus-scale gram tables) the shuffle joins are kept —
     # there the prefilter survivor set is small, not the gram table.
     garr = gf.select("doc_id", "grams")
-    _gb = _sig_broadcaster(garr)
+    _gb = _sig_broadcaster(garr, None)
     pairs = pairs.join(
         _gb(garr.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))),
         "doc_a",
@@ -1897,6 +1857,7 @@ def _driver_pairs(ids, band_keys, cap, chain_rank, score) -> tuple:
 
 def _near_dup_pairs(
     sigs: DataFrame,
+    n: int,
     val_col: str,
     bucket_cap: int | None,
     score_field: str,
@@ -1905,9 +1866,9 @@ def _near_dup_pairs(
     spark_parts,
 ) -> DataFrame:
     """(doc_a, doc_b, score) pairs of a banded near-dup operator over
-    its (doc_id, `val_col`) signature table; `score_field` names the
-    score column and its type ("est_jaccard double"), `row_bytes` the
-    driver-side width of one row. Two arms, identical pair sets and
+    its (doc_id, `val_col`) signature table of `n` rows; `score_field`
+    names the score column and its type ("est_jaccard double"),
+    `row_bytes` the driver-side width of one row. Two arms, identical pair sets and
     scores (pinned by the driver == distributed tests):
 
     - Driver: at most _SIG_BROADCAST_ROWS rows and
@@ -1928,11 +1889,6 @@ def _near_dup_pairs(
       carries only ids), then `score_col` in Catalyst, filtered by
       `keep`. Built only here: constructing these frames and columns
       costs ~0.4 s of driver time per call (8k docs, local[4])."""
-    n = getattr(sigs, "_io_nrows", None)
-    if n is None:
-        # persisted signature tables (the save_signatures contract): a
-        # count is metadata-cheap and callers reuse the frame
-        n = sigs._io_nrows = sigs.count()
     score_name = score_field.split()[0]
     small = n <= _SIG_BROADCAST_ROWS and n * row_bytes <= _SIG_BROADCAST_BYTES
     if 0 < n and small:
@@ -1992,7 +1948,6 @@ def embedding_near_dup_pairs(
     planes = lsh_planes(n_tables, n_planes, dim)
     quant = F.transform(F.col(vec_col), _quantize_col)
     sigs = embeddings.select(F.col(id_col).alias("doc_id"), quant.alias("q"))
-    sigs._io_nrows = n
     # both arms keep a 1e-4 margin below the threshold: round(cos, d)
     # raises a value by at most half a rounding step (5e-6 at d=5), so
     # no pair the Catalyst round + filter keeps is dropped early
@@ -2030,7 +1985,7 @@ def embedding_near_dup_pairs(
         return bands, ["table", "bucket"], F.col("doc_id"), _quantized_cosine("va", "vb"), keep
 
     pairs = _near_dup_pairs(
-        sigs, "q", bucket_cap, "cos_raw double", dim * 8, driver_parts, spark_parts
+        sigs, n, "q", bucket_cap, "cos_raw double", dim * 8, driver_parts, spark_parts
     )
     return pairs.select(
         F.col("doc_a").alias("vec_a"),
@@ -3270,7 +3225,7 @@ def paragraph_dedup(
                 {"doc_id": d_ids, "seg_no": seg_nos, "seg": seg_texts}
             ).astype({"doc_id": "int64", "seg_no": "int32"})
 
-    ex = _materialize(
+    ex, _ = _materialize(
         "paragraph_segments",
         ensure_parallel(docs.select("doc_id", text_col), "doc_id").mapInPandas(
             run, schema="doc_id long, seg_no int, seg string"

@@ -537,3 +537,34 @@ def test_fused_equals_jvm_full_rows(spark, levels_index, include_properties, top
     levels = {r[fused_cols.index("admin_level")] for r in fused}
     assert None in levels and levels - {None}
     assert not {r[2] for r in fused} & {b[0] for b in bad}
+
+
+def test_nan_admin_level_is_null_on_every_strategy(spark):
+    """A GeoJSON `"admin_level": "nan"` parses to NULL, like an
+    unparsable level, so the fused stab (which ships levels as float64
+    with NaN for NULL) and the jvm arm return identical rows."""
+    import json
+
+    from insideout_spark.geo.cover import CoverParams
+    from insideout_spark.geo.geojson import parse_feature_collection
+    from insideout_spark.plans.index_build import build_index
+
+    ring = [[2.30, 48.80], [2.38, 48.80], [2.38, 48.86], [2.30, 48.86], [2.30, 48.80]]
+    fc = {"type": "FeatureCollection", "features": [{
+        "type": "Feature",
+        "properties": {"name": "sq", "admin_level": "nan"},
+        "geometry": {"type": "Polygon", "coordinates": [ring]},
+    }]}
+    loops = parse_feature_collection(json.dumps(fc))
+    assert loops[0]["admin_level"] is None
+    idx = build_index(spark, loops, CoverParams(10, 16, 24), CoverParams(10, 15, 16))
+    try:
+        pts = spark.createDataFrame([(1, 48.83, 2.34)], "point_id long, lat double, lng double")
+        fused, jvm = (
+            pip_join(pts, idx, id_cols=("point_id",), strategy=s).collect()
+            for s in ("fused", "jvm")
+        )
+        assert fused == jvm and len(fused) == 1
+        assert fused[0]["admin_level"] is None
+    finally:
+        idx.release()

@@ -235,15 +235,15 @@ def test_knn_boundary_distance_ties_match_brute(spark):
 
 def test_knn_round_caches_released(spark, points_df, targets_df):
     """VERDICT r02 'What's wrong' #3: per-round persisted aggs must be
-    releasable — release_round_caches() leaves no extra persisted RDDs,
-    and the next knn_cell_join auto-releases its predecessor's.
+    releasable — matreg.release("knn_rounds") leaves no extra persisted
+    RDDs, and the next knn_cell_join releases its predecessor's.
 
     Measured by RDD-id SET arithmetic, not global counts: the shared
     session carries other fixtures' caches (which materialize lazily —
     possibly DURING the join under test) and the async ContextCleaner
     can drop GC'd ones mid-test, so global size comparisons are
     order-dependent."""
-    from insideout_spark.plans import knn as knn_mod
+    from insideout_spark.plans import matreg
 
     df, _ = points_df
     tdf, _ = targets_df
@@ -255,15 +255,15 @@ def test_knn_round_caches_released(spark, points_df, targets_df):
     # materialize the fixture caches so they can't appear mid-test
     df.count()
     tdf.count()
-    knn_mod.release_round_caches()
+    matreg.release("knn_rounds")
     before = pids()
     res1 = knn_cell_join(df.limit(100), tdf, k=3, res=5)
     assert res1.count() > 0
     round1_ids = pids() - before
     assert round1_ids  # rounds are cached
-    knn_mod.release_round_caches()
+    matreg.release("knn_rounds")
     assert not (pids() & round1_ids)
-    # auto-release: a third join clears the second join's caches
+    # a third join clears the second join's caches
     res2 = knn_cell_join(df.limit(100), tdf, k=3, res=5)
     assert res2.count() > 0
     round2_ids = pids() - before
@@ -271,7 +271,7 @@ def test_knn_round_caches_released(spark, points_df, targets_df):
     res3 = knn_cell_join(df.limit(100), tdf, k=3, res=5)
     assert res3.count() > 0
     assert not (pids() & round2_ids)
-    knn_mod.release_round_caches()
+    matreg.release("knn_rounds")
     assert not (pids() - before)
 
 

@@ -648,30 +648,24 @@ def test_minhash_driver_pairs_match_distributed(spark, monkeypatch):
     assert native == distributed and len(native) > 0
 
 
-def test_signature_cache_drops_entries_of_stopped_context(spark, dup_docs):
-    """A signature cache left by a stopped SparkContext is dropped
-    without unpersist (which raises on a dead context); live entries
-    are still unpersisted, and the next minhash call runs."""
-    from types import SimpleNamespace
-
+def test_near_dup_with_components_job_count(spark, jobs_started):
+    """MinHash pairs + connected components on the 200-doc cluster run
+    a fixed number of Spark jobs: one signature pass (persist + eager
+    count), the driver arm's collect of the cached signatures, and no
+    job in connected_components, which takes the driver arm's numpy
+    pairs (`_io_pairs_np`) instead of re-reading the pair frame."""
     from insideout_spark.plans import webtext
+    from insideout_spark.plans.components import connected_components
 
-    class StaleCache:
-        sparkSession = SimpleNamespace(sparkContext=object())
+    docs = spark.createDataFrame(
+        _near_dup_cluster_rows(200, 30), "doc_id long, text string"
+    )
 
-        def unpersist(self):
-            raise AssertionError("unpersist on a cache of a stopped context")
+    def build():
+        pairs = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
+        connected_components(pairs).collect()
 
-    live = dup_docs.select("doc_id").cache()
-    live.count()
-    webtext._SIG_CACHES.extend([StaleCache(), live])
-    webtext.release_signature_caches()
-    assert webtext._SIG_CACHES == []
-    assert not live.is_cached
-    webtext._SIG_CACHES.append(StaleCache())
-    assert webtext.minhash_lsh_pairs(dup_docs, threshold=0.35).count() > 0
-    assert not any(isinstance(c, StaleCache) for c in webtext._SIG_CACHES)
-    webtext.release_signature_caches()
+    assert jobs_started(build) == 4
 
 
 def test_driver_pairs_budget_falls_back(spark, monkeypatch):
@@ -900,8 +894,9 @@ def test_minhash_saved_signatures_roundtrip(spark, tmp_path):
     """save_signatures -> parquet -> minhash_lsh_pairs(signatures=...)
     must produce exactly the pairs of the direct path (the corpus-scale
     reuse contract), and the signature caches of direct calls must be
-    releasable / auto-released (ADVICE r03)."""
-    from insideout_spark.plans import webtext
+    released by the next near-dup call and by release_signature_caches
+    (ADVICE r03)."""
+    from insideout_spark.plans import matreg, webtext
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     direct = {
@@ -920,13 +915,14 @@ def test_minhash_saved_signatures_roundtrip(spark, tmp_path):
     assert via_saved == direct and len(direct) > 0
 
     # cache registry: a direct call registers one cache; the next
-    # direct call auto-releases it; explicit release empties the list
+    # direct call releases it; explicit release empties the key
     webtext.minhash_lsh_pairs(docs, threshold=0.35).count()
-    assert len(webtext._SIG_CACHES) == 1
+    [first] = matreg._REG["signatures"]
     webtext.simhash_near_dup_pairs(docs).count()
-    assert len(webtext._SIG_CACHES) == 1  # predecessor released
+    [second] = matreg._REG["signatures"]  # predecessor released
+    assert not first.is_cached and second.is_cached
     webtext.release_signature_caches()
-    assert webtext._SIG_CACHES == []
+    assert "signatures" not in matreg._REG and not second.is_cached
 
 
 def test_ngram_block_cap_chain_semantics(spark):

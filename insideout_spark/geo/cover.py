@@ -374,13 +374,15 @@ def auto_cover_params(loop_rows, max_cells: int = 32):
         ring = np.asarray(r["ring"], dtype=np.float64)
         dx = float(ring[:, 0].max() - ring[:, 0].min())
         dy = float(ring[:, 1].max() - ring[:, 1].min())
-        diags.append(math.hypot(dx, dy))
+        diags.append(math.sqrt(dx * dx + dy * dy))  # == Catalyst sqrt(pow + pow)
     if not diags:
         return (
             CoverParams(*DEFAULT_INTERIOR),
             CoverParams(*DEFAULT_EXTERIOR),
         )
-    med = sorted(diags)[len(diags) // 2]
+    # == Spark's exact percentile(d, 0.5), which averages the middles
+    d = sorted(diags)
+    med = 0.5 * d[(len(d) - 1) // 2] + 0.5 * d[len(d) // 2]
     return params_from_median_diag(med, max_cells)
 
 

@@ -121,7 +121,6 @@ def connected_components(
     b_col: str = "doc_b",
     max_iters: int = 50,
     _depth: int = 0,
-    driver_limit: int | None = None,
 ) -> DataFrame:
     """(node, component_id) for every node appearing in `pairs`;
     component_id = min node id in the component. Deterministic,
@@ -155,68 +154,50 @@ def connected_components(
     # build: 0.7 s). Self-loops are kept once (flip filtered), so every
     # node still appears as src.
     spark = pairs.sparkSession
-    # localCheckpoint TRUNCATES the logical plan, not just caches it:
-    # every iteration references its inputs twice (union + propagation
-    # join), so with plain persist the ANALYZED plan doubles per round
-    # on top of the full upstream pair-pipeline lineage — exponential
-    # Catalyst work that OOMs the driver after ~10 rounds. Cutting
-    # lineage each round keeps plans O(1). (Checkpoint blocks are freed
-    # by the ContextCleaner when the frames are garbage-collected.)
     # driver pass-through (r06): a producer that generated the pair set
-    # on the driver (minhash_lsh_pairs' gated native path) attaches the
+    # on the driver (the near-dup engine's driver arm) attaches the
     # arrays to the very frame it built FROM them — consuming them
     # directly skips a full compute + collect round-trip of identical
     # data. Only the exact returned frame carries the attribute (any
     # transformation returns a new object without it), so content
     # equality is by construction.
-    hint = getattr(pairs, "_io_pairs_np", None)
-    limit = _CC_DRIVER_EDGES if driver_limit is None else int(driver_limit)
+    driver_edges = getattr(pairs, "_io_pairs_np", None)
     if (
-        hint is not None
-        and a_col == "doc_a"
-        and b_col == "doc_b"
-        and len(hint[0]) <= limit
+        driver_edges is None
+        or (a_col, b_col) != ("doc_a", "doc_b")
+        or len(driver_edges[0]) > _CC_DRIVER_EDGES
     ):
-        import numpy as np
-        import pandas as pd
-
-        if len(hint[0]) == 0:
-            return spark.createDataFrame([], "node long, component_id long")
-        nodes, comp = _cc_numpy(
-            np.asarray(hint[0], dtype=np.int64), np.asarray(hint[1], dtype=np.int64)
-        )
-        return spark.createDataFrame(
-            pd.DataFrame({"node": nodes, "component_id": comp})
-        )
-    # persist (NOT checkpoint) the pair table for the count + collect /
-    # checkpoint that follow: persistence is releasable (matreg, guide
-    # §5 — checkpoint blocks linger until the ContextCleaner runs and
-    # measured 10 -> 45 -> 54 s degradation across repeated CC calls at
-    # sf1), and the driver path frees it the moment the edges are on
-    # the driver.
-    base = pairs.select(
-        F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_pairs = base.count()  # cheap: counts the cached blocks, not the pipeline
-    if n_pairs <= limit:
-        if n_pairs == 0:
+        # persist (NOT checkpoint) the pair table for the count + collect /
+        # checkpoint that follow: persistence is releasable (matreg, guide
+        # §5 — checkpoint blocks linger until the ContextCleaner runs: 10 ->
+        # 45 -> 54 s across repeated CC calls at sf1); the driver path frees
+        # it the moment the edges are on the driver.
+        base = pairs.select(
+            F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        driver_edges = None
+        if base.count() <= _CC_DRIVER_EDGES:  # counts the cached blocks only
+            pdf = base.toPandas()  # bounded by the count (size-gated collect)
             base.unpersist()
-            return spark.createDataFrame([], "node long, component_id long")
-        pdf = base.toPandas()  # bounded by `limit` (size-gated collect)
-        base.unpersist()
+            driver_edges = (pdf["src"], pdf["dst"])
+    if driver_edges is not None:
         import numpy as np
         import pandas as pd
 
-        nodes, comp = _cc_numpy(
-            pdf["src"].to_numpy(dtype=np.int64), pdf["dst"].to_numpy(dtype=np.int64)
-        )
+        a, b = (np.asarray(v, dtype=np.int64) for v in driver_edges)
+        if len(a) == 0:
+            return spark.createDataFrame([], "node long, component_id long")
+        nodes, comp = _cc_numpy(a, b)
         return spark.createDataFrame(
             pd.DataFrame({"node": nodes, "component_id": comp})
         )
     # distributed loop: truncate lineage ONCE from the cached blocks,
-    # then drop the cache — the loop below references `edges` every
-    # round and needs the O(1) checkpoint plan, not the full upstream
-    # pair-pipeline lineage.
+    # then drop the cache. localCheckpoint TRUNCATES the logical plan,
+    # not just caches it: every round references its inputs twice
+    # (union + propagation join), so with plain persist the ANALYZED
+    # plan doubles per round on top of the full upstream pair-pipeline
+    # lineage — exponential Catalyst work that OOMs the driver after ~10
+    # rounds. (Checkpoint blocks are freed by the ContextCleaner.)
     ckpt = base.localCheckpoint(eager=True)
     base.unpersist()
     base = ckpt
@@ -321,8 +302,7 @@ def connected_components(
         # originStats through every level's joins otherwise
         contracted = _stats_barrier(contracted)
         sub = connected_components(
-            contracted, "a", "b", max_iters=max_iters, _depth=_depth + 1,
-            driver_limit=limit,
+            contracted, "a", "b", max_iters=max_iters, _depth=_depth + 1
         )
         # eager checkpoint per level: without it the lazily-nested
         # compose joins accumulate across recursion levels and

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from .index_build import IndexBundle
+from .util import collect_at_most
 
 # results_to_geojson broadcasts the LAYER's geometry from the driver —
 # layers are the small side (35k communes ~ a few hundred MB of rings),
@@ -23,23 +24,24 @@ def results_to_geojson(
     result: DataFrame,
     index: IndexBundle,
     id_cols=("url",),
-    max_features: int = MAX_EXPORT_FEATURES,
 ) -> DataFrame:
     """Attach a GeoJSON Feature string per hit row — closed polygon ring
     rebuilt from the feature geometry like the reference's WithinHandler
     (server/http.go:123, geom.NewPolygonFlat). Adds the engine's
     provenance properties insided_fid/insided_loop_index
-    (gen/go/insidesvc/v1/prop.go:4-8 analog)."""
+    (gen/go/insidesvc/v1/prop.go:4-8 analog). A layer of more than
+    MAX_EXPORT_FEATURES loops raises instead of reaching the driver."""
     spark = result.sparkSession
-    n_feats = index.features.count()
-    if n_feats > max_features:
+    rows = collect_at_most(
+        index.features.select("feature_id", "loop_pos", "ring", "properties"),
+        MAX_EXPORT_FEATURES,
+    )
+    if rows is None:
         raise ValueError(
-            f"results_to_geojson broadcasts the layer geometry from the "
-            f"driver: {n_feats} feature loops > max_features={max_features}. "
-            "Export per-partition (join the ring column distributed) or "
-            "raise max_features explicitly if the driver can hold the layer."
+            "results_to_geojson broadcasts the layer geometry from the driver: the "
+            f"layer has more than MAX_EXPORT_FEATURES={MAX_EXPORT_FEATURES} feature "
+            "loops. Export per-partition (join the ring column distributed) instead."
         )
-    rows = index.features.select("feature_id", "loop_pos", "ring", "properties").collect()
     geo = {
         (r["feature_id"], r["loop_pos"]): (
             [[float(v[0]), float(v[1])] for v in r["ring"]],

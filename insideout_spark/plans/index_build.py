@@ -259,69 +259,39 @@ def features_df(spark: SparkSession, loop_rows) -> DataFrame:
     5.2 s to build for 35k polygons AND re-shipped the whole geometry
     payload on EVERY downstream action (count, cover build, property
     joins each re-serialized it — measured 3.7 s per extra action); the
-    parquet scan converts once and every job reads the columnar file.
-    Falls back to the original row path if pyarrow lacks a needed type."""
+    parquet scan converts once and every job reads the columnar file."""
     import json as _json
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     loop_rows = list(loop_rows)
-    try:
-        import tempfile
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        table = pa.table(
-            {
-                "feature_id": pa.array(
-                    [int(r["feature_id"]) for r in loop_rows], pa.int32()
-                ),
-                "loop_pos": pa.array(
-                    [int(r["loop_pos"]) for r in loop_rows], pa.int32()
-                ),
-                "ring": pa.array(
-                    [r["ring"] for r in loop_rows],
-                    pa.list_(pa.list_(pa.float64())),
-                ),
-                "properties": pa.array(
-                    [r.get("properties") or {} for r in loop_rows],
-                    pa.map_(pa.string(), pa.string()),
-                ),
-                "properties_json": pa.array(
-                    [
-                        r.get("properties_json")
-                        or _json.dumps(r.get("properties") or {}, sort_keys=True)
-                        for r in loop_rows
-                    ],
-                    pa.string(),
-                ),
-                "admin_level": pa.array(
-                    [
-                        None if r.get("admin_level") is None else float(r["admin_level"])
-                        for r in loop_rows
-                    ],
-                    pa.float64(),
-                ),
-            }
-        )
-        d = tempfile.mkdtemp(prefix="insideout_features_")
-        _FEATURES_TMP_DIRS.append(d)
-        path = os.path.join(d, "features.parquet")
-        pq.write_table(table, path)
-        return spark.read.schema(FEATURES_SCHEMA).parquet(path)
-    except Exception:  # arrow type gap or missing pyarrow -> row path
-        rows = [
-            (
-                int(r["feature_id"]),
-                int(r["loop_pos"]),
-                [[float(c[0]), float(c[1])] for c in r["ring"]],
-                r.get("properties") or {},
-                r.get("properties_json")
-                or _json.dumps(r.get("properties") or {}, sort_keys=True),
-                r.get("admin_level"),
-            )
-            for r in loop_rows
-        ]
-        return spark.createDataFrame(rows, FEATURES_SCHEMA)
+    props = [r.get("properties") or {} for r in loop_rows]
+    table = pa.table(
+        {
+            "feature_id": pa.array([int(r["feature_id"]) for r in loop_rows], pa.int32()),
+            "loop_pos": pa.array([int(r["loop_pos"]) for r in loop_rows], pa.int32()),
+            "ring": pa.array([r["ring"] for r in loop_rows], pa.list_(pa.list_(pa.float64()))),
+            "properties": pa.array(props, pa.map_(pa.string(), pa.string())),
+            "properties_json": pa.array(
+                [
+                    r.get("properties_json") or _json.dumps(p, sort_keys=True)
+                    for r, p in zip(loop_rows, props)
+                ],
+                pa.string(),
+            ),
+            "admin_level": pa.array(
+                [None if (a := r.get("admin_level")) is None else float(a) for r in loop_rows],
+                pa.float64(),
+            ),
+        }
+    )
+    d = tempfile.mkdtemp(prefix="insideout_features_")
+    _FEATURES_TMP_DIRS.append(d)
+    path = os.path.join(d, "features.parquet")
+    pq.write_table(table, path)
+    return spark.read.schema(FEATURES_SCHEMA).parquet(path)
 
 
 def build_cell_index(

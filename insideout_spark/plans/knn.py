@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from ..functions.udfs import grid_cell_expr
 from ..geo import grid as geo_grid
 from . import matreg
+from .util import collect_at_most
+from .util import ensure_parallel as _ensure_parallel  # shared (r04)
 
 
 def _dist_sq(plat, plng, tlat, tlng):
@@ -58,7 +60,9 @@ def _dist_sq(plat, plng, tlat, tlng):
     return dlat * dlat + dlng * dlng
 
 
-from .util import ensure_parallel as _ensure_parallel  # shared (r04)
+# knn_join(strategy="auto") broadcasts target sets of at most this many
+# rows from the driver (knn_brute) and runs the cell-ring join past it.
+KNN_BROADCAST_TARGETS = 200_000
 
 
 def knn_brute(
@@ -69,10 +73,15 @@ def knn_brute(
     target_id_col: str = "target_id",
 ) -> DataFrame:
     """Vectorized brute-force kNN with a broadcast target matrix."""
+    t = targets.select(target_id_col, "lat", "lng").collect()
+    return _knn_brute_rows(points, t, k, id_col, target_id_col)
+
+
+def _knn_brute_rows(points, t, k, id_col, target_id_col):
+    """knn_brute over collected (target_id_col, lat, lng) rows `t`."""
     import numpy as np
 
     spark = points.sparkSession
-    t = targets.select(target_id_col, "lat", "lng").collect()
     tid = np.array([r[target_id_col] for r in t], dtype=np.int64)
     tlat = np.array([r["lat"] for r in t], dtype=np.float64)
     tlng = np.array([r["lng"] for r in t], dtype=np.float64)
@@ -271,13 +280,16 @@ def knn_join(
     id_col: str = "point_id",
     target_id_col: str = "target_id",
     strategy: str = "auto",
-    broadcast_limit: int = 200_000,
 ) -> DataFrame:
     """Strategy-selecting kNN (the engine's AQE-style physical choice):
-    small target sets -> vectorized brute force (no shuffle at all);
-    large -> cell-ring expansion. Both return identical rows."""
+    at most KNN_BROADCAST_TARGETS targets -> vectorized brute force over
+    the rows the bounded gate collect already read (no shuffle at all);
+    more -> cell-ring expansion. Both return identical rows."""
     if strategy == "auto":
-        strategy = "brute" if targets.count() <= broadcast_limit else "cells"
+        t = collect_at_most(targets.select(target_id_col, "lat", "lng"), KNN_BROADCAST_TARGETS)
+        if t is not None:
+            return _knn_brute_rows(points, t, k, id_col, target_id_col)
+        strategy = "cells"
     if strategy == "brute":
         return knn_brute(points, targets, k, id_col, target_id_col)
     return knn_cell_join(points, targets, k, id_col=id_col, target_id_col=target_id_col)

@@ -192,7 +192,6 @@ def pip_join(
     lng_col: str = "lng",
     *,
     strategy: str | None = None,
-    broadcast_index: bool = True,
     salt_buckets: int | None = None,
     bucketed_table: str | None = None,
     broadcast_edges: bool = True,
@@ -214,8 +213,7 @@ def pip_join(
     server/server.go:73-108):
 
     * None (default): "fused", or "jvm" when broadcast_edges is False
-      (the fused arm broadcasts every ring). broadcast_index=False
-      always selects "salted".
+      (the fused arm broadcasts every ring).
     * "fused": the whole stab in one Arrow pass with a broadcast
       searchsorted index; the ray cast runs only on boundary-cell
       residue, chunked to a fixed memory budget. The kernel emits
@@ -240,9 +238,7 @@ def pip_join(
     id_cols = list(id_cols)
     man = index.manifest
     min_l, max_l = man["min_cover_level"], man["max_cover_level"]
-    if not broadcast_index:
-        strategy = "salted"
-    elif strategy is None:
+    if strategy is None:
         # the fused arm broadcasts every ring, so a caller that keeps
         # edges off the broadcast gets the edge-join arm
         strategy = "fused" if broadcast_edges else "jvm"

@@ -27,3 +27,11 @@ def ensure_parallel(df: DataFrame, *key_cols: str) -> DataFrame:
     if df.rdd.getNumPartitions() * 2 < target:
         return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
     return df
+
+
+def collect_at_most(df: DataFrame, cap: int) -> list | None:
+    """`df`'s rows if there are at most `cap` of them, else None: the one
+    size gate for whole-frame driver collects, read in one bounded
+    `limit(cap + 1)` pass (a count() first would read the input twice)."""
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None

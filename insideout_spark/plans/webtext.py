@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import matreg
-from .util import ensure_parallel
+from .util import collect_at_most, ensure_parallel
 
 
 def _materialize(key: str, df: DataFrame) -> tuple[DataFrame, int]:
@@ -1300,9 +1300,8 @@ def _quantize_col(col):
 
 # cosine_topk_brute materializes the corpus on the DRIVER; above this
 # bound it refuses instead of OOMing (VERDICT r04 'What's wrong' #1 —
-# same contract as postgis.MAX_STAB_POINTS). 200k x 64-dim float64
-# ~ 100 MB driver + broadcast; use ann_topk / lsh_bucket_ann / ivf_ann
-# past it.
+# same contract as postgis.MAX_STAB_POINTS) and ann_topk routes to
+# ivf_ann. 200k x 64-dim float64 ~ 100 MB driver + broadcast.
 MAX_BRUTE_VECTORS = 200_000
 
 
@@ -1313,7 +1312,6 @@ def cosine_topk_brute(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     round_digits: int = 5,
-    brute_limit: int = MAX_BRUTE_VECTORS,
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the full matrix, vectorized
     numpy scoring per Arrow batch of queries. Ranking uses the score
@@ -1322,20 +1320,23 @@ def cosine_topk_brute(
     independent oracle (DuckDB) computes bit-identical values.
 
     This is the exact/oracle path: it collect()s the embedding table to
-    the driver, which is only sane for small corpora. `brute_limit`
-    makes that explicit — a corpus over the limit raises loudly
-    (pointing at ann_topk/lsh_bucket_ann/ivf_ann) instead of OOMing the
-    driver at scale."""
-    n_vecs = embeddings.count()
-    if n_vecs > brute_limit:
+    the driver, which is only sane for small corpora. A corpus over
+    MAX_BRUTE_VECTORS raises loudly (pointing at
+    ann_topk/lsh_bucket_ann/ivf_ann) instead of OOMing the driver at
+    scale; the bounded collect is the gate, so the input is read once."""
+    rows = collect_at_most(embeddings.select(id_col, vec_col), MAX_BRUTE_VECTORS)
+    if rows is None:
         raise ValueError(
-            f"cosine_topk_brute is the driver-side exact path: corpus has "
-            f"{n_vecs} vectors > brute_limit={brute_limit}. Use ann_topk "
-            "(auto strategy), lsh_bucket_ann, or ivf_ann at this scale, or "
-            "raise brute_limit explicitly if the driver can hold the matrix."
+            "cosine_topk_brute is the driver-side exact path: corpus has more than "
+            f"MAX_BRUTE_VECTORS={MAX_BRUTE_VECTORS} vectors. Use ann_topk (auto "
+            "strategy), lsh_bucket_ann, or ivf_ann at this scale."
         )
+    return _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits)
+
+
+def _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits):
+    """cosine_topk_brute over collected (id_col, vec_col) `rows`."""
     spark = embeddings.sparkSession
-    rows = embeddings.select(id_col, vec_col).collect()
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     mat = _quantize(np.array([r[vec_col] for r in rows], dtype=np.float64))
     norms = np.sqrt((mat * mat).sum(axis=1))
@@ -1387,24 +1388,24 @@ def ann_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     strategy: str = "auto",
-    brute_limit: int = MAX_BRUTE_VECTORS,
     round_digits: int = 5,
 ) -> DataFrame:
     """Strategy-selecting ANN (the knn_join pattern, VERDICT r04 'Next
-    round' #2): corpora at or under `brute_limit` take the exact
-    driver-broadcast brute path; larger corpora route to IVF — trained
-    coarse quantizer, inverted-list probe, exact rescoring of probed
+    round' #2): corpora of at most MAX_BRUTE_VECTORS take the exact
+    driver-broadcast brute path with the rows the bounded gate collect
+    already read; larger corpora route to IVF — trained coarse
+    quantizer, inverted-list probe, exact rescoring of probed
     candidates only, fully distributed. NOTE the routed path is
     APPROXIMATE (candidates limited to probed lists) — same top-k
     schema, possibly different tail neighbors; callers needing exact
     results at scale must shard the brute scan themselves."""
     if strategy == "auto":
-        strategy = "brute" if embeddings.count() <= brute_limit else "ivf"
+        rows = collect_at_most(embeddings.select(id_col, vec_col), MAX_BRUTE_VECTORS)
+        if rows is not None:
+            return _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits)
+        strategy = "ivf"
     if strategy == "brute":
-        return cosine_topk_brute(
-            embeddings, query_ids, k, vec_col, id_col, round_digits,
-            brute_limit=brute_limit,
-        )
+        return cosine_topk_brute(embeddings, query_ids, k, vec_col, id_col, round_digits)
     if strategy == "ivf":
         return ivf_ann(
             embeddings, query_ids, k, vec_col=vec_col, id_col=id_col,
@@ -1549,26 +1550,8 @@ def ivf_ann(
         .select(id_col, vec_col)
         .mapInPandas(probe_lists, schema="query_id long, list_id int")
     )
-    cand = (
-        F.broadcast(probes)
-        .join(lists, "list_id")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    quant = F.transform(F.col(vec_col), _quantize_col)
-    qv = embeddings.select(F.col(id_col).alias("query_id"), quant.alias("qv"))
-    nv = embeddings.select(F.col(id_col).alias("neighbor_id"), quant.alias("nv"))
-    scored = cand.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-    scored = scored.withColumn("cos_sim", _quantized_cosine("qv", "nv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos_sim"), round_digits)), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    cand = F.broadcast(probes).join(lists, "list_id")
+    return _rescore_topk(cand, embeddings, k, vec_col, id_col, round_digits)
 
 
 def lsh_planes(n_tables: int, n_planes: int, dim: int):
@@ -1629,6 +1612,30 @@ def _quantized_cosine(a_col: str, b_col: str):
     return dot / (na * nb)
 
 
+def _rescore_topk(cand, embeddings, k, vec_col, id_col, round_digits):
+    """ivf_ann's and lsh_bucket_ann's tail: distinct non-self (query_id,
+    vid) candidates rescored by exact quantized cosine; top `k` by the
+    rounded score with neighbor-id tiebreak."""
+    cand = (
+        cand.filter(F.col("vid") != F.col("query_id"))
+        .select("query_id", F.col("vid").alias("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    quant = F.transform(F.col(vec_col), _quantize_col)
+    qv = embeddings.select(F.col(id_col).alias("query_id"), quant.alias("qv"))
+    nv = embeddings.select(F.col(id_col).alias("neighbor_id"), quant.alias("nv"))
+    scored = cand.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
+    scored = scored.withColumn("cos_sim", _quantized_cosine("qv", "nv"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round(F.col("cos_sim"), round_digits)), "neighbor_id"
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    )
+
+
 def lsh_bucket_ann(
     embeddings: DataFrame,
     query_ids,
@@ -1649,9 +1656,8 @@ def lsh_bucket_ann(
     convention as cosine_topk_brute.
     Plane count defaults to log2(n/32): ~32 vectors per bucket at any
     corpus size."""
-    dim = len(embeddings.select(vec_col).first()[0])
+    n, dim = embeddings.agg(F.count("*"), F.max(F.size(vec_col))).first()
     if n_planes is None:
-        n = embeddings.count()
         n_planes = max(2, int(np.log2(max(n, 64) / 32.0)))
     planes = lsh_planes(n_tables, n_planes, dim)
     qset = [int(q) for q in query_ids]
@@ -1659,25 +1665,8 @@ def lsh_bucket_ann(
     qb = b.filter(F.col("vid").isin(qset)).select(
         F.col("vid").alias("query_id"), "table", "bucket"
     )
-    cand = (
-        qb.join(b, ["table", "bucket"])
-        .filter(F.col("vid") != F.col("query_id"))
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    quant = F.transform(F.col(vec_col), _quantize_col)
-    qv = embeddings.select(F.col(id_col).alias("query_id"), quant.alias("qv"))
-    nv = embeddings.select(F.col(id_col).alias("neighbor_id"), quant.alias("nv"))
-    scored = cand.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-    scored = scored.withColumn("cos_sim", _quantized_cosine("qv", "nv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos_sim"), round_digits)), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    cand = qb.join(b, ["table", "bucket"])
+    return _rescore_topk(cand, embeddings, k, vec_col, id_col, round_digits)
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:

@@ -83,7 +83,7 @@ def main(argv=None) -> None:
         return pip_join(
             pts,
             index,
-            broadcast_index=args.salt == 0,
+            strategy="salted" if args.salt else None,
             salt_buckets=args.salt or None,
             include_properties=True,
         ).withColumn("properties", F.to_json("properties"))

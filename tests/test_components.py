@@ -6,6 +6,7 @@ in test_entry_contract.py / the driver round."""
 import numpy as np
 import pytest
 
+from insideout_spark.plans import components
 from insideout_spark.plans.components import (
     connected_components,
     dedup_cluster_representatives,
@@ -56,7 +57,7 @@ def test_components_long_path_converges(spark):
     assert got == {i: 0 for i in range(61)}
 
 
-def test_components_star_contraction_fallback(spark):
+def test_components_star_contraction_fallback(spark, monkeypatch):
     """A tiny round budget (max_iters=3, reach ~14/level) forces the
     star-contraction escape hatch on a 60-node path (diameter beyond
     one level's reach): the composed contracted-graph labels must
@@ -64,17 +65,18 @@ def test_components_star_contraction_fallback(spark):
     (VERDICT r03 'Next round' #6)."""
     pairs = [(i, i + 1) for i in range(60)] + [(500, 501), (501, 502), (700, 900)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    # a zero driver cap forces the distributed loop (r06: small graphs
+    # otherwise take the numpy fast path and never hit the budget)
+    monkeypatch.setattr(components, "_CC_DRIVER_EDGES", 0)
     got = {
         r["node"]: r["component_id"]
-        # driver_limit=0 forces the distributed loop (r06: small graphs
-        # otherwise take the numpy fast path and never hit the budget)
-        for r in connected_components(df, max_iters=3, driver_limit=0).collect()
+        for r in connected_components(df, max_iters=3).collect()
     }
     want = _union_find(pairs)
     assert got == want
 
 
-def test_components_fallback_matches_normal_path(spark):
+def test_components_fallback_matches_normal_path(spark, monkeypatch):
     """Random graph: the fallback path (tiny budget) and the normal
     path must produce identical labelings."""
     rng = np.random.default_rng(11)
@@ -83,14 +85,15 @@ def test_components_fallback_matches_normal_path(spark):
     ]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     normal = {r["node"]: r["component_id"] for r in connected_components(df).collect()}
+    monkeypatch.setattr(components, "_CC_DRIVER_EDGES", 0)
     fb = {
         r["node"]: r["component_id"]
-        for r in connected_components(df, max_iters=2, driver_limit=0).collect()
+        for r in connected_components(df, max_iters=2).collect()
     }
     assert fb == normal
 
 
-def test_driver_and_distributed_paths_identical(spark):
+def test_driver_and_distributed_paths_identical(spark, monkeypatch):
     """r06: the size-gated driver-side numpy fast path and the
     distributed label-propagation loop must produce the identical
     labeling (same fixpoint: component_id = min node id)."""
@@ -100,10 +103,8 @@ def test_driver_and_distributed_paths_identical(spark):
     ] + [(77, 77)]  # self-loop: node must still appear in the output
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     fast = {r["node"]: r["component_id"] for r in connected_components(df).collect()}
-    dist = {
-        r["node"]: r["component_id"]
-        for r in connected_components(df, driver_limit=0).collect()
-    }
+    monkeypatch.setattr(components, "_CC_DRIVER_EDGES", 0)
+    dist = {r["node"]: r["component_id"] for r in connected_components(df).collect()}
     assert fast == dist
     assert 77 in fast
 

@@ -75,7 +75,7 @@ def test_salted_shuffle_path_equivalent(spark, houat_index, golden_points_df):
     b = {
         (r["url"], r["feature_id"], r["loop_pos"], r["is_sure_hit"])
         for r in pip_join(
-            golden_points_df, houat_index, broadcast_index=False, salt_buckets=4
+            golden_points_df, houat_index, strategy="salted", salt_buckets=4
         ).collect()
     }
     assert a == b

@@ -42,8 +42,13 @@ def test_salt_distributes_hot_cell(spark):
     assert max(counts.values()) < 0.35 * sum(counts.values())  # no bucket dominates
 
 
-def test_knn_join_auto_matches_cells(spark):
+def test_knn_join_auto_matches_cells(spark, monkeypatch):
+    """knn_join(auto) takes the brute arm on target sets of at most
+    KNN_BROADCAST_TARGETS rows and the cell-ring join past it; both
+    return knn_brute's rows."""
     import pandas as pd
+
+    from insideout_spark.plans import knn
 
     rng = np.random.default_rng(5)
     pts = spark.createDataFrame(
@@ -59,6 +64,15 @@ def test_knn_join_auto_matches_cells(spark):
     auto = {(r["point_id"], r["target_id"], r["rank"]) for r in knn_join(pts, tgt, 3).collect()}
     brute = {(r["point_id"], r["target_id"], r["rank"]) for r in knn_brute(pts, tgt, 3).collect()}
     assert auto == brute
+    cell_calls = []
+    cell_join = knn.knn_cell_join
+    monkeypatch.setattr(
+        knn, "knn_cell_join", lambda *a, **kw: cell_calls.append(1) or cell_join(*a, **kw)
+    )
+    for cap, routed in ((25, []), (24, [1])):
+        monkeypatch.setattr(knn, "KNN_BROADCAST_TARGETS", cap)
+        got = {(r["point_id"], r["target_id"], r["rank"]) for r in knn_join(pts, tgt, 3).collect()}
+        assert cell_calls == routed and got == brute
 
 
 def test_packaged_zip_is_importable(tmp_path):

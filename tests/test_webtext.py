@@ -159,53 +159,105 @@ def test_lsh_ann_recall(spark, embeddings_df):
     assert sum(recalls) / len(recalls) >= 0.6, recalls
 
 
-def test_brute_ann_size_gate_and_auto_routing(spark, embeddings_df):
+def test_brute_ann_size_gate_and_auto_routing(spark, embeddings_df, monkeypatch):
     """VERDICT r04 'Next round' #2 done-criterion: the brute path's
-    driver-side collect is size-gated — a corpus over brute_limit
+    driver-side collect is size-gated — a corpus over MAX_BRUTE_VECTORS
     raises loudly (naming the scale paths) instead of OOMing at 100x,
     and ann_topk(auto) routes big inputs to the distributed IVF path
     while small inputs stay exact-brute."""
     n = embeddings_df.count()
-    with pytest.raises(ValueError, match="ann_topk"):
-        webtext.cosine_topk_brute(embeddings_df, [0], k=3, brute_limit=n - 1)
-    # auto routing: under the limit -> identical to the brute path
-    small = {
-        (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
-        for r in webtext.ann_topk(embeddings_df, [0, 1], k=5, brute_limit=n).collect()
-    }
     brute = {
         (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
         for r in webtext.cosine_topk_brute(embeddings_df, [0, 1], k=5).collect()
     }
-    assert small == brute
-    # over the limit -> routes to IVF (same schema, runs distributed,
-    # never reaches the driver collect)
-    routed = webtext.ann_topk(embeddings_df, [0, 1], k=5, brute_limit=n - 1)
+    ivf_calls = []
+    ivf_ann = webtext.ivf_ann
+    monkeypatch.setattr(
+        webtext, "ivf_ann", lambda *a, **kw: ivf_calls.append(1) or ivf_ann(*a, **kw)
+    )
+    # at the limit: the brute path runs, and auto routing is identical to it
+    monkeypatch.setattr(webtext, "MAX_BRUTE_VECTORS", n)
+    assert {
+        (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
+        for r in webtext.cosine_topk_brute(embeddings_df, [0, 1], k=5).collect()
+    } == brute
+    small = {
+        (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"])
+        for r in webtext.ann_topk(embeddings_df, [0, 1], k=5).collect()
+    }
+    assert small == brute and not ivf_calls
+    # one over the limit: the brute path refuses, and auto routes to IVF
+    # (same schema, runs distributed, never reaches the driver collect)
+    monkeypatch.setattr(webtext, "MAX_BRUTE_VECTORS", n - 1)
+    with pytest.raises(ValueError, match="ann_topk"):
+        webtext.cosine_topk_brute(embeddings_df, [0], k=3)
+    routed = webtext.ann_topk(embeddings_df, [0, 1], k=5)
+    assert ivf_calls == [1]
     rows = routed.collect()
     assert routed.columns == ["query_id", "neighbor_id", "rank", "cos_sim"]
     assert {r["query_id"] for r in rows} == {0, 1}
     ivf = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in webtext.ivf_ann(embeddings_df, [0, 1], k=5).collect()
+        for r in ivf_ann(embeddings_df, [0, 1], k=5).collect()
     }
     assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in rows} == ivf
 
 
-def test_export_layer_size_gate(spark):
+def test_export_layer_size_gate(spark, monkeypatch):
     """results_to_geojson refuses to broadcast a layer over
-    max_features instead of collecting it to the driver."""
+    MAX_EXPORT_FEATURES instead of collecting it to the driver."""
     from insideout_spark.plans import export as ex
 
     class _FakeBundle:
         def __init__(self, df):
             self.features = df
 
+    ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]]
     feats = spark.createDataFrame(
-        [(i, 0) for i in range(10)], "feature_id long, loop_pos int"
+        [(i, 0, ring, {"n": str(i)}) for i in range(10)],
+        "feature_id long, loop_pos int, ring array<array<double>>, "
+        "properties map<string,string>",
     )
     res = spark.createDataFrame([(1, 0)], "feature_id long, loop_pos int")
-    with pytest.raises(ValueError, match="max_features"):
-        ex.results_to_geojson(res, _FakeBundle(feats), max_features=5)
+    monkeypatch.setattr(ex, "MAX_EXPORT_FEATURES", 10)
+    out = ex.results_to_geojson(res, _FakeBundle(feats)).collect()
+    assert '"insided_fid": 1' in out[0]["feature_geojson"]
+    monkeypatch.setattr(ex, "MAX_EXPORT_FEATURES", 9)
+    with pytest.raises(ValueError, match="MAX_EXPORT_FEATURES"):
+        ex.results_to_geojson(res, _FakeBundle(feats))
+
+
+def test_driver_collect_gates_read_their_input_once(
+    spark, embeddings_df, houat_index, jobs_started
+):
+    """The jobs each driver-collect operator starts while its frame is
+    built. The size gate is the bounded collect itself
+    (`util.collect_at_most`), so no operator counts its input before
+    reading it; lsh_bucket_ann sizes n and dim in one aggregate. The
+    comments give the jobs of the count-then-collect gates this
+    replaced, on the same inputs."""
+    import pandas as pd
+
+    from insideout_spark.plans.export import results_to_geojson
+    from insideout_spark.plans.knn import knn_join
+    from insideout_spark.plans.pip_join import pip_join
+    from insideout_spark.sources.pages import extract_points, synth_pages
+
+    embeddings_df.count()  # the cached corpus is materialized up front
+    q = [0, 1]
+    assert jobs_started(lambda: webtext.cosine_topk_brute(embeddings_df, q, k=5)) == 1  # was 3
+    assert jobs_started(lambda: webtext.ann_topk(embeddings_df, q, k=5)) == 1  # was 5
+    assert jobs_started(lambda: webtext.lsh_bucket_ann(embeddings_df, q, k=5)) == 2  # was 3
+    hits = pip_join(extract_points(synth_pages(spark, 50)), houat_index)
+    assert jobs_started(lambda: results_to_geojson(hits, houat_index)) == 2  # was 5
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(200), "lat": rng.uniform(44, 50, 200), "lng": rng.uniform(-3, 6, 200)}
+    ))
+    tgt = spark.createDataFrame(pd.DataFrame(
+        {"target_id": np.arange(25), "lat": rng.uniform(44, 50, 25), "lng": rng.uniform(-3, 6, 25)}
+    ))
+    assert jobs_started(lambda: knn_join(pts, tgt, 3)) == 0  # was 2
 
 
 def test_brute_topk_self_excluded(spark, embeddings_df):

@@ -20,11 +20,7 @@ from .util import collect_at_most
 MAX_EXPORT_FEATURES = 250_000
 
 
-def results_to_geojson(
-    result: DataFrame,
-    index: IndexBundle,
-    id_cols=("url",),
-) -> DataFrame:
+def results_to_geojson(result: DataFrame, index: IndexBundle) -> DataFrame:
     """Attach a GeoJSON Feature string per hit row — closed polygon ring
     rebuilt from the feature geometry like the reference's WithinHandler
     (server/http.go:123, geom.NewPolygonFlat). Adds the engine's

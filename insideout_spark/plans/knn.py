@@ -60,7 +60,7 @@ def _dist_sq(plat, plng, tlat, tlng):
     return dlat * dlat + dlng * dlng
 
 
-# knn_join(strategy="auto") broadcasts target sets of at most this many
+# knn_join broadcasts target sets of at most this many
 # rows from the driver (knn_brute) and runs the cell-ring join past it.
 KNN_BROADCAST_TARGETS = 200_000
 
@@ -279,19 +279,15 @@ def knn_join(
     k: int,
     id_col: str = "point_id",
     target_id_col: str = "target_id",
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Strategy-selecting kNN (the engine's AQE-style physical choice):
-    at most KNN_BROADCAST_TARGETS targets -> vectorized brute force over
+    """Size-routed kNN (the engine's AQE-style physical choice): at
+    most KNN_BROADCAST_TARGETS targets -> vectorized brute force over
     the rows the bounded gate collect already read (no shuffle at all);
-    more -> cell-ring expansion. Both return identical rows."""
-    if strategy == "auto":
-        t = collect_at_most(targets.select(target_id_col, "lat", "lng"), KNN_BROADCAST_TARGETS)
-        if t is not None:
-            return _knn_brute_rows(points, t, k, id_col, target_id_col)
-        strategy = "cells"
-    if strategy == "brute":
-        return knn_brute(points, targets, k, id_col, target_id_col)
+    more -> cell-ring expansion. Both return identical rows. To force
+    an arm, call knn_brute or knn_cell_join directly."""
+    t = collect_at_most(targets.select(target_id_col, "lat", "lng"), KNN_BROADCAST_TARGETS)
+    if t is not None:
+        return _knn_brute_rows(points, t, k, id_col, target_id_col)
     return knn_cell_join(points, targets, k, id_col=id_col, target_id_col=target_id_col)
 
 

@@ -20,22 +20,31 @@ from . import matreg
 from .util import collect_at_most, ensure_parallel
 
 
+def _persist(key: str, df: DataFrame) -> DataFrame:
+    """Persist a per-call shared frame, superseding the previous call's
+    copy (matreg, guide §5). Persistence keeps the lineage, so a later
+    release is always correct — consumers of a released frame recompute
+    instead of reading freed blocks. The release comes first: a repeat
+    call on the same input has the same plan, so it shares the old
+    frame's cache entry, and a release after the persist would drop
+    that entry and leave every consumer to recompute. Lazy: the
+    caller's first action fills the cache."""
+    from pyspark import StorageLevel
+
+    return matreg.supersede(key, df).persist(StorageLevel.MEMORY_AND_DISK)
+
+
 def _materialize(key: str, df: DataFrame) -> tuple[DataFrame, int]:
-    """Persist + eagerly compute a per-call shared frame, superseding
-    the previous call's copy (matreg, guide §5); returns the frame and
-    its row count. Persistence keeps the lineage, so a later release is
-    always correct — consumers of a released frame recompute instead of
-    reading freed blocks. The release comes first: a repeat call on the
-    same input has the same plan, so it shares the old frame's cache
-    entry, and a release after the persist would drop that entry and
-    leave every consumer to recompute. The count is EAGER on purpose:
+    """`_persist` + an EAGER count; returns the frame and its row count,
+    for callers that need the count (dedup_incremental's broadcast gate)
+    or have no other first action. The count is eager on purpose:
     broadcast-exchange subqueries run in separate threads, and with a
     lazily-populated cache each of a frame's consumers would race it
     and recompute the whole Python pass (measured: cold
-    simhash_near_dup_pairs 6.5 s vs a 2 s fingerprint pass)."""
-    from pyspark import StorageLevel
-
-    df = matreg.supersede(key, df).persist(StorageLevel.MEMORY_AND_DISK)
+    simhash_near_dup_pairs 6.5 s vs a 2 s fingerprint pass). The
+    near-dup pair engine needs no count: its bounded read
+    (`_near_dup_pairs`) is the first action and fills every partition."""
+    df = _persist(key, df)
     return df, df.count()
 
 # ---------------------------------------------------------------------------
@@ -388,9 +397,15 @@ def _batch_shingle_keys(texts, k: int):
 # Shingle columns of one (32, columns) uint64 permutation matrix: each
 # Arrow batch is hashed in whole-document chunks whose k-shingle windows
 # sum to at most this (a longer document is a chunk of its own), so the
-# matrix stays ~512 MiB where a 65536-record batch of ~300-char
-# documents built ~5 GB. A batch of ~7k such documents is one chunk.
-_MINHASH_CHUNK_SHINGLES = 1 << 21
+# matrix is ~4 MiB and its multiply, modulo and reduceat run in cache
+# instead of streaming one batch-sized matrix (144 MiB for a 2k-doc,
+# 590k-window batch) through memory. Four processes hashing their own
+# 2k-doc batch of the seed-7 perfbench corpus at once, as four Spark
+# tasks do (4-core VM, 9 lockstep reps each, median per kernel):
+# 2^12 0.181 s, 2^13 0.178, 2^14 0.161, 2^15 0.166, 2^16 0.173,
+# 2^17 0.185, 2^19 0.219, 2^21 0.221. Signatures are bit-identical at
+# every size.
+_MINHASH_CHUNK_SHINGLES = 1 << 14
 
 
 def _doc_chunks(texts, k: int, budget: int):
@@ -450,15 +465,17 @@ def release_signature_caches() -> None:
 # into the per-pair re-attach joins (guide §3.1): the candidate-pair
 # table (millions of rows at sf1) then streams through two broadcast
 # hash lookups instead of being shuffled and sorted twice against the
-# signature table. Row gate when the row count is known (the cached
-# signature path counts eagerly anyway); optimizer size-estimate gate
-# otherwise (exact for parquet-backed signature tables). Above the
-# caps — corpus-scale signature tables — the shuffle join is kept.
-# Both gates pick the driver arm of banded pair generation
-# (_near_dup_pairs); callers pass their row width: MinHash 128 B,
-# SimHash 8 B, embeddings dim * 8 B. Measured at 500k derived docs
-# (bucket_cap=32, local[4], min of 3): MinHash driver 12.9 s vs
-# distributed 15.3 s; SimHash 10.6 vs 77 s (r06, 32 cores).
+# signature table. Above the caps — corpus-scale signature tables — the
+# shuffle join is kept. The banded pair engine (_near_dup_pairs) writes
+# both bounds as one row cap, min(ROWS, BYTES // row width), for its
+# bounded read, which also picks the driver arm; row widths: MinHash
+# 128 B, SimHash 8 B, embeddings dim * 8 B. Measured at 500k derived
+# docs (bucket_cap=32, local[4], min of 3): MinHash driver 12.9 s vs
+# distributed 15.3 s; SimHash 10.6 vs 77 s (r06, 32 cores). Past the
+# cap that read has pulled cap + 1 rows before the distributed arm runs:
+# the peak the driver arm itself reaches at n = cap. MinHash's Arrow
+# rows are 268 B (8 B id, 32 x 8 B values, a 4 B list offset), so 2M
+# rows are ~536 MB; SimHash's are 16 B (~32 MB).
 _SIG_BROADCAST_ROWS = 2_000_000
 _SIG_BROADCAST_BYTES = 256 << 20
 
@@ -466,7 +483,10 @@ _SIG_BROADCAST_BYTES = 256 << 20
 def _sig_broadcaster(df: DataFrame, n: int | None):
     """Return F.broadcast when `df` (of `n` rows, None if unknown) is
     provably small, identity otherwise — join RESULTS are identical
-    either way."""
+    either way. Row gate when the caller knows the count
+    (dedup_incremental's eagerly counted signature frame);
+    optimizer size-estimate gate otherwise (exact for parquet-backed
+    signature tables)."""
     if n is not None:
         small = n <= _SIG_BROADCAST_ROWS
     else:
@@ -644,15 +664,13 @@ def minhash_lsh_pairs(
     re-attach joins), superseding the previous near-dup call's
     signature frame."""
     if signatures is not None:
-        return _minhash_pairs(signatures, signatures.count(), threshold, bucket_cap)
-    sigs, n = _materialize("signatures", minhash_signatures(docs, text_col, k))
-    return _minhash_pairs(sigs, n, threshold, bucket_cap)
+        return _minhash_pairs(signatures, threshold, bucket_cap)
+    sigs = _persist("signatures", minhash_signatures(docs, text_col, k))
+    return _minhash_pairs(sigs, threshold, bucket_cap)
 
 
-def _minhash_pairs(
-    sigs: DataFrame, n: int, threshold: float, bucket_cap: int | None
-) -> DataFrame:
-    """minhash_lsh_pairs over its (doc_id, sig) table of `n` rows."""
+def _minhash_pairs(sigs: DataFrame, threshold: float, bucket_cap: int | None) -> DataFrame:
+    """minhash_lsh_pairs over its (doc_id, sig) table."""
     # Below the row gate the whole banded generation runs on the driver
     # (_near_dup_pairs / _driver_pairs); above it, the band self-join.
     # The distributed chain orders capped buckets by the FULL 32-value
@@ -661,8 +679,7 @@ def _minhash_pairs(
     # the driver arm ranks the same strings once per call.
     rpb = _MINHASH_PERMS // _LSH_BANDS
 
-    def driver_parts(vals):
-        smat = np.array(vals.tolist(), dtype=np.int64)
+    def driver_parts(smat):
         # int32 halves the rescore's gather bandwidth (minhash values
         # are < 2^31 by construction; exact either way)
         small = -(1 << 31) <= int(smat.min()) and int(smat.max()) < (1 << 31)
@@ -691,7 +708,7 @@ def _minhash_pairs(
         return _sig_bands(sigs), ["band", "bh"], sig_str, est, keep
 
     return _near_dup_pairs(
-        sigs, n, "sig", bucket_cap, "est_jaccard double", 4 * _MINHASH_PERMS,
+        sigs, "sig", bucket_cap, "est_jaccard double", 4 * _MINHASH_PERMS,
         driver_parts, spark_parts,
     )
 
@@ -748,7 +765,7 @@ def dedup_incremental(
         .filter(_sig_est_jaccard() >= threshold)
         .select("n_doc", F.col("c_doc").alias("match_id"))
     )
-    within = _minhash_pairs(new_sigs, n_new, threshold, bucket_cap).select(
+    within = _minhash_pairs(new_sigs, threshold, bucket_cap).select(
         F.col("doc_b").alias("n_doc"), F.col("doc_a").alias("match_id")
     )
     dup = (
@@ -1058,7 +1075,7 @@ def simhash_near_dup_pairs(
     dedup analog of the reference's identical-result dedup
     (index.go:71-74, dedup of posting hits); DuckDB oracle:
     webtext_sql.simhash_pairs_sql."""
-    sh, n = _materialize("signatures", simhash64(docs, text_col))
+    sh = _persist("signatures", simhash64(docs, text_col))
     # Below the row gate the whole generation runs on the driver
     # (_near_dup_pairs): SimHash's ~200k mostly-tiny buckets at sf1 made
     # a per-bucket mapInPandas loop SLOWER than the join path (5.5 vs
@@ -1067,8 +1084,7 @@ def simhash_near_dup_pairs(
     # rank by the signed fingerprint — the window's LongType ORDER BY —
     # and popcount(xor) is the same integer bit_count the JVM computes.
 
-    def driver_parts(vals):
-        fps = vals.to_numpy(dtype=np.int64)
+    def driver_parts(fps):
         u = fps.view(np.uint64)
 
         def score(ia, ib):
@@ -1101,7 +1117,7 @@ def simhash_near_dup_pairs(
         return bands, ["band", "bv"], F.col("simhash"), ham, keep
 
     return _near_dup_pairs(
-        sh, n, "simhash", bucket_cap, "hamming int", 8, driver_parts, spark_parts
+        sh, "simhash", bucket_cap, "hamming int", 8, driver_parts, spark_parts
     )
 
 
@@ -1328,8 +1344,8 @@ def cosine_topk_brute(
     if rows is None:
         raise ValueError(
             "cosine_topk_brute is the driver-side exact path: corpus has more than "
-            f"MAX_BRUTE_VECTORS={MAX_BRUTE_VECTORS} vectors. Use ann_topk (auto "
-            "strategy), lsh_bucket_ann, or ivf_ann at this scale."
+            f"MAX_BRUTE_VECTORS={MAX_BRUTE_VECTORS} vectors. Use ann_topk, "
+            "lsh_bucket_ann, or ivf_ann at this scale."
         )
     return _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits)
 
@@ -1387,10 +1403,9 @@ def ann_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    strategy: str = "auto",
     round_digits: int = 5,
 ) -> DataFrame:
-    """Strategy-selecting ANN (the knn_join pattern, VERDICT r04 'Next
+    """Size-routed ANN (the knn_join pattern, VERDICT r04 'Next
     round' #2): corpora of at most MAX_BRUTE_VECTORS take the exact
     driver-broadcast brute path with the rows the bounded gate collect
     already read; larger corpora route to IVF — trained coarse
@@ -1398,25 +1413,15 @@ def ann_topk(
     candidates only, fully distributed. NOTE the routed path is
     APPROXIMATE (candidates limited to probed lists) — same top-k
     schema, possibly different tail neighbors; callers needing exact
-    results at scale must shard the brute scan themselves."""
-    if strategy == "auto":
-        rows = collect_at_most(embeddings.select(id_col, vec_col), MAX_BRUTE_VECTORS)
-        if rows is not None:
-            return _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits)
-        strategy = "ivf"
-    if strategy == "brute":
-        return cosine_topk_brute(embeddings, query_ids, k, vec_col, id_col, round_digits)
-    if strategy == "ivf":
-        return ivf_ann(
-            embeddings, query_ids, k, vec_col=vec_col, id_col=id_col,
-            round_digits=round_digits,
-        )
-    if strategy == "lsh":
-        return lsh_bucket_ann(
-            embeddings, query_ids, k, vec_col=vec_col, id_col=id_col,
-            round_digits=round_digits,
-        )
-    raise ValueError(f"unknown ANN strategy {strategy!r}")
+    results at scale must shard the brute scan themselves. To force an
+    arm, call cosine_topk_brute, ivf_ann or lsh_bucket_ann directly."""
+    rows = collect_at_most(embeddings.select(id_col, vec_col), MAX_BRUTE_VECTORS)
+    if rows is not None:
+        return _cosine_topk_rows(embeddings, rows, query_ids, k, vec_col, id_col, round_digits)
+    return ivf_ann(
+        embeddings, query_ids, k, vec_col=vec_col, id_col=id_col,
+        round_digits=round_digits,
+    )
 
 
 def _ivf_train(mat: np.ndarray, n_lists: int, iters: int = 8, seed: int = 20240303) -> np.ndarray:
@@ -1733,11 +1738,14 @@ def _clique_chain_pairs(
     ends: np.ndarray,
     cap: int,
     rank: np.ndarray,
+    triu: dict,
 ) -> tuple:
     """The pair set of `_capped_bucket_pairs` for one grouping into
     buckets, over id-sorted row indices: bucket b holds rows
     order[starts[b]:ends[b]], and the buckets partition `order`.
-    Returns lists of (a, b) row arrays.
+    Returns lists of (a, b) row arrays. `triu` caches
+    np.triu_indices(m, 1) per bucket size m across the bands of one
+    call.
 
     Buckets at or under `cap` (every bucket when cap < 0) emit their
     clique, member rows ascending, a < b. All size-m cliques become one
@@ -1758,7 +1766,9 @@ def _clique_chain_pairs(
         pos = starts[sel][:, None] + np.arange(int(m))
         mem = order[pos]
         mem.sort(axis=1)
-        iu, ju = np.triu_indices(int(m), 1)
+        if m not in triu:
+            triu[m] = np.triu_indices(int(m), 1)
+        iu, ju = triu[m]
         outs_a.append(mem[:, iu].ravel())
         outs_b.append(mem[:, ju].ravel())
     if capped.any():
@@ -1830,8 +1840,9 @@ def _driver_pairs(ids, band_keys, cap, chain_rank, score) -> tuple:
             rank[capped] = chain_rank(capped)
     outs_a: list = [rank[:0]]
     outs_b: list = [rank[:0]]
+    triu: dict = {}
     for order, starts, ends in groups:
-        oa, ob = _clique_chain_pairs(order, starts, ends, cap, rank)
+        oa, ob = _clique_chain_pairs(order, starts, ends, cap, rank, triu)
         outs_a += oa
         outs_b += ob
     ra = np.concatenate(outs_a)
@@ -1844,9 +1855,30 @@ def _driver_pairs(ids, band_keys, cap, chain_rank, score) -> tuple:
     return ids[ra[first]], ids[rb[first]], vals[first]
 
 
+def _arrow_rows(col) -> np.ndarray:
+    """One numpy row per value of the non-empty Arrow column `col`: a
+    1-D array for a scalar column, an (n, width) matrix for a list
+    column (the flattened values, no per-row Python objects). A NULL
+    value or lists of unequal length raise ValueError instead of being
+    reshaped."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = col.combine_chunks()
+    if arr.null_count:
+        raise ValueError("NULL id or value in a near-dup signature table")
+    if not (pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)):
+        return arr.to_numpy()
+    lens = pc.list_value_length(arr).to_numpy()
+    width = int(lens[0])
+    flat = arr.flatten()
+    if (lens != width).any() or flat.null_count:
+        raise ValueError("near-dup signature rows must be non-NULL lists of one length")
+    return flat.to_numpy().reshape(len(arr), width)
+
+
 def _near_dup_pairs(
     sigs: DataFrame,
-    n: int,
     val_col: str,
     bucket_cap: int | None,
     score_field: str,
@@ -1855,38 +1887,49 @@ def _near_dup_pairs(
     spark_parts,
 ) -> DataFrame:
     """(doc_a, doc_b, score) pairs of a banded near-dup operator over
-    its (doc_id, `val_col`) signature table of `n` rows; `score_field`
-    names the score column and its type ("est_jaccard double"),
-    `row_bytes` the driver-side width of one row. Two arms, identical pair sets and
+    its (doc_id, `val_col`) signature table; `score_field` names the
+    score column and its type ("est_jaccard double"), `row_bytes` the
+    driver-side width of one row. The table is read ONCE, bounded:
+    `limit(cap + 1).toArrow()` with cap = min(_SIG_BROADCAST_ROWS,
+    _SIG_BROADCAST_BYTES // row_bytes), so the gate is the collect
+    itself and no count job runs. On a persisted signature frame that
+    read is the first action and fills every cached partition: a
+    MEMORY_AND_DISK block is unrolled whole even when the per-partition
+    limit stops early, so the distributed arm reads the cache instead
+    of rerunning the Python pass. Two arms, identical pair sets and
     scores (pinned by the driver == distributed tests):
 
-    - Driver: at most _SIG_BROADCAST_ROWS rows and
-      _SIG_BROADCAST_BYTES of rows. The table is collected, sorted by
-      id, and `_driver_pairs` runs on `driver_parts(vals)` ->
-      (band_keys, chain_rank, score). This replaced a per-bucket mapInPandas shape that paid a collect_list
-      shuffle, serialized Arrow transport of every pair instance and a
-      pair shuffle (MinHash at sf1: 9.8 s vs ~3 s). The result carries
+    - Driver: 1 to cap rows. Ids and values come straight from Arrow
+      (`_arrow_rows`), sorted by id, and `_driver_pairs` runs on
+      `driver_parts(vals)` -> (band_keys, chain_rank, score), where
+      `vals` is a 1-D array or an (n, width) matrix. This replaced a
+      per-bucket mapInPandas shape that paid a collect_list shuffle,
+      serialized Arrow transport of every pair instance and a pair
+      shuffle (MinHash at sf1: 9.8 s vs ~3 s). The result carries
       `_io_pairs_np`, the arrays it was built from, so
       connected_components skips a persist + collect round-trip (only
       this exact object has the attribute: equal content by
       construction).
-    - Distributed: above the gates, for empty tables, or over the
+    - Distributed: above the cap, for empty tables, or over the
       candidate budget. `spark_parts()` -> (bands, key_cols, order_col,
       score_col, keep): `_capped_bucket_pairs` over `bands` (capped
       chains ordered by `order_col`), one value attached per side as
-      `va` / `vb` (broadcast under the size gate; the pair shuffle
+      `va` / `vb` (broadcast at or under the cap; the pair shuffle
       carries only ids), then `score_col` in Catalyst, filtered by
       `keep`. Built only here: constructing these frames and columns
       costs ~0.4 s of driver time per call (8k docs, local[4])."""
     score_name = score_field.split()[0]
-    small = n <= _SIG_BROADCAST_ROWS and n * row_bytes <= _SIG_BROADCAST_BYTES
-    if 0 < n and small:
+    cap = min(_SIG_BROADCAST_ROWS, _SIG_BROADCAST_BYTES // row_bytes)
+    tbl = sigs.select("doc_id", val_col).limit(cap + 1).toArrow()
+    small = tbl.num_rows <= cap
+    if 0 < tbl.num_rows and small:
         import pandas as pd
 
-        pdf = sigs.select("doc_id", val_col).toPandas().sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        band_keys, chain_rank, score = driver_parts(pdf[val_col])
-        res = _driver_pairs(ids, band_keys, bucket_cap, chain_rank, score)
+        ids = _arrow_rows(tbl.column("doc_id"))
+        vals = _arrow_rows(tbl.column(val_col))
+        order = np.argsort(ids, kind="stable")
+        band_keys, chain_rank, score = driver_parts(vals[order])
+        res = _driver_pairs(ids[order], band_keys, bucket_cap, chain_rank, score)
         if res is not None:
             a, b, vals = res
             out = sigs.sparkSession.createDataFrame(
@@ -1942,8 +1985,7 @@ def embedding_near_dup_pairs(
     # no pair the Catalyst round + filter keeps is dropped early
     margin = float(threshold) - 1e-4
 
-    def driver_parts(vals):
-        mat = np.array(vals.tolist(), dtype=np.float64)
+    def driver_parts(mat):
         bands = [codes[:, None] for codes in _srp_codes(mat, planes)]
         norms = np.sqrt((mat * mat).sum(axis=1))
         # float32 storage (exact while |q| <= 2^24) gathered into 512 KB
@@ -1974,7 +2016,7 @@ def embedding_near_dup_pairs(
         return bands, ["table", "bucket"], F.col("doc_id"), _quantized_cosine("va", "vb"), keep
 
     pairs = _near_dup_pairs(
-        sigs, n, "q", bucket_cap, "cos_raw double", dim * 8, driver_parts, spark_parts
+        sigs, "q", bucket_cap, "cos_raw double", dim * 8, driver_parts, spark_parts
     )
     return pairs.select(
         F.col("doc_a").alias("vec_a"),

@@ -702,10 +702,11 @@ def test_minhash_driver_pairs_match_distributed(spark, monkeypatch):
 
 def test_near_dup_with_components_job_count(spark, jobs_started):
     """MinHash pairs + connected components on the 200-doc cluster run
-    a fixed number of Spark jobs: one signature pass (persist + eager
-    count), the driver arm's collect of the cached signatures, and no
-    job in connected_components, which takes the driver arm's numpy
-    pairs (`_io_pairs_np`) instead of re-reading the pair frame."""
+    ONE Spark job: the bounded Arrow read of the persisted signature
+    frame, which computes and caches the signatures and hands them to
+    the driver arm (no eager count, no second collect), and no job in
+    connected_components, which takes the driver arm's numpy pairs
+    (`_io_pairs_np`) instead of re-reading the pair frame."""
     from insideout_spark.plans import webtext
     from insideout_spark.plans.components import connected_components
 
@@ -717,7 +718,82 @@ def test_near_dup_with_components_job_count(spark, jobs_started):
         pairs = webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
         connected_components(pairs).collect()
 
-    assert jobs_started(build) == 4
+    assert jobs_started(build) == 1  # was 4
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash"])
+def test_near_dup_over_cap_runs_signature_pass_once(spark, monkeypatch, op):
+    """Past the driver cap the bounded read still fills the persisted
+    signature frame: a MEMORY_AND_DISK block is unrolled whole even
+    when the read's per-partition limit stops early (cap 0 reads one
+    row), so every partition is cached right after the call and the
+    distributed arm reads the cache. Pinned by counting rows through
+    the signature Python pass: n per call at caps n (driver arm),
+    n - 1 and 0 (distributed arm), none added when the pairs are
+    collected, and the same pairs at every cap."""
+    from insideout_spark.plans import webtext
+
+    rows = _near_dup_cluster_rows(200, 30)
+    n = len(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
+    name = "minhash_signatures" if op == "minhash" else "simhash64"
+    real = getattr(webtext, name)
+    seen = spark.sparkContext.accumulator(0)
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+
+    def tally_signatures(*args, **kwargs):
+        sig = real(*args, **kwargs)
+
+        def tally_signatures_pass(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        return sig.mapInPandas(tally_signatures_pass, sig.schema)
+
+    monkeypatch.setattr(webtext, name, tally_signatures)
+
+    def run():
+        if op == "minhash":
+            return webtext.minhash_lsh_pairs(docs, threshold=0.35, bucket_cap=8)
+        return webtext.simhash_near_dup_pairs(docs, max_hamming=10, bucket_cap=8)
+
+    results = []
+    for cap in (n, n - 1, 0):
+        monkeypatch.setattr(webtext, "_SIG_BROADCAST_ROWS", cap)
+        seen.value = 0
+        out = run()
+        assert seen.value == n
+        [info] = [i for i in storage() if "tally_signatures_pass" in i.name()]
+        assert info.numCachedPartitions() == info.numPartitions() == 4
+        assert hasattr(out, "_io_pairs_np") == (cap == n)
+        results.append({tuple(r) for r in out.collect()})
+        assert seen.value == n
+    assert results[0] == results[1] == results[2] and len(results[0]) > 0
+    webtext.release_signature_caches()
+
+
+def test_minhash_signatures_table_one_job_and_ragged_rows_raise(spark, jobs_started):
+    """`minhash_lsh_pairs(signatures=...)` reads a caller's signature
+    table in one job (the bounded read; no count before it). A ragged
+    or NULL `sig` row raises ValueError on the driver arm rather than
+    being reshaped into the matrix."""
+    from insideout_spark.plans import webtext
+
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.integers(0, 1 << 31, 32).tolist()) for i in range(40)]
+    rows += [(100 + i, rows[i][1]) for i in range(5)]  # 5 exact dups
+    sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+
+    pairs = []
+    assert jobs_started(
+        lambda: pairs.append(webtext.minhash_lsh_pairs(None, signatures=sigs))
+    ) == 1  # was 3: a count (two AQE jobs) + the collect
+    assert {(a, b) for a, b, _ in pairs[0].collect()} == {(i, 100 + i) for i in range(5)}
+    for bad in ([1] * 31, None, [None] + [1] * 31):
+        table = spark.createDataFrame(rows + [(999, bad)], "doc_id long, sig array<long>")
+        with pytest.raises(ValueError):
+            webtext.minhash_lsh_pairs(None, signatures=table)
 
 
 def test_driver_pairs_budget_falls_back(spark, monkeypatch):

@@ -56,38 +56,6 @@ _FACE_CELLS = [np.uint64((f << 61) | (1 << 60)) for f in range(6)]
 _EDGE_SAMPLES = 4
 
 
-def cell_latlng_rect(cell_id):
-    """Conservative (lng0, lng1, lat0, lat1) rect containing the cell.
-
-    Samples the 4 uv-space edges and inflates; guaranteed to contain the
-    true (curved) cell boundary for levels >= 4 by a wide margin.
-    Returns None for cells where a planar rect is meaningless (polar
-    faces at very coarse levels, antimeridian wrap) — callers must then
-    treat the cell as BOUNDARY/recurse.
-    """
-    face, u0, u1, v0, v1 = s2.cell_uv_bounds(np.array([cell_id]))
-    face = int(face[0])
-    u0, u1, v0, v1 = float(u0[0]), float(u1[0]), float(v0[0]), float(v1[0])
-    ts = np.linspace(0.0, 1.0, _EDGE_SAMPLES + 1)
-    us = u0 + (u1 - u0) * ts
-    vs = v0 + (v1 - v0) * ts
-    bu = np.concatenate([us, np.full_like(ts, u1), us[::-1], np.full_like(ts, u0)])
-    bv = np.concatenate([np.full_like(ts, v0), vs, np.full_like(ts, v1), vs[::-1]])
-    x, y, z = s2.face_uv_to_xyz(np.full(bu.shape, face), bu, bv)
-    norm = np.sqrt(x * x + y * y + z * z)
-    lat, lng = s2.xyz_to_latlng(x / norm, y / norm, z / norm)
-    lng0, lng1 = float(lng.min()), float(lng.max())
-    lat0, lat1 = float(lat.min()), float(lat.max())
-    if lng1 - lng0 > 180.0:  # antimeridian wrap — no planar rect
-        return None
-    if lat1 > 89.9 or lat0 < -89.9:  # polar neighborhood
-        return None
-    # inflate: covers sampling error of the curved edges
-    dl = (lng1 - lng0) * 0.02 + 1e-12
-    dt = (lat1 - lat0) * 0.02 + 1e-12
-    return (lng0 - dl, lng1 + dl, lat0 - dt, lat1 + dt)
-
-
 def normalize_cells(cells):
     """Sort, dedup, and drop cells contained in another cell of the set."""
     if not cells:
@@ -153,8 +121,7 @@ def _cells_geo(cells):
     """Fused conservative geometry for N UNIQUE cells in ONE pass:
     (cap_cx, cap_cy, cap_cz, cap_rad, valid, lng0, lng1, lat0, lat1).
     Computes to_face_ij once (the profile's hot primitive) and shares
-    the boundary samples between the rect and the cap, replacing the
-    separate _cell_caps + cell_latlng_rects passes (3x to_face_ij)."""
+    the boundary samples between the rect and the cap."""
     cells = np.asarray(cells, dtype=np.uint64)
     n = len(cells)
     face, i, j, _ = s2.to_face_ij(cells)
@@ -360,37 +327,10 @@ def cover_ring(ring, params: CoverParams, interior: bool):
     return cover_rings([ring], params, interior)[0]
 
 
-def auto_cover_params(loop_rows, max_cells: int = 32):
-    """Pick (interior, exterior) CoverParams from the polygon sizes, the
-    way the reference picks indexer flags per dataset (communes: levels
-    10-16, countries: 4-10 — cmd/indexer/main.go:61-67, Makefile:50-53):
-    min_level ~ the cell size of the median loop's bbox diagonal,
-    max_level 3 levels finer (interior one more for a tighter
-    short-circuit region)."""
-    import math
-
-    diags = []
-    for r in loop_rows:
-        ring = np.asarray(r["ring"], dtype=np.float64)
-        dx = float(ring[:, 0].max() - ring[:, 0].min())
-        dy = float(ring[:, 1].max() - ring[:, 1].min())
-        diags.append(math.sqrt(dx * dx + dy * dy))  # == Catalyst sqrt(pow + pow)
-    if not diags:
-        return (
-            CoverParams(*DEFAULT_INTERIOR),
-            CoverParams(*DEFAULT_EXTERIOR),
-        )
-    # == Spark's exact percentile(d, 0.5), which averages the middles
-    d = sorted(diags)
-    med = 0.5 * d[(len(d) - 1) // 2] + 0.5 * d[len(d) // 2]
-    return params_from_median_diag(med, max_cells)
-
-
 def params_from_median_diag(med: float, max_cells: int = 32):
     """(interior, exterior) CoverParams from the median loop bbox
-    diagonal — the single formula behind both the driver-side
-    auto_cover_params and the distributed _auto_params_df path, so both
-    auto paths produce the same index for the same data.
+    diagonal (plans.index_build._auto_params_df): min_level ~ the cell
+    size of that diagonal, max_level finer.
 
     Interior one level deeper with a 3x budget: measured at 35k
     communes-scale loops, this converts ~44% of the exact-test

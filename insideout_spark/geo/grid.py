@@ -4,9 +4,7 @@ The north rule requires an "H3/S2 index". S2 is implemented natively
 (geo/s2.py). For the H3 role this module provides a multi-resolution
 rectangular grid with the same API shape as the public `h3` package
 (latlng_to_cell / cell_to_parent / grid_disk / grid_ring /
-cell_to_boundary). When the real `h3` package is importable (it is not
-in this container) `insideout_spark.geo.h3compat` prefers it; this
-grid is the deterministic fallback and — crucially — every function
+cell_to_boundary), deterministic, and — crucially — every function
 here is expressible in ANSI SQL floor arithmetic, which gives the
 driver's DuckDB oracle an exact independent check (FIXTURES.md §6).
 

@@ -210,45 +210,3 @@ def vertices_in_rects(ring, rx0, rx1, ry0, ry1):
     ry0 = np.asarray(ry0, dtype=np.float64)[:, None]
     ry1 = np.asarray(ry1, dtype=np.float64)[:, None]
     return np.any((vx >= rx0) & (vx <= rx1) & (vy >= ry0) & (vy <= ry1), axis=1)
-
-
-def segments_intersect_rect(ring, rx0, rx1, ry0, ry1):
-    """True if any ring edge intersects the axis-aligned rect
-    [rx0,rx1]x[ry0,ry1] (in lng/lat). Vectorized over edges —
-    used by the coverer's cell classification."""
-    ring = normalize_ring(ring)
-    x1 = ring[:, 0]
-    y1 = ring[:, 1]
-    x2 = np.roll(x1, -1)
-    y2 = np.roll(y1, -1)
-    # quick reject: edge bbox vs rect
-    reject = (
-        (np.maximum(x1, x2) < rx0)
-        | (np.minimum(x1, x2) > rx1)
-        | (np.maximum(y1, y2) < ry0)
-        | (np.minimum(y1, y2) > ry1)
-    )
-    cand = ~reject
-    if not np.any(cand):
-        return False
-    x1, y1, x2, y2 = x1[cand], y1[cand], x2[cand], y2[cand]
-    # endpoint inside rect => intersects
-    if np.any((x1 >= rx0) & (x1 <= rx1) & (y1 >= ry0) & (y1 <= ry1)):
-        return True
-    if np.any((x2 >= rx0) & (x2 <= rx1) & (y2 >= ry0) & (y2 <= ry1)):
-        return True
-    # segment crosses any of the 4 rect edges
-    rect_edges = (
-        (rx0, ry0, rx1, ry0),
-        (rx1, ry0, rx1, ry1),
-        (rx1, ry1, rx0, ry1),
-        (rx0, ry1, rx0, ry0),
-    )
-    for ax0, ay0, ax1, ay1 in rect_edges:
-        d1 = (x2 - x1) * (ay0 - y1) - (y2 - y1) * (ax0 - x1)
-        d2 = (x2 - x1) * (ay1 - y1) - (y2 - y1) * (ax1 - x1)
-        d3 = (ax1 - ax0) * (y1 - ay0) - (ay1 - ay0) * (x1 - ax0)
-        d4 = (ax1 - ax0) * (y2 - ay0) - (ay1 - ay0) * (x2 - ax0)
-        if np.any((d1 * d2 <= 0) & (d3 * d4 <= 0)):
-            return True
-    return False

@@ -5,9 +5,10 @@ mapInPandas stages.
 Two tiers:
 
 * Only the H.264 CODEC PAYLOAD decode stays STUBBED (the one genuinely
-  ffmpeg-bound step; `_decode_image_real` raises NotImplementedError
-  and the deterministic fake decoder keeps that plumbing tested). The
-  MP4 CONTAINER itself is demuxed for real below (`demux_mp4`).
+  ffmpeg-bound step). The MP4 CONTAINER itself is demuxed for real
+  below (`demux_mp4`). `extract_media_features` reads deterministic
+  stand-in pixel stats from the opaque `synth_media` payloads
+  (`_fake_decode_stats`).
 * Everything else is REAL, zero external libs: RIFF/WAVE
   PCM16 and BMP24 byte-level parsers (chunk walk, fmt fields,
   bottom-up BGR rows, 4-byte padding); PNG with stdlib zlib
@@ -28,13 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import ensure_parallel
-
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 IMAGE_META_SCHEMA = (
     "doc_id long, media_type string, width int, height int, n_frames int, payload binary"
@@ -58,15 +52,6 @@ def synth_media(docs: DataFrame, payload_bytes: int = 64) -> DataFrame:
     )
 
 
-def _decode_image_real(payload: bytes):  # pragma: no cover
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "real image decode requires PIL, which is not available in this "
-            "container; the deterministic fake decoder is used instead"
-        )
-    raise NotImplementedError("PIL decode path not wired in this environment")
-
-
 def _fake_decode_stats(payloads) -> np.ndarray:
     """Deterministic 'pixel stats' from payload bytes — stands in for the
     decoded-image mean/std until a codec is available. No rounding
@@ -83,7 +68,7 @@ def _fake_decode_stats(payloads) -> np.ndarray:
     return out
 
 
-def extract_media_features(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """decode -> feature-extract stage. Output: per-item feature vector
     (mean/std stats + normalized dims). Arrow-batched; one python call
     per batch, numpy inside."""
@@ -92,8 +77,6 @@ def extract_media_features(media: DataFrame, use_real_codec: bool = False) -> Da
         import pandas as pd
 
         for pdf in batches:
-            if use_real_codec:
-                _decode_image_real(b"")  # raises NotImplementedError without PIL
             stats = _fake_decode_stats(pdf["payload"].tolist())
             yield pd.DataFrame(
                 {

@@ -213,7 +213,8 @@ def pip_join(
     server/server.go:73-108):
 
     * None (default): "fused", or "jvm" when broadcast_edges is False
-      (the fused arm broadcasts every ring).
+      (the fused arm broadcasts every ring, so strategy="fused" with
+      broadcast_edges=False raises ValueError).
     * "fused": the whole stab in one Arrow pass with a broadcast
       searchsorted index; the ray cast runs only on boundary-cell
       residue, chunked to a fixed memory budget. The kernel emits
@@ -244,6 +245,11 @@ def pip_join(
         strategy = "fused" if broadcast_edges else "jvm"
 
     if strategy == "fused":
+        if not broadcast_edges:
+            raise ValueError(
+                "strategy='fused' broadcasts every ring; with "
+                "broadcast_edges=False use strategy='jvm' (or the default)"
+            )
         # drops NULL/NaN points and emits admin_level in the kernel
         result = _fused_stab(points, index.stab_broadcast(), id_cols, lat_col, lng_col)
     elif strategy in ("jvm", "salted", "bucketed"):

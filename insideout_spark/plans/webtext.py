@@ -10,6 +10,7 @@ quality stats) have exact DuckDB oracles in __spark_entry__.py.
 
 from __future__ import annotations
 
+import bisect
 import os
 
 import numpy as np
@@ -832,13 +833,19 @@ def _token_hashes_u64(tokens: list) -> np.ndarray:
     lens = np.array([len(t) for t in tokens], dtype=np.int64)
     out = np.empty(len(tokens), dtype=np.uint64)
     order = np.argsort(lens, kind="stable")
+    width = np.maximum(lens[order], 1)
     start = 0
     n = len(order)
     while start < n:
-        end = start + 1
-        # ascending lengths: the chunk max is the last token added
-        while end < n and (end + 1 - start) * max(int(lens[order[end]]), 1) <= _SIMHASH_MATRIX_BUDGET:
-            end += 1
+        # ascending lengths: a chunk's width is its last token's, so
+        # (end - start) * width[end - 1] never falls as end grows — one
+        # binary search finds the last end within the budget (at least
+        # one token per chunk)
+        end = bisect.bisect_right(
+            range(start + 2, n + 1),
+            _SIMHASH_MATRIX_BUDGET,
+            key=lambda e: (e - start) * int(width[e - 1]),
+        ) + start + 1
         idxs = order[start:end]
         out[idxs] = _poly_hash_chunk([tokens[i] for i in idxs])
         start = end

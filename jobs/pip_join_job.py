@@ -56,7 +56,7 @@ def main(argv=None) -> None:
     spark = get_spark("pip-join-job")
     loops = load_geojson_loops(args.polygons)
     if args.min_level is None or args.max_level is None:
-        index = build_index(spark, loops)  # auto_cover_params
+        index = build_index(spark, loops)  # params sized from the polygon extents
     else:
         index = build_index(
             spark,

@@ -110,12 +110,7 @@ def test_interior_cover_cells_fully_inside(houat_covers):
     for r, (ic, _) in covers:
         ring = rings[(r["feature_id"], r["loop_pos"])]
         for c in ic:
-            rect = cover.cell_latlng_rect(c)
-            assert rect is not None
-            lng0, lng1, lat0, lat1 = rect
-            gl, gt = np.meshgrid(np.linspace(lng0, lng1, 5), np.linspace(lat0, lat1, 5))
-            # the rect is inflated beyond the cell; shrink samples to the
-            # cell's actual corner hull instead
+            # sample the cell's corner hull
             vlat, vlng = s2.cell_vertices_latlng(np.array([c], dtype=np.uint64))
             gl, gt = np.meshgrid(
                 np.linspace(vlng.min() + 1e-7, vlng.max() - 1e-7, 5),

@@ -67,11 +67,16 @@ def test_golden_exact_pip(houat_loops=None):
 
 
 def test_segments_intersect_rect():
-    ring = SQUARE
-    assert pip.segments_intersect_rect(ring, 3.5, 5.0, 1.0, 2.0)  # crosses right edge
-    assert not pip.segments_intersect_rect(ring, 1.0, 3.0, 1.0, 3.0)  # fully inside
-    assert not pip.segments_intersect_rect(ring, 10.0, 12.0, 1.0, 2.0)  # far away
-    assert pip.segments_intersect_rect(ring, -1.0, 5.0, -1.0, 5.0)  # ring inside rect: edges within
+    # crosses the right edge; fully inside; far away; ring inside the
+    # rect (its edges lie within)
+    got = pip.segments_intersect_rects(
+        SQUARE,
+        np.array([3.5, 1.0, 10.0, -1.0]),
+        np.array([5.0, 3.0, 12.0, 5.0]),
+        np.array([1.0, 1.0, 1.0, -1.0]),
+        np.array([2.0, 3.0, 2.0, 5.0]),
+    )
+    assert got.tolist() == [True, False, False, True]
 
 
 def test_chunked_ray_cast_matches_one_block(monkeypatch):

@@ -202,6 +202,32 @@ def test_build_rejects_level_above_28(spark, houat_loops):
         )
 
 
+def test_cover_guard_stats_shares_build_errors(spark, houat_loops):
+    """cover_guard_stats runs the build's cover kernel, so it refuses
+    what the build refuses instead of reporting a cover the index would
+    never hold: an antimeridian-crossing ring and a level above 28."""
+    from insideout_spark.geo.cover import CoverParams
+    from insideout_spark.plans.index_build import cover_guard_stats, features_df
+
+    ring = [[179.0, -17.0], [-179.5, -17.0], [-179.5, -18.0], [179.0, -18.0], [179.0, -17.0]]
+    fiji_like = features_df(
+        spark, [{"feature_id": 0, "loop_pos": 0, "ring": ring, "properties": {}}]
+    )
+    with pytest.raises(Exception, match="antimeridian|lng extent"):
+        cover_guard_stats(fiji_like, CoverParams(4, 8, 16), CoverParams(4, 8, 16)).collect()
+    with pytest.raises(ValueError, match="<= 28"):
+        cover_guard_stats(
+            features_df(spark, houat_loops), CoverParams(10, 29, 24), CoverParams(10, 15, 16)
+        )
+
+
+def test_fused_refuses_unbroadcast_edges(spark, houat_index, golden_points_df):
+    """The fused stab broadcasts every ring, so asking it to keep the
+    edges off the broadcast is an error, not a silent broadcast."""
+    with pytest.raises(ValueError, match="broadcast_edges"):
+        pip_join(golden_points_df, houat_index, strategy="fused", broadcast_edges=False)
+
+
 def test_typed_properties_roundtrip(spark, tmp_path):
     """Typed property fidelity (reference tools.go:253-274:
     bool/int/float64/string/nil survive): values keep their JSON types

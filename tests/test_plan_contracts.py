@@ -199,7 +199,7 @@ def test_bpe_token_counts_codegen_topk(spark):
     merges = webtext.bpe_train({"alpha": 3, "beta": 2, "gamma": 1}, n_merges=6)
     p = _plan(webtext.bpe_token_counts(_docs(spark), merges, k=10))
     assert "TakeOrderedAndProject" in p
-    for py in ("ArrowEval", "BatchEvalPython", "InPandas"):
+    for py in ("ArrowEval", "BatchEvalPython", "InPandas", "MapInArrow"):
         assert py not in p
     assert p.count("Exchange") <= 2
 
@@ -238,7 +238,7 @@ def test_chunk_windows_zero_shuffle_no_python(spark):
 
     p = _plan(webtext.chunk_windows(_docs(spark)))
     assert "Exchange" not in p
-    for py in ("ArrowEval", "BatchEvalPython", "MapInPandas"):
+    for py in ("ArrowEval", "BatchEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in p
 
 
@@ -262,11 +262,11 @@ def test_normalize_text_zero_shuffle(spark):
 
     p = _plan(webtext.normalize_text(_docs(spark)))
     assert "Exchange" not in p
-    for py in ("ArrowEval", "BatchEvalPython", "InPandas"):
+    for py in ("ArrowEval", "BatchEvalPython", "InPandas", "MapInArrow"):
         assert py not in p
 
 
-_PY_STAGES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+_PY_STAGES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
 
 
 def _text_pages(spark):
@@ -299,8 +299,8 @@ def test_pip_join_default_one_python_stage(spark, houat_index):
     from insideout_spark.sources.pages import extract_points
 
     p = _plan(pip_join(extract_points(_text_pages(spark)), houat_index))
+    assert sum(p.count(py) for py in _PY_STAGES) == 1
     assert p.count("MapInPandas") == 1
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_tile_count_stream_no_python(spark):
@@ -331,6 +331,7 @@ def test_default_geocode_op_is_one_stab_pass_one_job(spark, houat_index, jobs_st
     op = pip_join(extract_points(pages), houat_index, include_properties=False)
     assert op.columns[-1] == "admin_level"
     p = _plan(op)
+    assert sum(p.count(py) for py in _PY_STAGES) == 1
     assert p.count("MapInPandas") == 1
     for banned in ("BroadcastExchange", "Join"):
         assert banned not in p

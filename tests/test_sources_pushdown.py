@@ -66,28 +66,27 @@ def test_geojsonl_distributed_parse_matches_list_path(spark, houat_loops, houat_
 
 
 def test_auto_params_df(spark, houat_loops):
-    from insideout_spark.plans.index_build import _auto_params_df, build_index, features_df
-    from insideout_spark.geo.cover import auto_cover_params
+    """One auto-params path: a row list and the same rows as a features
+    DataFrame get the same cover params — an even loop count (the
+    median averages the two middle diagonals, 0.9 and 1.05 deg here;
+    the upper one alone picks a level one coarser), the houat fixture,
+    and an empty layer, which gets the reference test coverers'
+    defaults."""
+    from insideout_spark.geo.cover import DEFAULT_EXTERIOR, DEFAULT_INTERIOR
+    from insideout_spark.plans.index_build import build_index, features_df
 
-    feats = features_df(spark, houat_loops)
-    ip_df, ep_df = _auto_params_df(feats)
-    ip, ep = auto_cover_params(houat_loops)
-    assert ip_df.min_level == ip.min_level
-    assert ep_df.min_level == ep.min_level
-
-    # an even loop count: the median averages the two middle diagonals
-    # (0.9 and 1.05 deg here; the upper one alone picks a level one
-    # coarser), so the list and DataFrame inputs build the same index
     def rect(fid, x0, dx, dy):
         ring = [[x0, 47.0], [x0 + dx, 47.0], [x0 + dx, 47.0 + dy], [x0, 47.0 + dy], [x0, 47.0]]
         return {"feature_id": fid, "loop_pos": 0, "ring": ring, "properties": {}}
 
-    rows = [rect(1, 1.0, 0.54, 0.72), rect(2, 3.0, 0.63, 0.84)]
-    assert auto_cover_params(rows) == _auto_params_df(features_df(spark, rows))
     keys = ("interior_params", "exterior_params", "min_cover_level", "max_cover_level")
-    a = build_index(spark, rows).manifest
-    b = build_index(spark, features_df(spark, rows)).manifest
-    assert {k: a[k] for k in keys} == {k: b[k] for k in keys}
+    for rows in ([rect(1, 1.0, 0.54, 0.72), rect(2, 3.0, 0.63, 0.84)], houat_loops, []):
+        a = build_index(spark, rows).manifest
+        b = build_index(spark, features_df(spark, rows)).manifest
+        assert {k: a[k] for k in keys} == {k: b[k] for k in keys}
+    assert (a["interior_params"], a["exterior_params"]) == (
+        list(DEFAULT_INTERIOR), list(DEFAULT_EXTERIOR)
+    )
 
 
 def test_geocode_pipeline_end_to_end(spark, houat_index):

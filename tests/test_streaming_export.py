@@ -1,11 +1,10 @@
-"""Streaming stab join (availableNow) + GeoJSON export sink + h3compat."""
+"""Streaming stab join (availableNow) + GeoJSON export sink."""
 
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from insideout_spark.geo import h3compat
 from insideout_spark.plans.export import results_to_geojson, write_results
 from insideout_spark.plans.pip_join import pip_join
 from insideout_spark.sources import pages as src_pages
@@ -57,20 +56,6 @@ def test_write_results(spark, houat_index, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == res.count()
     assert dict(back.dtypes)["properties"] == "string"  # JSON-flattened
-
-
-def test_h3compat_fallback_grid():
-    import numpy as np
-
-    assert not h3compat.HAS_H3  # container has no h3
-    cells = h3compat.latlng_to_cell(np.array([47.0]), np.array([2.0]), 7)
-    assert h3compat.cell_to_parent(cells, 3)[0] == h3compat.latlng_to_cell(
-        np.array([47.0]), np.array([2.0]), 3
-    )[0]
-    disk = h3compat.grid_disk(int(cells[0]), 1)
-    assert int(cells[0]) in disk and len(disk) == 9
-    ring = h3compat.cell_to_boundary(int(cells[0]))
-    assert len(ring) == 5 and ring[0] == ring[-1]
 
 
 def test_get_feature(spark, houat_index):

@@ -26,6 +26,18 @@ def _jaccard(a: set, b: set) -> float:
     return len(a & b) / len(a | b)
 
 
+def _scalar_token_hash(t: str) -> int:
+    """Per-token reference for the SimHash token hash: a wrapping
+    base-257 codepoint fold, then splitmix64."""
+    from insideout_spark.sources.pages import _splitmix64
+
+    h = np.uint64(0)
+    with np.errstate(over="ignore"):  # the fold wraps mod 2**64
+        for ch in t:
+            h = h * np.uint64(257) + np.uint64(ord(ch))
+    return int(_splitmix64(np.array([h], dtype=np.uint64))[0])
+
+
 @pytest.fixture(scope="module")
 def dup_docs(spark):
     """Corpus with planted near-duplicates."""
@@ -286,12 +298,6 @@ def test_multimodal_plumbing(spark, dup_docs):
     assert all(max(r["target_w"], r["target_h"]) <= 101 for r in rz)
 
 
-def test_real_codec_stub_raises(spark, dup_docs):
-    media = synth_media(dup_docs.limit(2))
-    with pytest.raises(Exception):  # NotImplementedError inside the UDF
-        extract_media_features(media, use_real_codec=True).collect()
-
-
 def test_ivf_ann_recall(spark, embeddings_df):
     """IVF ANN reaches >=60% recall@10 vs brute force while scanning only
     n_probe/n_lists of the corpus."""
@@ -357,15 +363,7 @@ def test_simhash_batch_boundaries(spark):
     assert got[2] != got[4]
 
     # scalar reference for doc 2
-    from insideout_spark.sources.pages import _splitmix64
-
-    def tok_hash(t):
-        h = np.uint64(0)
-        for ch in t:
-            h = h * np.uint64(257) + np.uint64(ord(ch))
-        return int(_splitmix64(np.array([h], dtype=np.uint64))[0])
-
-    hs = [tok_hash(t) for t in "alpha beta gamma".split()]
+    hs = [_scalar_token_hash(t) for t in "alpha beta gamma".split()]
     v = np.zeros(64, dtype=np.int64)
     for h in hs:
         for b in range(64):
@@ -533,7 +531,6 @@ def test_simhash_adversarial_long_token_bounded_memory(spark):
     bounds the transient to ~64 MB; the hash stays EXACT — verified
     against a scalar per-token recomputation."""
     from insideout_spark.plans.webtext import _token_hashes_u64
-    from insideout_spark.sources.pages import _splitmix64
 
     rng = np.random.default_rng(3)
     letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
@@ -541,14 +538,8 @@ def test_simhash_adversarial_long_token_bounded_memory(spark):
     toks[1234] = "z" * 100_000  # the adversarial token
     got = _token_hashes_u64(toks)
 
-    def scalar(t):
-        h = np.uint64(0)
-        for ch in t:
-            h = h * np.uint64(257) + np.uint64(ord(ch))
-        return int(_splitmix64(np.array([h], dtype=np.uint64))[0])
-
     for i in (0, 1234, 9999, 17):
-        assert int(got[i]) == scalar(toks[i]), i
+        assert int(got[i]) == _scalar_token_hash(toks[i]), i
     # end-to-end through the operator: a doc containing the long token
     docs = spark.createDataFrame(
         [(0, " ".join(toks[:50])), (1, "short doc " + "z" * 100_000)],
@@ -556,6 +547,40 @@ def test_simhash_adversarial_long_token_bounded_memory(spark):
     )
     rows = webtext.simhash64(docs).collect()
     assert len(rows) == 2
+
+
+def test_token_hash_chunks_under_tiny_budget(monkeypatch):
+    """A budget of a few dozen codepoint-matrix elements cuts the
+    length-sorted tokens into many chunks, one of them a single token
+    longer than the whole budget. The chunk bounds are those of the
+    per-token greedy walk (grow a chunk while (size) x (its longest
+    token) fits), and every hash equals the scalar fold."""
+    budget = 40
+    monkeypatch.setattr(webtext, "_SIMHASH_MATRIX_BUDGET", budget)
+    rng = np.random.default_rng(8)
+    toks = ["".join(rng.choice(list("abcdxyz"), int(k))) for k in rng.integers(1, 12, 200)]
+    toks += ["", "q" * (budget + 7), "é€"]
+    chunks = []
+    real = webtext._poly_hash_chunk
+
+    def spy(chunk):
+        chunks.append(len(chunk))
+        return real(chunk)
+
+    monkeypatch.setattr(webtext, "_poly_hash_chunk", spy)
+    got = webtext._token_hashes_u64(toks)
+
+    lens = sorted(max(len(t), 1) for t in toks)
+    want, start = [], 0
+    while start < len(lens):
+        end = start + 1
+        while end < len(lens) and (end + 1 - start) * lens[end] <= budget:
+            end += 1
+        want.append(end - start)
+        start = end
+    assert chunks == want and len(chunks) > 20 and chunks[-1] == 1
+
+    assert [int(h) for h in got] == [_scalar_token_hash(t) for t in toks]
 
 
 def test_embedding_near_dup_pairs(spark):

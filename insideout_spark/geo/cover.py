@@ -105,11 +105,12 @@ def _shrink_interior(cells, max_cells):
     return [np.uint64(c) for c in arr[order][:max_cells]]
 
 
-def _ring_cap(ring):
+def _ring_cap(lng, lat):
     """Conservative spherical cap (center xyz, max angular radius) of a
-    ring — used as a level-independent quick reject that also works for
-    polar / antimeridian cells where a lat/lng rect is meaningless."""
-    x, y, z = s2.latlng_to_xyz(ring[:, 1], ring[:, 0])
+    ring's vertices — used as a level-independent quick reject that also
+    works for polar / antimeridian cells where a lat/lng rect is
+    meaningless."""
+    x, y, z = s2.latlng_to_xyz(lat, lng)
     cx, cy, cz = x.mean(), y.mean(), z.mean()
     n = np.sqrt(cx * cx + cy * cy + cz * cz)
     cx, cy, cz = cx / n, cy / n, cz / n
@@ -208,30 +209,29 @@ def cover_rings(rings, params: CoverParams, interior: bool):
     cells across every ring (at shallow levels thousands of rings share
     a handful of cells), and the fused _cells_geo pass computes
     face/i/j once — together ~8x faster per ring than the round-1
-    per-ring BFS at communes scale. Only the exact ring tests
-    (edge-vs-rect, point-in-ring) group per ring, and only at classify
-    levels over surviving candidates. Returns a list of normalized
-    uint64 cell-id lists, one per input ring."""
+    per-ring BFS at communes scale. The exact ring tests (edge-vs-rect,
+    then point-in-ring on the rest) run only at classify levels, each
+    in one pass over all surviving (cell, ring) pairs and one ring
+    store of the batch. Returns a list of normalized uint64 cell-id
+    lists, one per input ring."""
     R = len(rings)
     results = [[] for _ in range(R)]
-    norm = [pip.normalize_ring(np.asarray(r, dtype=np.float64)) for r in rings]
-    ok = [i for i in range(R) if len(norm[i]) >= 3]
-    if not ok:
+    store = pip.ring_store(rings)
+    x, y, start = store
+    ok = np.flatnonzero(np.diff(start))
+    if not len(ok):
         return results
     rcx = np.zeros(R)
     rcy = np.zeros(R)
     rcz = np.zeros(R)
     rrad = np.zeros(R)
-    bx0 = np.zeros(R)
-    bx1 = np.zeros(R)
-    by0 = np.zeros(R)
-    by1 = np.zeros(R)
     for i in ok:
-        ring = norm[i]
-        (rcx[i], rcy[i], rcz[i]), rrad[i] = _ring_cap(ring)
-        bx0[i], bx1[i] = float(ring[:, 0].min()), float(ring[:, 0].max())
-        by0[i], by1[i] = float(ring[:, 1].min()), float(ring[:, 1].max())
-    alive_r = np.repeat(np.array(ok, dtype=np.int64), 6)
+        v = slice(start[i], start[i + 1])
+        (rcx[i], rcy[i], rcz[i]), rrad[i] = _ring_cap(x[v], y[v])
+    bx0, bx1, by0, by1 = (np.zeros(R) for _ in range(4))
+    bx0[ok], bx1[ok] = np.minimum.reduceat(x, start[ok]), np.maximum.reduceat(x, start[ok])
+    by0[ok], by1[ok] = np.minimum.reduceat(y, start[ok]), np.maximum.reduceat(y, start[ok])
+    alive_r = np.repeat(ok, 6)
     alive_c = np.tile(np.array(_FACE_CELLS, dtype=np.uint64), len(ok))
     out_r: list = []
     out_c: list = []
@@ -263,28 +263,19 @@ def cover_rings(rings, params: CoverParams, interior: bool):
             )
             code[disjoint] = OUTSIDE
             todo = np.flatnonzero(cm & ~disjoint)
-            if len(todo):
-                order = todo[np.argsort(alive_r[todo], kind="stable")]
-                runs = np.flatnonzero(
-                    np.r_[True, alive_r[order][1:] != alive_r[order][:-1]]
-                )
-                for s_i, start in enumerate(runs):
-                    end = runs[s_i + 1] if s_i + 1 < len(runs) else len(order)
-                    sel = order[start:end]
-                    ring = norm[int(alive_r[sel[0]])]
-                    sx0, sx1 = crx0[sel], crx1[sel]
-                    sy0, sy1 = cry0[sel], cry1[sel]
-                    edge_hit = pip.segments_intersect_rects(ring, sx0, sx1, sy0, sy1)
-                    vert_in = pip.vertices_in_rects(ring, sx0, sx1, sy0, sy1)
-                    plain = ~edge_hit & ~vert_in
-                    if np.any(plain):
-                        center_in = pip.points_in_ring(
-                            (sx0[plain] + sx1[plain]) * 0.5,
-                            (sy0[plain] + sy1[plain]) * 0.5,
-                            ring,
-                        )
-                        code[sel[plain]] = np.where(center_in, INSIDE, OUTSIDE)
-                    # edge_hit or vert_in stay BOUNDARY
+            # a cell that an edge of its ring meets stays BOUNDARY; the
+            # rest lie wholly inside or outside, as their centre does
+            cross = pip.rings_cross_rects(
+                crx0[todo], crx1[todo], cry0[todo], cry1[todo], alive_r[todo], store
+            )
+            plain = todo[~cross]
+            center_in = pip.points_in_rings(
+                (crx0[plain] + crx1[plain]) * 0.5,
+                (cry0[plain] + cry1[plain]) * 0.5,
+                alive_r[plain],
+                store,
+            )
+            code[plain] = np.where(center_in, INSIDE, OUTSIDE)
         ins = code == INSIDE
         if np.any(ins):
             out_r.append(alive_r[ins])

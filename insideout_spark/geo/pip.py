@@ -14,10 +14,10 @@ index.go:57-81). Semantics:
   testing, matching reference tools.go:145-148.
 
 Everything is vectorized over numpy arrays: `points_in_ring` broadcasts
-N points against one ring's M edges; `points_in_rings` tests N points
-each against its own ring of a flat `ring_store`, in one pass over all
-(point, edge) pairs. Both work in blocks that keep every temporary under
-RAY_CAST_MAX_ELEMS elements.
+N points against one ring's M edges; `points_in_rings` tests N points,
+and `rings_cross_rects` N rects, each against its own ring of a flat
+`ring_store`, in one pass over all (pair, edge) rows. All work in blocks
+that keep every temporary under RAY_CAST_MAX_ELEMS elements.
 """
 
 from __future__ import annotations
@@ -99,114 +99,113 @@ def _edge_terms(px, py, x1, y1, x2, y2):
 
 
 def ring_store(rings):
-    """Flat vertex store of many rings for `points_in_rings`: (x, y,
-    start), ring r's vertices (closing duplicate dropped) at
-    [start[r], start[r+1]). A None ring, or one of fewer than 3
-    vertices, stores no vertex and contains nothing."""
-    none = np.empty((0, 2))
-    parts = []
-    for r in rings:
-        r = none if r is None else normalize_ring(r)
-        parts.append(r if len(r) >= 3 else none)
-    start = np.zeros(len(parts) + 1, dtype=np.int64)
-    np.cumsum([len(p) for p in parts], out=start[1:])
-    v = np.concatenate(parts) if parts else none
-    return np.ascontiguousarray(v[:, 0]), np.ascontiguousarray(v[:, 1]), start
+    """Flat vertex store of many rings for `points_in_rings` and
+    `rings_cross_rects`: `flat_ring_store` over a list of (M, 2)
+    [lng, lat] rings; a None ring stores no vertex."""
+    parts = [np.asarray(r, dtype=np.float64)[:, :2] for r in rings if r is not None and len(r)]
+    lens = [0 if r is None else len(r) for r in rings]
+    return flat_ring_store(np.concatenate(parts) if parts else np.empty((0, 2)), lens)
+
+
+def flat_ring_store(xy, lens):
+    """Flat vertex store of R rings given as (V, 2) [lng, lat] vertices,
+    ring r the next lens[r] rows: (x, y, start), ring r's vertices at
+    [start[r], start[r+1]). Its closing duplicate is dropped (reference
+    tools.go:145-148); a ring left with fewer than 3 vertices stores
+    none and contains nothing."""
+    lens = np.asarray(lens, dtype=np.int64)
+    beg = np.cumsum(lens) - lens
+    closed = np.zeros(len(lens), dtype=bool)
+    two = np.flatnonzero(lens >= 2)
+    closed[two] = (xy[beg[two]] == xy[beg[two] + lens[two] - 1]).all(axis=1)
+    n = lens - closed
+    n[n < 3] = 0
+    ring = np.repeat(np.arange(len(lens)), lens)
+    keep = np.arange(len(ring)) - beg[ring] < n[ring]
+    start = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(n, out=start[1:])
+    return np.ascontiguousarray(xy[keep, 0]), np.ascontiguousarray(xy[keep, 1]), start
+
+
+def _ring_pairs(ring_of, store):
+    """The one (pair, edge) expansion over a ring store: pair k against
+    every edge of ring ring_of[k], the closing edge included. Yields
+    (slice of pairs, pair of each row relative to the slice, x1, y1,
+    x2, y2) per block of pairs whose edge total stays under
+    RAY_CAST_MAX_ELEMS (a pair whose ring alone exceeds it gets a block
+    of its own)."""
+    x, y, start = store
+    ring_of = np.asarray(ring_of, dtype=np.int64)
+    s = start[ring_of]
+    n = start[ring_of + 1] - s
+    cum = np.cumsum(n)
+    i = 0
+    while i < len(n):
+        base = cum[i - 1] if i else 0
+        j = max(i + 1, int(np.searchsorted(cum, base + RAY_CAST_MAX_ELEMS, side="right")))
+        bs, bn = s[i:j], n[i:j]
+        k = np.repeat(np.arange(j - i), bn)
+        e = np.arange(len(k)) - np.repeat(np.cumsum(bn) - bn, bn)  # edge in ring
+        i1 = bs[k] + e
+        i2 = np.where(e + 1 == bn[k], bs[k], i1 + 1)  # the last edge closes
+        yield slice(i, j), k, x[i1], y[i1], x[i2], y[i2]
+        i = j
 
 
 def points_in_rings(lng, lat, ring_of, store):
     """Open-boundary even-odd containment of N points, point k in ring
-    ring_of[k] of a `ring_store`. The verdicts of `points_in_ring`, in
+    ring_of[k] of a ring store. The verdicts of `points_in_ring`, in
     one vectorized pass over all (point, edge) pairs instead of one call
-    per ring. Points are cut into blocks whose edge total stays under
-    RAY_CAST_MAX_ELEMS (a point whose ring alone exceeds it gets a block
-    of its own)."""
-    x, y, start = store
+    per ring."""
     lng = np.asarray(lng, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    ring_of = np.asarray(ring_of, dtype=np.int64)
-    s = start[ring_of]
-    n = start[ring_of + 1] - s
     out = np.zeros(len(lng), dtype=bool)
-    cum = np.cumsum(n)
-    i = 0
-    while i < len(lng):
-        base = cum[i - 1] if i else 0
-        j = max(i + 1, int(np.searchsorted(cum, base + RAY_CAST_MAX_ELEMS, side="right")))
-        out[i:j] = _points_in_rings_block(lng[i:j], lat[i:j], s[i:j], n[i:j], x, y)
-        i = j
+    for sl, k, x1, y1, x2, y2 in _ring_pairs(ring_of, store):
+        m = sl.stop - sl.start
+        crosses, on_edge = _edge_terms(lng[sl][k], lat[sl][k], x1, y1, x2, y2)
+        crossings = np.bincount(k, weights=crosses, minlength=m)
+        on_boundary = np.bincount(k, weights=on_edge, minlength=m) > 0
+        out[sl] = (crossings % 2 == 1) & ~on_boundary
     return out
 
 
-def _points_in_rings_block(lng, lat, s, n, x, y):
-    """points_in_rings on one block: point k against the n[k] edges of
-    the ring whose vertices start at s[k]."""
-    k = np.repeat(np.arange(len(n)), n)  # the point of each pair
-    e = np.arange(len(k)) - np.repeat(np.cumsum(n) - n, n)  # edge in ring
-    i1 = s[k] + e
-    i2 = np.where(e + 1 == n[k], s[k], i1 + 1)  # the last edge closes
-    crosses, on_edge = _edge_terms(lng[k], lat[k], x[i1], y[i1], x[i2], y[i2])
-    crossings = np.bincount(k, weights=crosses, minlength=len(n))
-    on_boundary = np.bincount(k, weights=on_edge, minlength=len(n)) > 0
-    return (crossings % 2 == 1) & ~on_boundary
+def rings_cross_rects(rx0, rx1, ry0, ry1, ring_of, store):
+    """True where an edge of ring ring_of[k] of a ring store meets rect
+    k, [rx0[k], rx1[k]] x [ry0[k], ry1[k]] (closed): an endpoint inside
+    the rect, or a proper or touching crossing of one of its four
+    sides. A ring lying wholly inside its rect crosses it; a rect wholly
+    inside its ring does not. The coverer's BOUNDARY test."""
+    rx0, rx1, ry0, ry1 = (np.asarray(a, dtype=np.float64) for a in (rx0, rx1, ry0, ry1))
+    out = np.zeros(len(rx0), dtype=bool)
+    for sl, k, x1, y1, x2, y2 in _ring_pairs(ring_of, store):
+        a0, a1, b0, b1 = rx0[sl][k], rx1[sl][k], ry0[sl][k], ry1[sl][k]
+        # quick reject per (rect, edge) on the edge's bbox
+        cand = np.flatnonzero(
+            ~(
+                (np.maximum(x1, x2) < a0)
+                | (np.minimum(x1, x2) > a1)
+                | (np.maximum(y1, y2) < b0)
+                | (np.minimum(y1, y2) > b1)
+            )
+        )
+        k, x1, y1, x2, y2 = k[cand], x1[cand], y1[cand], x2[cand], y2[cand]
+        a0, a1, b0, b1 = a0[cand], a1[cand], b0[cand], b1[cand]
+        # endpoint inside the rect
+        hit = ((x1 >= a0) & (x1 <= a1) & (y1 >= b0) & (y1 <= b1)) | (
+            (x2 >= a0) & (x2 <= a1) & (y2 >= b0) & (y2 <= b1)
+        )
+        # segment-segment tests against the 4 rect sides
+        sides = ((a0, b0, a1, b0), (a1, b0, a1, b1), (a1, b1, a0, b1), (a0, b1, a0, b0))
+        for ax0, ay0, ax1, ay1 in sides:
+            d1 = (x2 - x1) * (ay0 - y1) - (y2 - y1) * (ax0 - x1)
+            d2 = (x2 - x1) * (ay1 - y1) - (y2 - y1) * (ax1 - x1)
+            d3 = (ax1 - ax0) * (y1 - ay0) - (ay1 - ay0) * (x1 - ax0)
+            d4 = (ax1 - ax0) * (y2 - ay0) - (ay1 - ay0) * (x2 - ax0)
+            hit |= (d1 * d2 <= 0) & (d3 * d4 <= 0)
+        out[sl] = np.bincount(k, weights=hit, minlength=sl.stop - sl.start) > 0
+    return out
 
 
 def ring_contains_point(ring, lng, lat):
     """Scalar convenience wrapper."""
     return bool(points_in_ring(np.array([lng]), np.array([lat]), ring)[0])
-
-
-def segments_intersect_rects(ring, rx0, rx1, ry0, ry1):
-    """Vectorized over N rects: True where any ring edge intersects the
-    rect [rx0,rx1]x[ry0,ry1]. rx0.. are (N,) arrays. Used by the
-    coverer's batched cell classification."""
-    ring = normalize_ring(ring)
-    x1 = ring[:, 0][None, :]  # (1,M)
-    y1 = ring[:, 1][None, :]
-    x2 = np.roll(ring[:, 0], -1)[None, :]
-    y2 = np.roll(ring[:, 1], -1)[None, :]
-    rx0 = np.asarray(rx0, dtype=np.float64)[:, None]  # (N,1)
-    rx1 = np.asarray(rx1, dtype=np.float64)[:, None]
-    ry0 = np.asarray(ry0, dtype=np.float64)[:, None]
-    ry1 = np.asarray(ry1, dtype=np.float64)[:, None]
-    # quick reject per (rect, edge)
-    cand = ~(
-        (np.maximum(x1, x2) < rx0)
-        | (np.minimum(x1, x2) > rx1)
-        | (np.maximum(y1, y2) < ry0)
-        | (np.minimum(y1, y2) > ry1)
-    )  # (N,M)
-    # endpoint inside rect
-    inside1 = (x1 >= rx0) & (x1 <= rx1) & (y1 >= ry0) & (y1 <= ry1)
-    inside2 = (x2 >= rx0) & (x2 <= rx1) & (y2 >= ry0) & (y2 <= ry1)
-    hit = np.any(cand & (inside1 | inside2), axis=1)
-    todo = np.any(cand, axis=1) & ~hit
-    if not np.any(todo):
-        return hit
-    # proper segment-segment tests against the 4 rect edges
-    corners = (
-        (rx0, ry0, rx1, ry0),
-        (rx1, ry0, rx1, ry1),
-        (rx1, ry1, rx0, ry1),
-        (rx0, ry1, rx0, ry0),
-    )
-    for ax0, ay0, ax1, ay1 in corners:
-        d1 = (x2 - x1) * (ay0 - y1) - (y2 - y1) * (ax0 - x1)
-        d2 = (x2 - x1) * (ay1 - y1) - (y2 - y1) * (ax1 - x1)
-        d3 = (ax1 - ax0) * (y1 - ay0) - (ay1 - ay0) * (x1 - ax0)
-        d4 = (ax1 - ax0) * (y2 - ay0) - (ay1 - ay0) * (x2 - ax0)
-        hit |= np.any(cand & (d1 * d2 <= 0) & (d3 * d4 <= 0), axis=1)
-    return hit
-
-
-def vertices_in_rects(ring, rx0, rx1, ry0, ry1):
-    """Vectorized over N rects: True where any ring vertex lies in the
-    rect."""
-    ring = normalize_ring(ring)
-    vx = ring[:, 0][None, :]
-    vy = ring[:, 1][None, :]
-    rx0 = np.asarray(rx0, dtype=np.float64)[:, None]
-    rx1 = np.asarray(rx1, dtype=np.float64)[:, None]
-    ry0 = np.asarray(ry0, dtype=np.float64)[:, None]
-    ry1 = np.asarray(ry1, dtype=np.float64)[:, None]
-    return np.any((vx >= rx0) & (vx <= rx1) & (vy >= ry0) & (vy <= ry1), axis=1)

@@ -91,24 +91,6 @@ class IndexBundle:
     _edges_df: DataFrame | None = None
     _props_df: DataFrame | None = None
 
-    def _loops(self) -> dict:
-        """{(fid, pos): ((M, 2) vertex ndarray, admin_level)} hydrated
-        through Arrow — the reference's startup feature cache
-        (server/server.go:73-108, 118-156). One columnar transfer, then
-        the shared ring decode: no per-vertex Row objects. A NULL
-        admin_level reads as NaN."""
-        import numpy as np
-        import pyarrow.compute as pc
-
-        t = self.features.select("feature_id", "loop_pos", "ring", "admin_level").toArrow()
-        parts = _arrow_rings(t.column("ring"))
-        fid = t.column("feature_id").to_numpy()
-        pos = t.column("loop_pos").to_numpy()
-        level = pc.fill_null(t.column("admin_level"), np.nan).to_numpy()
-        return {
-            (int(f), int(p)): (r, lv) for f, p, r, lv in zip(fid, pos, parts, level)
-        }
-
     def props(self) -> DataFrame:
         """The per-loop payload a stab result joins (feature_id,
         loop_pos, properties, properties_json, admin_level) — no rings:
@@ -136,7 +118,7 @@ class IndexBundle:
                 from ..geo import pip as geo_pip
 
                 for b in batches:
-                    x, y, start = geo_pip.ring_store(_arrow_rings(b.column("ring")))
+                    x, y, start = geo_pip.flat_ring_store(*_arrow_xy(b.column("ring")))
                     n = np.diff(start)
                     loop = np.repeat(np.arange(len(n)), n)
                     # successor vertex: the next one, the ring's first
@@ -179,7 +161,7 @@ class IndexBundle:
         search (the bbolt B+tree / insidetree analog — reference
         storage/bbolt/storage.go:246-269 range scan, index/treeindex
         trie) as parallel numpy arrays, plus the flat ring store
-        (geo.pip.ring_store). Hydrated once per index through Arrow
+        (geo.pip.flat_ring_store). Hydrated once per index through Arrow
         (column arrays, not Row objects).
 
         Each posting carries a dense loop ordinal instead of its
@@ -192,6 +174,7 @@ class IndexBundle:
         P1 projection needs without a props join."""
         if self._stab_bc is None:
             import numpy as np
+            import pyarrow.compute as pc
 
             from ..geo import pip as geo_pip
 
@@ -202,8 +185,25 @@ class IndexBundle:
             loops, loop = np.unique(
                 np.column_stack([fid, pos]), axis=0, return_inverse=True
             )
-            loops_by_id = self._loops()
-            per_loop = [loops_by_id.get((int(f), int(p)), (None, np.nan)) for f, p in loops]
+            # each loop's features row (the last of a repeated key): one
+            # sorted search on packed (feature_id, loop_pos) keys; -1,
+            # a loop missing from `features`, picks the empty sentinel
+            # ring and NaN level appended below
+            f = self.features.select("feature_id", "loop_pos", "ring", "admin_level").toArrow()
+            fkey = _loop_key(f.column("feature_id").to_numpy(), f.column("loop_pos").to_numpy())
+            fo = np.argsort(fkey, kind="stable")
+            lkey = _loop_key(loops[:, 0], loops[:, 1])
+            i = np.searchsorted(fkey[fo], lkey, side="right") - 1
+            found = i >= 0
+            found[found] = fkey[fo[i[found]]] == lkey[found]
+            row = np.full(len(lkey), -1)
+            row[found] = fo[i[found]]
+            xy, lens = _arrow_xy(f.column("ring"))
+            n = np.r_[lens, 0][row]
+            first = np.r_[np.cumsum(lens) - lens, 0][row]
+            level = np.r_[pc.fill_null(f.column("admin_level"), np.nan).to_numpy(), np.nan]
+            # the loops' vertices, gathered in loop order
+            v = np.repeat(first - (np.cumsum(n) - n), n) + np.arange(n.sum())
             # sort in UNSIGNED cell-id order (the searchsorted key space)
             o = np.argsort(cells.view(np.uint64), kind="stable")
             payload = (
@@ -212,8 +212,8 @@ class IndexBundle:
                 loop[o].astype(np.int32),
                 loops[:, 0].astype(np.int32),
                 loops[:, 1].astype(np.int32),
-                np.array([lv for _, lv in per_loop], dtype=np.float64),
-                geo_pip.ring_store([r for r, _ in per_loop]),
+                level[row],
+                geo_pip.flat_ring_store(xy[v], n),
                 int(self.manifest["min_cover_level"]),
                 int(self.manifest["max_cover_level"]),
             )
@@ -281,10 +281,11 @@ def features_df(spark: SparkSession, loop_rows) -> DataFrame:
     return spark.read.schema(FEATURES_SCHEMA).parquet(path)
 
 
-def _arrow_rings(col) -> list:
+def _arrow_xy(col):
     """The one decode of `features.ring`: an Arrow list<list<double>>
-    column (chunked or not) -> one (M, 2) float64 [lng, lat] array per
-    ring. Columnar flatten and split: no per-vertex Python objects."""
+    column (chunked or not) -> (flat (V, 2) float64 [lng, lat] vertices,
+    (R,) vertex count per ring). Columnar flatten: no per-vertex Python
+    objects."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -297,8 +298,15 @@ def _arrow_rings(col) -> list:
             pc.list_element(verts, 1).to_numpy(zero_copy_only=False),
         ]
     )
-    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    return np.split(xy, np.cumsum(lens)[:-1]) if len(lens) else []
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)
+    return xy, lens
+
+
+def _loop_key(fid, pos):
+    """(feature_id, loop_pos) int32 pairs -> one int64 key each."""
+    import numpy as np
+
+    return (fid.astype(np.int64) << 32) | (pos.astype(np.int64) & 0xFFFFFFFF)
 
 
 def _batch_covers(batch, ip, ep):
@@ -311,7 +319,8 @@ def _batch_covers(batch, ip, ep):
     fid = batch.column("feature_id").to_numpy()
     pos = batch.column("loop_pos").to_numpy()
     keep, rings = [], []
-    for k, ring in enumerate(_arrow_rings(batch.column("ring"))):
+    xy, lens = _arrow_xy(batch.column("ring"))
+    for k, ring in enumerate(np.split(xy, np.cumsum(lens)[:-1]) if len(lens) else []):
         if len(ring) < 4:  # loop-validity filter (reference tools.go:122-124)
             continue
         # antimeridian guard: the exact PIP is planar even-odd in

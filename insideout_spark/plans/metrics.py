@@ -194,45 +194,34 @@ def sessionize_native(
     )
 
 
-def sessionize_sql(
-    table: str = "events", gap_minutes: int = 30, strict: bool = True,
-    with_seq: bool = True,
-) -> str:
+def sessionize_sql(table: str = "events", gap_minutes: int = 30, with_seq: bool = True) -> str:
     """DuckDB oracle twin of `sessionize` AND (with with_seq=False) of
     `sessionize_native` — both use the same INCLUSIVE boundary (an
     event at exactly `gap_minutes` stays in-session; verified
-    empirically for session_window in tests/test_sessionize.py).
-    strict=False (>= opens a new session) is provided only for
-    exploring the alternative semantics; no shipped oracle uses it.
+    empirically for session_window in tests/test_sessionize.py); the
+    two differ only in whether the final SELECT returns session_seq.
     epoch_us == unix_micros for parquet TIMESTAMP microsecond
     precision."""
     gap_us = int(gap_minutes) * 60_000_000
-    cmp = ">" if strict else ">="
+    sessions = (
+        f"WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM {table}), "
+        "m AS (SELECT user_id, event_id, ts_us, "
+        "CASE WHEN lag(ts_us) OVER w IS NULL "
+        f"OR ts_us - lag(ts_us) OVER w > {gap_us} THEN 1 ELSE 0 END AS is_new "
+        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)), "
+        "s AS (SELECT user_id, ts_us, sum(is_new) OVER "
+        "(PARTITION BY user_id ORDER BY ts_us, event_id "
+        "ROWS UNBOUNDED PRECEDING) AS session_seq FROM m) "
+    )
     if not with_seq:
         return (
-            f"WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM {table}), "
-            "m AS (SELECT user_id, event_id, ts_us, "
-            "CASE WHEN lag(ts_us) OVER w IS NULL "
-            f"OR ts_us - lag(ts_us) OVER w {cmp} {gap_us} THEN 1 ELSE 0 END AS is_new "
-            "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)), "
-            "s AS (SELECT user_id, ts_us, sum(is_new) OVER "
-            "(PARTITION BY user_id ORDER BY ts_us, event_id "
-            "ROWS UNBOUNDED PRECEDING) AS session_seq FROM m) "
-            "SELECT user_id, count(*) AS n_events, "
+            sessions + "SELECT user_id, count(*) AS n_events, "
             "min(ts_us) AS start_us, max(ts_us) AS end_us, "
             "max(ts_us) - min(ts_us) AS duration_us "
             "FROM s GROUP BY user_id, session_seq"
         )
     return (
-        f"WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM {table}), "
-        "m AS (SELECT user_id, event_id, ts_us, "
-        "CASE WHEN lag(ts_us) OVER w IS NULL "
-        f"OR ts_us - lag(ts_us) OVER w {cmp} {gap_us} THEN 1 ELSE 0 END AS is_new "
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)), "
-        "s AS (SELECT user_id, ts_us, sum(is_new) OVER "
-        "(PARTITION BY user_id ORDER BY ts_us, event_id "
-        "ROWS UNBOUNDED PRECEDING) AS session_seq FROM m) "
-        "SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, "
+        sessions + "SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, "
         "count(*) AS n_events, min(ts_us) AS start_us, max(ts_us) AS end_us, "
         "max(ts_us) - min(ts_us) AS duration_us "
         "FROM s GROUP BY user_id, session_seq"

@@ -118,3 +118,29 @@ def test_interior_cover_cells_fully_inside(houat_covers):
             )
             inside = pip.points_in_ring(gl.ravel(), gt.ravel(), ring)
             assert inside.all(), f"interior cell {s2.token(c)} leaks outside"
+
+
+def test_twice_closed_rings_keep_covers():
+    """A ring whose closing vertex is repeated is covered through its
+    once-normalized vertices: the zero-area [a, b, a, a] keeps the
+    exterior cover of its two edges, [a, b, c, a, a] its triangle's."""
+    a = [-0.9311211361550037, 46.72689056716114]
+    b = [-0.9905394982333209, 46.77473652322525]
+    c = [-1.0616763836685643, 46.75732378286671]
+    ip, ep = cover.CoverParams(8, 14, 96), cover.CoverParams(8, 13, 48)
+    for ring, n_in, n_out in (([a, b, a, a], 0, 13), ([a, b, c, a, a], 35, 42)):
+        ring = np.array(ring)
+        assert len(cover.cover_rings([ring], ip, interior=True)[0]) == n_in
+        assert len(cover.cover_rings([ring], ep, interior=False)[0]) == n_out
+
+
+def test_cover_rings_under_tiny_budget(monkeypatch, houat_covers):
+    """A ray-cast budget that gives every (cell, ring) pair a block of
+    its own yields the covers of the default budget."""
+    loops, _ = houat_covers
+    rings = [np.array(r["ring"]) for r in loops]
+    sides = ((IP, True), (EP, False))
+    want = [cover.cover_rings(rings, p, interior=i) for p, i in sides]
+    monkeypatch.setattr(pip, "RAY_CAST_MAX_ELEMS", 8)
+    assert [cover.cover_rings(rings, p, interior=i) for p, i in sides] == want
+    assert any(want[0]) and all(want[1])

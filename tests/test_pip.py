@@ -69,14 +69,76 @@ def test_golden_exact_pip(houat_loops=None):
 def test_segments_intersect_rect():
     # crosses the right edge; fully inside; far away; ring inside the
     # rect (its edges lie within)
-    got = pip.segments_intersect_rects(
-        SQUARE,
-        np.array([3.5, 1.0, 10.0, -1.0]),
+    rx0 = np.array([3.5, 1.0, 10.0, -1.0])
+    got = pip.rings_cross_rects(
+        rx0,
         np.array([5.0, 3.0, 12.0, 5.0]),
         np.array([1.0, 1.0, 1.0, -1.0]),
         np.array([2.0, 3.0, 2.0, 5.0]),
+        np.zeros(len(rx0), dtype=np.int64),
+        pip.ring_store([SQUARE]),
     )
     assert got.tolist() == [True, False, False, True]
+
+
+def _scalar_cross(ring, r):
+    """rings_cross_rects for one (ring, rect) pair, one edge at a time."""
+    ring = None if ring is None else pip.normalize_ring(ring)
+    if ring is None or len(ring) < 3:
+        return False
+    x0, x1, y0, y1 = r
+    inside = lambda px, py: x0 <= px <= x1 and y0 <= py <= y1  # noqa: E731
+    sides = ((x0, y0, x1, y0), (x1, y0, x1, y1), (x1, y1, x0, y1), (x0, y1, x0, y0))
+    for (ax, ay), (bx, by) in zip(ring, np.roll(ring, -1, axis=0)):
+        if max(ax, bx) < x0 or min(ax, bx) > x1 or max(ay, by) < y0 or min(ay, by) > y1:
+            continue
+        if inside(ax, ay) or inside(bx, by):
+            return True
+        for cx, cy, dx, dy in sides:
+            d1 = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+            d2 = (bx - ax) * (dy - ay) - (by - ay) * (dx - ax)
+            d3 = (dx - cx) * (ay - cy) - (dy - cy) * (ax - cx)
+            d4 = (dx - cx) * (by - cy) - (dy - cy) * (bx - cx)
+            if d1 * d2 <= 0 and d3 * d4 <= 0:
+                return True
+    return False
+
+
+def test_rings_cross_rects_matches_scalar(monkeypatch):
+    """The pair kernel equals a per-(pair, edge) scalar loop: a ring
+    inside its rect crosses it, a rect inside its ring does not, a rect
+    touching only a vertex does, a None and a degenerate ring cross
+    nothing; under a budget that cuts many blocks, one of them a single
+    pair whose ring alone exceeds it."""
+    rng = np.random.default_rng(3)
+    ang = np.linspace(0.0, 2 * np.pi, 201)[:-1]
+    rings = [SQUARE, None, np.array([[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]])]
+    rings.append(np.column_stack([np.cos(ang), np.sin(ang)]))  # 200 vertices
+    for _ in range(30):
+        m = int(rng.integers(3, 40))
+        a = np.sort(rng.uniform(0.0, 2 * np.pi, m))
+        cx, cy = rng.uniform(-2.0, 2.0, 2)
+        rings.append(np.column_stack([cx + np.cos(a), cy + np.sin(a)]))
+    fixed = [
+        (0, (-1.0, 5.0, -1.0, 5.0)),  # ring inside its rect
+        (0, (1.0, 3.0, 1.0, 3.0)),  # rect inside its ring
+        (0, (4.0, 5.0, 4.0, 5.0)),  # touches only the vertex (4, 4)
+        (1, (-9.0, 9.0, -9.0, 9.0)),  # None ring
+        (2, (-9.0, 9.0, -9.0, 9.0)),  # degenerate ring
+        (3, (-0.1, 0.1, 0.9, 1.1)),  # crosses the 200-vertex ring
+    ]
+    ring_of = [k for k, _ in fixed] + list(rng.integers(0, len(rings), 400))
+    lo = rng.uniform(-3.0, 3.0, (2, 400))
+    wh = rng.uniform(0.0, 1.5, (2, 400))
+    rects = [r for _, r in fixed] + list(zip(lo[0], lo[0] + wh[0], lo[1], lo[1] + wh[1]))
+    want = [_scalar_cross(rings[k], r) for k, r in zip(ring_of, rects)]
+    assert want[:6] == [True, False, True, False, False, True]
+    assert 50 < sum(want) < 350
+    store = pip.ring_store(rings)
+    args = (*np.array(rects).T, ring_of, store)
+    assert pip.rings_cross_rects(*args).tolist() == want
+    monkeypatch.setattr(pip, "RAY_CAST_MAX_ELEMS", 50)
+    assert pip.rings_cross_rects(*args).tolist() == want
 
 
 def test_chunked_ray_cast_matches_one_block(monkeypatch):
